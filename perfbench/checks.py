@@ -53,7 +53,7 @@ class Gate:
                         "differs from extract_document")
 
 
-def committed_records(spark, snapshot_df, doc_ids) -> dict:
+def committed_records(snapshot_df, doc_ids) -> dict:
     """``doc_record`` of each committed row whose doc_id is in ``doc_ids``."""
     from pyspark.sql import functions as F
 

@@ -14,7 +14,6 @@ import time
 from collections import defaultdict
 
 from checks import doc_record
-from inputs import make_doc_id
 
 # (module, attribute) pairs that extract_document reaches its public
 # calls through, and the metric each one's inclusive busy time feeds
@@ -113,7 +112,3 @@ def control_pass(indices, seed: int, nproc: int) -> tuple:
         pool.map(_extract_status, docs, chunksize=16)
         wall = time.perf_counter() - t
     return wall, sum(_chars(spans) for spans in docs)
-
-
-def doc_ids(indices) -> list:
-    return [make_doc_id(i) for i in indices]

@@ -44,44 +44,12 @@ import spark_env  # noqa: E402
 
 SETUPS = 3  # setup_s is the median of this many set-ups in one run
 
-END_TO_END = {
-    "setup_s": "s",
-    "op_p50_s": "s",
-    "op_p90_s": "s",
-    "throughput_per_s": "1/s",
-}
 
-
-def _per_layer_units() -> dict:
-    from layers import TIMED_CALLS
-    from workloads import FAMILIES
-
-    units = {m: "s" for _, _, m in TIMED_CALLS}
-    units.update({
-        "functions.chars": "count", "functions.docs_per_s_1proc": "1/s",
-        "functions.retry_ratio": "ratio", "functions.gate_fail_ratio": "ratio",
-        "span_extract.noop_s": "s", "span_extract.tasks": "count",
-        "span_extract.task_skew": "ratio", "span_extract.executor_run_s": "s",
-        "span_extract.jvm_cpu_s": "s", "span_extract.gc_s": "s",
-        "control.docs_per_s": "1/s", "span_extract.framework_share": "ratio",
-        "extract.core_eff": "ratio", "extraction_job.commit_overhead_s": "s",
-        "extraction_job.jobs_per_wave": "count",
-        "extraction_job.stages_per_wave": "count",
-        "extraction_job.tasks_per_wave": "count",
-        "extraction_job.resume_noop_s": "s", "tables.input_append_s": "s",
-        "tables.read_latest_s": "s",
-    })
-    for fam in FAMILIES:
-        units.update({f"{fam}.wall_s": "s", f"{fam}.jobs": "count",
-                      f"{fam}.stages": "count", f"{fam}.tasks": "count",
-                      f"{fam}.shuffle_read_bytes": "bytes",
-                      f"{fam}.shuffle_write_bytes": "bytes",
-                      f"{fam}.executor_run_s": "s"})
-    units.update({"battery.jobs": "count", "battery.stages": "count",
-                  "battery.tasks": "count", "battery.s_per_job": "s",
-                  "udf.profiled_s": "s", "trace.overhead_s": "s",
-                  "trace.overhead_share": "ratio", "trace.spans": "count"})
-    return units
+def _units(trace: bool) -> dict:
+    """Metric name -> unit, as ``BENCHMARK.json`` lists them."""
+    bench = json.loads((HERE.parent / "BENCHMARK.json").read_text())
+    return {m["name"]: m["unit"]
+            for m in bench["per_layer" if trace else "end_to_end"]}
 
 
 def _setup(workload: str, seed: int, start: float):
@@ -128,7 +96,7 @@ def _udf_profiled_s(spark, dump_dir: Path) -> float:
 def run(args, work: Path) -> tuple:
     from checks import Gate, sample_indices
     from layers import functions_pass
-    from workloads import WORKLOADS, Ctx, waves
+    from workloads import PASS_S, WORKLOADS, Ctx, waves
 
     tracer = spark_env.Tracer(False, f"{args.workload}-s{args.seed}")
     spark, fixture, tables, first = _setup(args.workload, args.seed, T0)
@@ -142,7 +110,8 @@ def run(args, work: Path) -> tuple:
     if not args.trace:
         if fixture is not None:
             ctx.oracle, _ = functions_pass(sample, args.seed, tracer, False)
-        outcome = loop(ctx, args.seconds)
+        passes = max(2, round(args.seconds / PASS_S[args.workload]))
+        outcome = loop(ctx, passes)
         setups = [first[0]]
         for _ in range(SETUPS - 1):
             spark.stop()
@@ -151,6 +120,8 @@ def run(args, work: Path) -> tuple:
             setups.append(again[0])
         metrics = {"setup_s": statistics.median(setups), **outcome.metrics()}
         notes.append("set-ups (s): " + ", ".join(f"{s:.2f}" for s in setups))
+        notes.append(f"{len(outcome.walls)} operation keys, "
+                     f"{sum(map(len, outcome.walls.values()))} timed calls")
         return metrics, ctx.gate, notes
 
     # traced run: the workload untraced and traced, then the other layers
@@ -159,18 +130,18 @@ def run(args, work: Path) -> tuple:
     with tracer.span("functions.pass", docs=len(sample)):
         ctx.oracle, layer = functions_pass(sample, args.seed, tracer, True)
     tracer.enabled = False
-    untraced = loop(ctx, 0, min_passes=2)  # the first pass warms up
+    untraced = loop(ctx, 2)  # the first pass warms up
     spark.conf.set("spark.sql.pyspark.udf.profiler", "perf")
     tracer.enabled = True
     ctx.counters = spark_env.Counters(spark)
     with tracer.span(f"workload.{args.workload}"):
-        traced = loop(ctx, 0, min_passes=1)
+        traced = loop(ctx, 1)
     layer["udf.profiled_s"] = _udf_profiled_s(spark, work / "profile")
     layer.update(traced.layer)
     for name, other in WORKLOADS.items():
         if name != args.workload:
             with tracer.span(f"probe.{name}"):
-                layer.update(other(ctx, 0, min_passes=1, probe=True).layer)
+                layer.update(other(ctx, 1, probe=True).layer)
     with tracer.span("probe.waves"):
         layer.update(waves(ctx))
     # rates in chars: the sample and chunk 0 differ in document sizes
@@ -206,13 +177,10 @@ def main() -> int:
     try:
         metrics, gate, notes = run(args, work)
     finally:
-        from pyspark.sql import SparkSession
-
-        if SparkSession.getActiveSession() is not None:
-            SparkSession.getActiveSession().stop()
+        spark_env.shutdown()
         shutil.rmtree(work, ignore_errors=True)
 
-    units = END_TO_END if not args.trace else _per_layer_units()
+    units = _units(args.trace)
     missing = set(units) - set(metrics)
     if missing:
         raise RuntimeError(f"metrics not measured: {sorted(missing)}")

@@ -68,6 +68,22 @@ def start_session():
     return spark
 
 
+def shutdown() -> None:
+    """Stop the session and wait for the JVM (and its Python workers)
+    to exit."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    if SparkSession.getActiveSession() is not None:
+        SparkSession.getActiveSession().stop()
+    gateway = SparkContext._gateway
+    if gateway is not None:
+        gateway.shutdown()
+        gateway.proc.stdin.close()  # the JVM exits when its stdin closes
+        gateway.proc.wait(timeout=120)
+        SparkContext._gateway = SparkContext._jvm = None
+
+
 class Counters:
     """Per-job-group totals read from Spark's status REST API.
 

@@ -7,11 +7,10 @@ Two workloads, each a closed loop with one caller:
 - ``battery``: the ``BATTERY`` queries in registration order, one at a
   time, each collected to the driver.
 
-A loop makes passes over its operation keys (chunks or queries) until
-``seconds`` have gone by, and at least ``min_passes``. It returns an
-``Outcome``: wall seconds per key and pass, the items one pass handles
-and, when the context carries counters, the per-layer metrics of its
-layer. ``waves`` is a probe of the incremental path that traced runs
+A loop makes ``passes`` passes over its operation keys (chunks or
+queries). It returns an ``Outcome``: wall seconds per key and pass,
+the items one pass handles and, when the context carries counters, the
+per-layer metrics of its layer. ``waves`` is a probe of the incremental path that traced runs
 add. Correctness checks run after each timed loop and feed
 ``ctx.gate``.
 """
@@ -26,7 +25,7 @@ from pathlib import Path
 
 import inputs
 from checks import CollectedResult, Oracles, committed_records
-from layers import control_pass, doc_ids
+from layers import control_pass
 
 now = time.perf_counter
 
@@ -93,19 +92,8 @@ class Outcome:
         return sum(v[-1] for v in self.walls.values())
 
     def metrics(self) -> dict:
-        per_key = sorted(self.per_key())
-        p90 = (statistics.quantiles(per_key, n=10, method="inclusive")[8]
-               if len(per_key) > 1 else per_key[0])
-        return {"op_p50_s": statistics.median(per_key), "op_p90_s": p90,
+        return {"op_p50_s": statistics.median(self.per_key()),
                 "throughput_per_s": self.items / self.pass_s()}
-
-
-def _passes(seconds: float, min_passes: int):
-    start = now()
-    k = 0
-    while k < min_passes or now() - start < seconds:
-        yield k
-        k += 1
 
 
 def _timed(ctx, name: str, fn, what: str, **attrs):
@@ -127,9 +115,9 @@ def _check_committed(ctx, what: str, committed_df, indices) -> None:
     got = committed_df.agg(F.count("*"), F.countDistinct("doc_id")).first()
     ctx.gate.record(f"{what} rows", tuple(got) == (len(indices),) * 2,
                     f"{tuple(got)} rows/ids, want {len(indices)}")
-    ids = set(doc_ids(indices))
+    ids = {inputs.make_doc_id(i) for i in indices}
     oracle = {d: r for d, r in ctx.oracle.items() if d in ids}
-    ctx.gate.docs(what, committed_records(ctx.spark, committed_df, oracle),
+    ctx.gate.docs(what, committed_records(committed_df, oracle),
                   oracle)
 
 
@@ -146,8 +134,7 @@ def salted(nproc: int) -> int:
     return 4 * nproc
 
 
-def extract(ctx: Ctx, seconds: float, min_passes: int = 2,
-            probe: bool = False) -> Outcome:
+def extract(ctx: Ctx, passes: int, probe: bool = False) -> Outcome:
     """``run_extraction`` over each chunk (only chunk 0 in a probe)."""
     from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
         run_extraction)
@@ -158,7 +145,7 @@ def extract(ctx: Ctx, seconds: float, min_passes: int = 2,
     chunks = range(1 if probe else inputs.N_CHUNKS)
     walls = defaultdict(list)
     made = []
-    for k in _passes(seconds, min_passes):
+    for k in range(passes):
         for c in chunks:
             df = spark.read.parquet(*inputs.chunk_dirs(ctx.fixture, c))
             base = ctx.scratch(f"extract-{c}-{k}")
@@ -274,8 +261,7 @@ def waves(ctx: Ctx) -> dict:
 # -- battery -------------------------------------------------------------
 
 
-def battery(ctx: Ctx, seconds: float, min_passes: int = 2,
-            probe: bool = False) -> Outcome:
+def battery(ctx: Ctx, passes: int, probe: bool = False) -> Outcome:
     """The ``BATTERY`` queries, each result checked against its DuckDB
     oracle."""
     from zzzarchived_arxiv_fulltext_spark.queries import (
@@ -287,7 +273,7 @@ def battery(ctx: Ctx, seconds: float, min_passes: int = 2,
              and (not probe or n in BATTERY[::2])]
     walls = defaultdict(list)
     results = []
-    for k in _passes(seconds, min_passes):
+    for k in range(passes):
         for name in names:
             res, wall = _timed(
                 ctx, f"battery.{name}.pass{k}",
@@ -325,3 +311,7 @@ def _battery_layer(ctx, names, family, outcome) -> dict:
 
 
 WORKLOADS = {"extract": extract, "battery": battery}
+# seconds one pass takes on 4 cores: a run makes ``--seconds`` worth of
+# passes, so the work a run does depends on ``--seconds`` alone and two
+# commits compared at one setting time the same calls
+PASS_S = {"extract": 10.0, "battery": 6.5}
