@@ -1,38 +1,37 @@
 """Seeded benchmark inputs, cached on disk under ``perfbench/.cache``.
 
-Two inputs, each a pure function of its seed:
+Two inputs:
 
-- the interleaved-span fixture from the engine's own generator
-  (``sources.fixtures.spans_table``, which ``write_spans_parquet``
-  writes), split into ``N_PARTS`` equal parts as ``part_of_index``
-  deals them. ``PARTS_PER_CHUNK`` consecutive parts form one chunk of
-  the ``extract`` workload; the first parts are the waves of the
-  ``waves`` probe;
-- the battery tables (the driver's TPC-H-like star schema plus
-  ``events``, ``documents`` and ``embeddings``), generated here with
-  the shapes of the sf0.01 test tables.
-
-The cache is keyed by ``(n_docs, seed)`` and by seed; a cache entry is
-complete once its ``_READY`` marker exists.
+- the interleaved-span fixture, a pure function of the seed: ``N_DOCS``
+  documents from the engine's own generator
+  (``sources.fixtures.make_doc``), split into ``N_PARTS`` equal parts as
+  ``part_of_index`` deals them. ``extract`` reads them all; the first
+  ``N_WAVES`` parts are the waves of the ``waves`` workload. Its cache
+  is keyed by ``(n_docs, parts, seed)``; an entry is complete once its
+  ``_READY`` marker exists;
+- the battery tables: a copy of the sf0.01 parquet tables the query
+  tests and ``tools/check_oracles`` use, committed under
+  ``perfbench/tables`` so that a run reads nothing outside its
+  checkout. They do not depend on the seed.
 """
 
 import functools
-import json
+import itertools
 import random
 import shutil
-from datetime import datetime, timedelta
 from pathlib import Path
+from types import MappingProxyType
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-CACHE = Path(__file__).resolve().parent / ".cache"
+HERE = Path(__file__).resolve().parent
+CACHE = HERE / ".cache"
+BATTERY_TABLES = HERE / "tables" / "sf0.01"
 
-N_DOCS = 8_000
+N_DOCS = 4_000
 N_PARTS = 16
-PARTS_PER_CHUNK = 8
-N_CHUNKS = N_PARTS // PARTS_PER_CHUNK
+N_WAVES = 12
 
 _READY = "_READY"
 
@@ -49,61 +48,82 @@ def _mark_ready(path: Path) -> None:
 
 
 def _is_giant(i: int) -> bool:
-    """The fixture's ~1M-char straggler documents (``make_doc``)."""
+    """The fixture's 0.3-1M-char straggler documents (``make_doc``)."""
     return i % 997 == 7
 
 
-@functools.lru_cache(maxsize=4)
-def part_of_index(n_docs: int, seed: int) -> tuple:
-    """Part number of each document index: ``N_PARTS`` equal parts.
+def _kept(i: int) -> bool:
+    """All but the generator's one giant whose reference block is three
+    times its body (index 2998): at 2.8M chars it alone would set the
+    time of the task it lands in, three times a task's share."""
+    return not (_is_giant(i) and i % 29 == 11)
 
-    The giants are dealt from the last part down, alternating between
-    the two halves, so each ``extract`` chunk holds its share of them
-    and the first waves hold none: a single giant would otherwise
-    decide a wave's time. All other documents are dealt by a seeded
-    shuffle.
+
+DOC_INDICES = tuple(itertools.islice(filter(_kept, itertools.count()),
+                                     N_DOCS))
+
+
+@functools.lru_cache(maxsize=4)
+def part_of_index(seed: int):
+    """Document index -> part number: ``N_PARTS`` equal parts.
+
+    The giants go one to a part from the last part down, so the waves
+    hold none: a single giant would otherwise decide a wave's time. All
+    other documents are dealt by a seeded shuffle.
     """
-    giants = [i for i in range(n_docs) if _is_giant(i)]
-    rest = [i for i in range(n_docs) if not _is_giant(i)]
+    giants = [i for i in DOC_INDICES if _is_giant(i)]
+    rest = [i for i in DOC_INDICES if not _is_giant(i)]
     random.Random(seed).shuffle(rest)
-    per = n_docs // N_PARTS
-    half = N_PARTS // 2
-    part = [0] * n_docs
+    per = N_DOCS // N_PARTS
+    part = {i: N_PARTS - 1 - j for j, i in enumerate(giants)}
     free = [per] * N_PARTS
-    free[-1] += n_docs - per * N_PARTS
-    for j, i in enumerate(giants):
-        p = N_PARTS - 1 - j // 2 - (half if j % 2 else 0)
-        part[i] = p
+    free[-1] += N_DOCS - per * N_PARTS
+    for p in part.values():
         free[p] -= 1
     slots = [p for p in range(N_PARTS) for _ in range(free[p])]
-    for i, p in zip(rest, slots):
-        part[i] = p
-    return tuple(part)
+    part.update(zip(rest, slots))
+    return MappingProxyType(part)
 
 
-def span_fixture(spark, seed: int, n_docs: int = N_DOCS) -> tuple:
+def make_doc(i: int, seed: int) -> tuple:
+    """Document ``i`` of the fixture for ``seed``: ``(doc_id, spans)``.
+
+    The giants come from the generator's default seed whatever the
+    run's seed. They hold a third of the characters and each runs as
+    one long task, so sizes that moved with the seed (0.4-1M chars
+    each) would move ``extract``'s time by a tenth from seed to seed.
+    """
+    from zzzarchived_arxiv_fulltext_spark.sources import fixtures
+
+    return fixtures.make_doc(i, fixtures.DEFAULT_SEED if _is_giant(i)
+                             else seed)
+
+
+def span_fixture(seed: int) -> tuple:
     """Write (or find) the fixture; returns ``(dir, was_cached)``.
 
     ``dir/parts/part=<k>`` holds part ``k``; reading such a directory
-    directly yields the engine's input schema ``(doc_id, spans)``.
+    directly yields the engine's input schema ``(doc_id, spans)``. The
+    rows are the engine generator's, written with pyarrow on the
+    driver: a Spark write of the same rows costs a cold run several
+    seconds more, and almost every run of the benchmark has a new seed.
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from zzzarchived_arxiv_fulltext_spark.sources.fixtures import (
-        spans_table)
+    from zzzarchived_arxiv_fulltext_spark.schema import INPUT_SCHEMA
 
-    root = CACHE / f"spans-n{n_docs}-s{seed}"
+    root = CACHE / f"spans-n{N_DOCS}-p{N_PARTS}-s{seed}"
     if _ready(root):
         return root, True
     shutil.rmtree(root, ignore_errors=True)
-    root.mkdir(parents=True)
-    part = part_of_index(n_docs, seed)
-    ids = spark.createDataFrame(
-        [(make_doc_id(i), part[i]) for i in range(n_docs)],
-        "doc_id string, part int")
-    (spans_table(spark, n_docs, seed)
-     .join(F.broadcast(ids), "doc_id")
-     .write.partitionBy("part").parquet(str(root / "parts")))
+    schema = to_arrow_schema(INPUT_SCHEMA)
+    for k in range(N_PARTS):
+        rows = [make_doc(i, seed) for i in indices_in_parts(seed, [k])]
+        out = root / "parts" / f"part={k}"
+        out.mkdir(parents=True)
+        pq.write_table(pa.Table.from_pylist(
+            [{"doc_id": d, "spans": spans} for d, spans in rows],
+            schema=schema), out / "part-0.parquet")
     _mark_ready(root)
     return root, False
 
@@ -117,163 +137,6 @@ def part_dirs(root: Path, parts) -> list:
     return [str(root / "parts" / f"part={k}") for k in parts]
 
 
-def _chunk_parts(chunk: int) -> range:
-    return range(chunk * PARTS_PER_CHUNK, (chunk + 1) * PARTS_PER_CHUNK)
-
-
-def chunk_dirs(root: Path, chunk: int) -> list:
-    return part_dirs(root, _chunk_parts(chunk))
-
-
 def indices_in_parts(seed: int, parts) -> list:
     wanted = set(parts)
-    return [i for i, p in enumerate(part_of_index(N_DOCS, seed))
-            if p in wanted]
-
-
-def chunk_indices(seed: int, chunk: int) -> list:
-    return indices_in_parts(seed, _chunk_parts(chunk))
-
-
-# -- battery tables ------------------------------------------------------
-
-_VOCAB = ("a agg batch big column customer data fast filter group hash join "
-          "key line merge order part query row scan slow small sort spark "
-          "stream table the value vector window").split()
-_LANGS = ("en", "en", "en", "zh", "es", "de", "fr")
-_EVENT_TYPES = ("signup", "error", "click", "view", "purchase")
-_SEGMENTS = ("HOUSEHOLD", "MACHINERY", "FURNITURE", "BUILDING", "AUTOMOBILE")
-_REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
-_ADJ = ("small", "red", "blue", "hot", "old", "big", "cold", "green")
-_NOUN = ("ring", "widget", "bolt", "gear", "gizmo", "nut", "pipe", "valve")
-_PTYPES = ("ECONOMY", "SMALL", "MEDIUM", "PROMO", "STANDARD", "LARGE")
-_STATUS = ("P", "F", "O")
-_PRIORITY = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-
-# sf0.01 row counts of the driver's test tables
-_ROWS = {"customer": 1500, "supplier": 100, "part": 2000, "orders": 15000,
-         "lineitem": 60000, "events": 10000, "documents": 500,
-         "embeddings": 500}
-
-
-def _doc_text(rng: random.Random) -> str:
-    return " ".join(rng.choice(_VOCAB) for _ in range(rng.randint(10, 99)))
-
-
-def _tables(seed: int) -> dict:
-    rng = random.Random(seed)
-    nrng = np.random.default_rng(seed)
-    money = lambda lo, hi: round(rng.uniform(lo, hi), 2)  # noqa: E731
-    day0 = datetime(1995, 1, 1)
-
-    def day(lo: int, hi: int) -> datetime:
-        return day0 + timedelta(days=rng.randint(lo, hi))
-
-    t = {}
-    t["region"] = {"r_regionkey": list(range(5)), "r_name": list(_REGIONS)}
-    t["nation"] = {"n_nationkey": list(range(25)),
-                   "n_name": [f"NATION_{k}" for k in range(25)],
-                   "n_regionkey": [k % 5 for k in range(25)]}
-    n = _ROWS["customer"]
-    t["customer"] = {"c_custkey": list(range(n)),
-                     "c_name": [f"Customer#{k:09d}" for k in range(n)],
-                     "c_nationkey": [rng.randrange(25) for _ in range(n)],
-                     "c_acctbal": [money(-999.99, 9999.99) for _ in range(n)],
-                     "c_mktsegment": [rng.choice(_SEGMENTS) for _ in range(n)]}
-    n = _ROWS["supplier"]
-    t["supplier"] = {"s_suppkey": list(range(n)),
-                     "s_name": [f"Supplier#{k:09d}" for k in range(n)],
-                     "s_nationkey": [rng.randrange(25) for _ in range(n)],
-                     "s_acctbal": [money(-999.99, 9999.99) for _ in range(n)]}
-    n = _ROWS["part"]
-    t["part"] = {"p_partkey": list(range(n)),
-                 "p_name": [f"{rng.choice(_ADJ)} {rng.choice(_NOUN)}"
-                            for _ in range(n)],
-                 "p_brand": [f"Brand#{rng.randint(1, 25)}" for _ in range(n)],
-                 "p_type": [rng.choice(_PTYPES) for _ in range(n)],
-                 "p_size": [rng.randint(1, 50) for _ in range(n)],
-                 "p_retailprice": [round(900 + (k % 1000) / 10, 1)
-                                   for k in range(n)]}
-    n = _ROWS["orders"]
-    t["orders"] = {"o_orderkey": list(range(n)),
-                   "o_custkey": [rng.randrange(_ROWS["customer"])
-                                 for _ in range(n)],
-                   "o_orderstatus": [rng.choice(_STATUS) for _ in range(n)],
-                   "o_totalprice": [money(1000, 500000) for _ in range(n)],
-                   "o_orderdate": [day(0, 2404) for _ in range(n)],
-                   "o_orderpriority": [rng.choice(_PRIORITY)
-                                       for _ in range(n)]}
-    n = _ROWS["lineitem"]
-    t["lineitem"] = {
-        "l_orderkey": [rng.randrange(_ROWS["orders"]) for _ in range(n)],
-        "l_partkey": [rng.randrange(_ROWS["part"]) for _ in range(n)],
-        "l_suppkey": [rng.randrange(_ROWS["supplier"]) for _ in range(n)],
-        "l_linenumber": [rng.randint(1, 7) for _ in range(n)],
-        "l_quantity": [float(rng.randint(1, 50)) for _ in range(n)],
-        "l_extendedprice": [money(900, 105000) for _ in range(n)],
-        "l_discount": [rng.randint(0, 10) / 100 for _ in range(n)],
-        "l_tax": [rng.randint(0, 8) / 100 for _ in range(n)],
-        "l_returnflag": [rng.choice("ANR") for _ in range(n)],
-        "l_linestatus": [rng.choice("FO") for _ in range(n)],
-        "l_shipdate": [day(1, 2499) for _ in range(n)]}
-    n = _ROWS["events"]
-    ts, now = [], datetime(2024, 1, 1)
-    for _ in range(n):
-        now += timedelta(microseconds=rng.randint(1, 518_400_000))
-        ts.append(now)
-    t["events"] = {"event_id": list(range(n)), "ts": ts,
-                   "user_id": [rng.randrange(150) for _ in range(n)],
-                   "event_type": [rng.choice(_EVENT_TYPES) for _ in range(n)],
-                   "value": [round(rng.expovariate(1 / 50) + 0.01, 2)
-                             for _ in range(n)],
-                   "props": [json.dumps({"k": rng.randrange(100)})
-                             for _ in range(n)]}
-    n = _ROWS["documents"]
-    texts = []
-    for k in range(n):
-        if k >= 20 and rng.random() < 0.05:  # near-duplicate of an earlier doc
-            words = texts[rng.randrange(k)].split()
-            words[rng.randrange(len(words))] = rng.choice(_VOCAB)
-            texts.append(" ".join(words) + " dup")
-        else:
-            texts.append(_doc_text(rng))
-    t["documents"] = {"doc_id": list(range(n)), "text": texts,
-                      "lang": [rng.choice(_LANGS) for _ in range(n)],
-                      "source": [f"src{k % 20}" for k in range(n)],
-                      "n_chars": [len(x) for x in texts]}
-    n = _ROWS["embeddings"]
-    labels = nrng.integers(0, 10, n)
-    centers = nrng.normal(size=(10, 64))
-    emb = centers[labels] + nrng.normal(scale=1.5, size=(n, 64))
-    emb = (emb / np.linalg.norm(emb, axis=1, keepdims=True)).astype(np.float32)
-    t["embeddings"] = {"vec_id": list(range(n)), "embedding": list(emb),
-                       "label": labels.tolist()}
-    return t
-
-
-_TYPES = {
-    "r_regionkey": pa.int32(), "n_nationkey": pa.int32(),
-    "n_regionkey": pa.int32(), "c_nationkey": pa.int32(),
-    "s_nationkey": pa.int32(), "p_size": pa.int32(),
-    "l_linenumber": pa.int32(), "label": pa.int32(),
-    "o_orderdate": pa.timestamp("us"), "l_shipdate": pa.timestamp("us"),
-    "ts": pa.timestamp("us"), "embedding": pa.list_(pa.float32()),
-}
-
-
-def battery_tables(seed: int) -> tuple:
-    """Write (or find) the battery tables; returns ``(dir, was_cached)``.
-
-    Each table lands at ``dir/<name>.parquet``, the layout the queries
-    and their DuckDB oracles read.
-    """
-    root = CACHE / f"tables-s{seed}"
-    if _ready(root):
-        return root, True
-    shutil.rmtree(root, ignore_errors=True)
-    root.mkdir(parents=True)
-    for name, cols in _tables(seed).items():
-        arrays = {c: pa.array(v, type=_TYPES.get(c)) for c, v in cols.items()}
-        pq.write_table(pa.table(arrays), root / f"{name}.parquet")
-    _mark_ready(root)
-    return root, False
+    return sorted(i for i, p in part_of_index(seed).items() if p in wanted)

@@ -1,19 +1,25 @@
 """Single-process probes of the pure-Python layer.
 
-``functions_pass`` runs ``extract_document`` over the seeded sample on
-the driver and, when asked, times every public call it makes by
-wrapping the module globals those calls go through. Its outputs are the
-correctness oracle of the run. ``control_pass`` runs the same function
-over a ``multiprocessing.Pool`` of ``nproc`` workers: the frameworkless
-control the Spark path is compared with.
+``functions_pass`` runs ``extract_document`` over a seeded sample of the
+fixture on the driver and, when asked, times every public call it makes
+by wrapping the module globals those calls go through. ``control_pass``
+runs the same function over every given document on a
+``multiprocessing.Pool`` of ``nproc`` workers: the frameworkless control
+the Spark path is compared with. Its outputs, one digest per document,
+are the correctness oracle of the run (``fixture_oracle``).
 """
 
 import contextlib
+import json
 import multiprocessing
+import random
 import time
 from collections import defaultdict
 
-from checks import doc_record
+from checks import doc_record, record_digest
+from inputs import DOC_INDICES, make_doc, make_doc_id
+
+SAMPLE_DOCS = 150  # documents of the single-process pass
 
 # (module, attribute) pairs that extract_document reaches its public
 # calls through, and the metric each one's inclusive busy time feeds
@@ -56,11 +62,15 @@ def _timed_calls(busy: dict, tracer):
             setattr(mod, attr, fn)
 
 
-def functions_pass(indices, seed: int, tracer, timed: bool) -> tuple:
-    """``(oracle, metrics)``: oracle maps doc_id → ``doc_record``."""
+def sample_indices(seed: int, k: int = SAMPLE_DOCS) -> list:
+    """The fixture documents of the single-process pass."""
+    return sorted(random.Random(seed ^ 0x5EED).sample(DOC_INDICES, k))
+
+
+def functions_pass(indices, seed: int, tracer, timed: bool) -> dict:
+    """The ``functions.*`` metrics of the documents at ``indices``."""
     from zzzarchived_arxiv_fulltext_spark.functions.extract import (
         VIA_PRIMARY, extract_document)
-    from zzzarchived_arxiv_fulltext_spark.sources.fixtures import make_doc
 
     docs = [make_doc(i, seed) for i in indices]
     busy = defaultdict(float)
@@ -71,7 +81,6 @@ def functions_pass(indices, seed: int, tracer, timed: bool) -> tuple:
             with tracer.span("functions.extract_document", doc_id=doc_id):
                 outs.append(extract_document(spans))
         wall = time.perf_counter() - t
-    oracle = {doc_id: doc_record(o) for (doc_id, _), o in zip(docs, outs)}
     n = len(docs)
     chars = sum(_chars(spans) for _, spans in docs)
     metrics = {m: busy[m] for _, _, m in TIMED_CALLS}
@@ -85,14 +94,14 @@ def functions_pass(indices, seed: int, tracer, timed: bool) -> tuple:
         "functions.gate_fail_ratio": sum(o["status"] == "failed"
                                          for o in outs) / n,
     })
-    return oracle, metrics
+    return metrics
 
 
-def _extract_status(spans):
+def _extract_digest(spans) -> str:
     from zzzarchived_arxiv_fulltext_spark.functions.extract import (
         extract_document)
 
-    return extract_document(spans)["status"]
+    return record_digest(doc_record(extract_document(spans)))
 
 
 def _chars(spans) -> int:
@@ -100,15 +109,30 @@ def _chars(spans) -> int:
 
 
 def control_pass(indices, seed: int, nproc: int) -> tuple:
-    """``(seconds, chars)``: the wall time a pool of ``nproc`` processes
-    takes to extract the documents at ``indices``, shipping included,
-    and the text characters those documents hold."""
-    from zzzarchived_arxiv_fulltext_spark.sources.fixtures import make_doc
-
+    """``(seconds, chars, digests)``: the wall time a pool of ``nproc``
+    processes takes to extract the documents at ``indices``, shipping
+    included, the text characters those documents hold and each
+    document's ``record_digest`` by doc_id."""
     docs = [make_doc(i, seed)[1] for i in indices]
     with multiprocessing.get_context("spawn").Pool(nproc) as pool:
-        pool.map(_extract_status, docs[:nproc])  # workers warm first
+        pool.map(_extract_digest, docs[:nproc])  # workers warm first
         t = time.perf_counter()
-        pool.map(_extract_status, docs, chunksize=16)
+        digests = pool.map(_extract_digest, docs, chunksize=16)
         wall = time.perf_counter() - t
-    return wall, sum(_chars(spans) for spans in docs)
+    return (wall, sum(_chars(spans) for spans in docs),
+            dict(zip(map(make_doc_id, indices), digests)))
+
+
+def fixture_oracle(fixture, seed: int, nproc: int, digests=None) -> dict:
+    """doc_id -> ``record_digest`` of ``extract_document`` for every
+    document of the fixture, kept next to it once made. ``digests``, a
+    ``control_pass`` over ``DOC_INDICES``, saves making it again."""
+    path = fixture / "oracle.json"
+    if path.exists():
+        return json.loads(path.read_text())
+    if digests is None:
+        digests = control_pass(DOC_INDICES, seed, nproc)[2]
+    tmp = path.with_suffix(".tmp")
+    tmp.write_text(json.dumps(digests))
+    tmp.replace(path)
+    return digests

@@ -9,7 +9,6 @@ the caller removes at the end.
 import contextlib
 import json
 import os
-import sys
 import time
 import urllib.request
 from pathlib import Path
@@ -41,25 +40,21 @@ def cores() -> int:
     return len(os.sched_getaffinity(0))
 
 
-def _forget_udf_handles() -> None:
-    """Drop the JVM handles module-level UDFs cached in an earlier
-    session. pyspark builds a UDF's JVM side once and keeps it; after a
-    session restart that handle still reports to the stopped session's
-    accumulator server, which fails on every task."""
-    for name, mod in list(sys.modules.items()):
-        if not name.startswith("zzzarchived_arxiv_fulltext_spark"):
-            continue
-        for obj in vars(mod).values():
-            udf = getattr(obj, "_unwrapped", None)
-            if hasattr(udf, "_judf_placeholder"):
-                udf._judf_placeholder = None
+def cpu_jiffies() -> tuple:
+    """``(busy, steal)`` CPU ticks of the whole machine so far, from
+    ``/proc/stat``; steal is time a virtual CPU wanted and its host gave
+    to another guest. ``(0, 0)`` where the file does not exist."""
+    try:
+        with open("/proc/stat") as f:
+            v = [int(x) for x in f.readline().split()[1:]]
+    except OSError:
+        return 0, 0
+    return v[0] + v[1] + v[2] + v[5] + v[6], v[7]
 
 
 def start_session():
     """The engine's own session at ``local[nproc]``."""
     from zzzarchived_arxiv_fulltext_spark.config import build_spark
-
-    _forget_udf_handles()
 
     n = cores()
     spark = build_spark(app_name="perfbench", master=f"local[{n}]",
@@ -82,6 +77,60 @@ def shutdown() -> None:
         gateway.proc.stdin.close()  # the JVM exits when its stdin closes
         gateway.proc.wait(timeout=120)
         SparkContext._gateway = SparkContext._jvm = None
+
+
+def adopt_orphans() -> None:
+    """Make this process the parent of its orphaned descendants, such as
+    Python workers that outlive the JVM which forked them, so that
+    ``stop_children`` can wait for them. Linux only; elsewhere a no-op."""
+    try:
+        import ctypes
+
+        ctypes.CDLL(None).prctl(36, 1, 0, 0, 0)  # PR_SET_CHILD_SUBREAPER
+    except (OSError, AttributeError):
+        pass
+
+
+def _child_pids() -> list:
+    me = str(os.getpid())
+    pids = []
+    for stat in Path("/proc").glob("[0-9]*/stat"):
+        try:
+            ppid = stat.read_text().rsplit(")", 1)[1].split()[1]
+        except (OSError, IndexError):
+            continue
+        if ppid == me:
+            pids.append(int(stat.parent.name))
+    return pids
+
+
+def stop_children(grace_s: float = 30.0) -> None:
+    """Stop every child process and wait until each has ended.
+
+    ``multiprocessing``'s resource tracker, started with the first
+    spawn-context pool, ignores SIGTERM and only exits once its pipe to
+    this process closes, so it is stopped first. Children still running
+    after ``grace_s`` are killed.
+    """
+    import signal
+    from multiprocessing import resource_tracker
+
+    stop = getattr(resource_tracker._resource_tracker, "_stop", None)
+    if stop is not None:
+        stop()
+    deadline = time.monotonic() + grace_s
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return  # none left
+        if pid:
+            continue
+        if time.monotonic() > deadline:
+            for pid in _child_pids():
+                with contextlib.suppress(ProcessLookupError):
+                    os.kill(pid, signal.SIGKILL)
+        time.sleep(0.05)
 
 
 class Counters:

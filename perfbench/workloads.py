@@ -1,17 +1,24 @@
 """The timed workloads and the per-layer probes.
 
-Two workloads, each a closed loop with one caller:
+Three workloads, each a closed loop with one caller:
 
-- ``extract``: ``run_extraction`` with a lineage table over each chunk
-  of the span fixture, into a fresh ``SnapshotTable`` per call;
+- ``extract``: ``run_extraction`` with a lineage table over the whole
+  span fixture, into a fresh ``SnapshotTable`` per call;
+- ``waves``: the wave parts appended to an input ``SnapshotTable`` one
+  at a time (untimed), each consumed by ``run_extraction_incremental``;
+  then one ``run_extraction`` over the whole input, which must commit
+  nothing;
 - ``battery``: the ``BATTERY`` queries in registration order, one at a
   time, each collected to the driver.
 
-A loop makes ``passes`` passes over its operation keys (chunks or
-queries). It returns an ``Outcome``: wall seconds per key and pass,
-the items one pass handles and, when the context carries counters, the
-per-layer metrics of its layer. ``waves`` is a probe of the incremental path that traced runs
-add. Correctness checks run after each timed loop and feed
+A loop makes ``passes`` passes over its operation keys (the one
+extraction, the waves or the queries). It returns an ``Outcome``: wall
+seconds per key and pass, the items one pass handles and, when the
+context carries counters, the per-layer metrics of its layer. A traced
+run runs every loop, its own workload's too, as a probe: the loop made
+smaller where it can be (fewer waves), the same in every traced run, so
+a per-layer metric means the same work whichever workload's traced run
+gives it. Correctness checks run after each timed loop and feed
 ``ctx.gate``.
 """
 
@@ -24,14 +31,14 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 import inputs
-from checks import CollectedResult, Oracles, committed_records
-from layers import control_pass
+from checks import CollectedResult, Oracles, committed_digests
+from spark_env import cpu_jiffies
 
 now = time.perf_counter
 
 # A fixed subset of the registered queries, two per family: a pass
-# takes seconds, where the full battery takes minutes. A probe runs the
-# first query of each family.
+# takes seconds, where all 140 take about two minutes on 4 cores, more
+# than one run of the benchmark may spend.
 BATTERY = (
     "token_count", "psv_multiline_pathology",
     "license_detection", "cosine_topk",
@@ -54,8 +61,9 @@ class Ctx:
     work: Path
     tracer: object
     gate: object
-    oracle: dict = field(default_factory=dict)
+    oracle: dict = field(default_factory=dict)  # doc_id -> digest
     counters: object = None  # set in traced loops
+    control: tuple = None  # a control_pass over the fixture, when traced
     fixture: Path = None
     tables: Path = None
 
@@ -88,37 +96,60 @@ class Outcome:
     def pass_s(self) -> float:
         return sum(self.per_key())
 
-    def last_pass_s(self) -> float:
-        return sum(v[-1] for v in self.walls.values())
-
     def metrics(self) -> dict:
         return {"op_p50_s": statistics.median(self.per_key()),
                 "throughput_per_s": self.items / self.pass_s()}
 
 
 def _timed(ctx, name: str, fn, what: str, **attrs):
-    """``(result, seconds)`` of ``fn()``; a raise counts as a failed op."""
+    """``(result, seconds)`` of ``fn()``; a raise counts as a failed op.
+
+    The seconds are wall time net of CPU steal: the wall time times the
+    share of the CPU time asked for in the interval that the guest got.
+    On a shared host the steal swung from 1% to over 40% from run to run
+    and moved wall times with it; over ten seeds on 4 vCPUs, ``extract``
+    throughput spread 10% raw and 2% net of steal.
+    """
     with ctx.op(name, **attrs):
-        t = now()
+        cpu0, t = cpu_jiffies(), now()
         try:
             result = fn()
         except Exception as ex:  # noqa: BLE001 - reported by the gate
             ctx.gate.record(what, False, f"raised {type(ex).__name__}: {ex}")
-            return None, now() - t
-    return result, now() - t
+            result = None
+        wall = now() - t
+        busy, steal = (b - a for a, b in zip(cpu0, cpu_jiffies()))
+    return result, wall * (busy / (busy + steal) if busy + steal else 1.0)
 
 
 def _check_committed(ctx, what: str, committed_df, indices) -> None:
-    """Row count, distinct ids and the sampled docs of ``indices``."""
+    """Row count, distinct ids and every doc of ``indices``."""
     from pyspark.sql import functions as F
 
     got = committed_df.agg(F.count("*"), F.countDistinct("doc_id")).first()
     ctx.gate.record(f"{what} rows", tuple(got) == (len(indices),) * 2,
                     f"{tuple(got)} rows/ids, want {len(indices)}")
-    ids = {inputs.make_doc_id(i) for i in indices}
-    oracle = {d: r for d, r in ctx.oracle.items() if d in ids}
-    ctx.gate.docs(what, committed_records(committed_df, oracle),
-                  oracle)
+    ctx.gate.docs(what, committed_digests(committed_df), ctx.oracle,
+                  [inputs.make_doc_id(i) for i in indices])
+
+
+def _tables(base: Path, *names: str) -> list:
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import SnapshotTable
+
+    return [SnapshotTable(str(base / n)) for n in names]
+
+
+def warm_extraction(spark, fixture: Path, base: Path, nproc: int) -> None:
+    """``run_extraction`` with lineage over one wave part, as ``extract``
+    calls it: its stages, generated code and Python workers all start
+    here, so a first timed pass is as warm as a later one."""
+    from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
+        run_extraction)
+
+    df = spark.read.parquet(*inputs.part_dirs(fixture, [0]))
+    out, lineage = _tables(base, "out", "lineage")
+    run_extraction(spark, df, out, lineage, parallelism=salted(nproc))
+    shutil.rmtree(base, ignore_errors=True)
 
 
 # -- extract -------------------------------------------------------------
@@ -127,57 +158,55 @@ def _check_committed(ctx, what: str, committed_df, indices) -> None:
 def salted(nproc: int) -> int:
     """Partitions of the salted repartition ``extract`` asks for.
 
-    A chunk scans as about ``nproc`` tasks, so where its giant documents
-    land would decide the wall time and make it swing by a fifth from
-    seed to seed; four tasks per core spread them.
+    The fixture scans as one task per part, so where its giant documents
+    land would decide the wall time; four tasks per core spread them.
     """
     return 4 * nproc
 
 
 def extract(ctx: Ctx, passes: int, probe: bool = False) -> Outcome:
-    """``run_extraction`` over each chunk (only chunk 0 in a probe)."""
+    """One ``run_extraction`` over the whole fixture per pass; a probe
+    is the same loop."""
     from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
         run_extraction)
     from zzzarchived_arxiv_fulltext_spark.schema import OUTPUT_SCHEMA
-    from zzzarchived_arxiv_fulltext_spark.sources.tables import SnapshotTable
 
     spark = ctx.spark
-    chunks = range(1 if probe else inputs.N_CHUNKS)
+    parts = range(inputs.N_PARTS)
+    indices = inputs.indices_in_parts(ctx.seed, parts)
     walls = defaultdict(list)
     made = []
     for k in range(passes):
-        for c in chunks:
-            df = spark.read.parquet(*inputs.chunk_dirs(ctx.fixture, c))
-            base = ctx.scratch(f"extract-{c}-{k}")
-            out = SnapshotTable(str(base / "out"))
-            lineage = SnapshotTable(str(base / "lineage"))
-            snap, wall = _timed(
-                ctx, f"extract.run_extraction.chunk{c}.pass{k}",
-                lambda: run_extraction(spark, df, out, lineage,
-                                       parallelism=salted(ctx.nproc)),
-                f"extract chunk {c}")
-            walls[c].append(wall)
-            made.append((c, out, snap))
+        df = spark.read.parquet(*inputs.part_dirs(ctx.fixture, parts))
+        out, lineage = _tables(ctx.scratch(f"extract-{k}"), "out", "lineage")
+        snap, wall = _timed(
+            ctx, f"extract.run_extraction.pass{k}",
+            lambda: run_extraction(spark, df, out, lineage,
+                                   parallelism=salted(ctx.nproc)),
+            "extract")
+        walls["run_extraction"].append(wall)
+        made.append((out, snap))
 
-    outcome = Outcome(walls, sum(len(inputs.chunk_indices(ctx.seed, c))
-                                 for c in chunks))
+    outcome = Outcome(walls, len(indices))
     if ctx.counters is not None:
-        outcome.layer = _span_extract_layer(ctx, min(walls[0]))
-    for c, out, snap in made:
+        outcome.layer = _span_extract_layer(ctx, parts, indices,
+                                            min(walls["run_extraction"]))
+    for out, snap in made:
         if snap is not None:
-            _check_committed(ctx, f"extract chunk {c}",
-                             out.read(spark, OUTPUT_SCHEMA),
-                             inputs.chunk_indices(ctx.seed, c))
+            _check_committed(ctx, "extract", out.read(spark, OUTPUT_SCHEMA),
+                             indices)
         shutil.rmtree(Path(out.path).parent, ignore_errors=True)
     return outcome
 
 
-def _span_extract_layer(ctx: Ctx, run_extraction_s: float) -> dict:
-    """Noop-sink extraction and the frameworkless control on chunk 0."""
+def _span_extract_layer(ctx: Ctx, parts, indices,
+                        run_extraction_s: float) -> dict:
+    """Noop-sink extraction and the frameworkless control on the same
+    documents as the timed ``run_extraction``."""
     from zzzarchived_arxiv_fulltext_spark.operators.span_extract import (
         extract_documents)
 
-    df = ctx.spark.read.parquet(*inputs.chunk_dirs(ctx.fixture, 0))
+    df = ctx.spark.read.parquet(*inputs.part_dirs(ctx.fixture, parts))
     name = "extract.span_extract.noop"
     _, noop_s = _timed(
         ctx, name,
@@ -185,9 +214,7 @@ def _span_extract_layer(ctx: Ctx, run_extraction_s: float) -> dict:
         .write.format("noop").mode("overwrite").save(),
         "noop extraction")
     c = ctx.counters.read([name])
-    indices = inputs.chunk_indices(ctx.seed, 0)
-    with ctx.tracer.span("extract.control_pool", nproc=ctx.nproc):
-        control_s, chars = control_pass(indices, ctx.seed, ctx.nproc)
+    control_s, chars, _ = ctx.control
     return {
         "span_extract.noop_s": noop_s,
         "span_extract.tasks": c["tasks"],
@@ -203,59 +230,66 @@ def _span_extract_layer(ctx: Ctx, run_extraction_s: float) -> dict:
     }
 
 
-# -- waves probe ---------------------------------------------------------
+# -- waves ---------------------------------------------------------------
 
 
-def waves(ctx: Ctx) -> dict:
-    """Parts appended to an input table one at a time, each consumed by
-    ``run_extraction_incremental``; then one ``run_extraction`` over the
-    whole input, which must commit nothing. Returns its layer metrics."""
+def waves(ctx: Ctx, passes: int, probe: bool = False) -> Outcome:
+    """Each pass feeds the wave parts (``PROBE_WAVES`` of them in a
+    probe) through fresh tables, then resumes once over the whole
+    input."""
     from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
         read_extracted, run_extraction, run_extraction_incremental)
     from zzzarchived_arxiv_fulltext_spark.schema import INPUT_SCHEMA
-    from zzzarchived_arxiv_fulltext_spark.sources.tables import SnapshotTable
 
     spark = ctx.spark
-    base = ctx.scratch("waves")
-    inp = SnapshotTable(str(base / "input"))
-    out = SnapshotTable(str(base / "out"))
-    lineage = SnapshotTable(str(base / "lineage"))
-    appends, groups = [], []
-    for w in range(PROBE_WAVES):
-        t = now()
-        with ctx.tracer.span("tables.append_wave", wave=w):
-            inp.append(spark.read.parquet(*inputs.part_dirs(ctx.fixture,
-                                                            [w])))
-        appends.append(now() - t)
-        groups.append(f"waves.wave{w}")
-        snap, _ = _timed(
-            ctx, groups[-1],
-            lambda: run_extraction_incremental(spark, inp, out, lineage),
-            f"wave {w}")
-        ctx.gate.record(f"wave {w} commit", snap is not None,
-                        "committed nothing")
-    resumed, resume_s = _timed(
-        ctx, "waves.resume",
-        lambda: run_extraction(spark, inp.read(spark, INPUT_SCHEMA), out,
-                               lineage),
-        "final resume")
-    ctx.gate.record("final resume is a no-op", resumed is None,
-                    f"committed snapshot {resumed}")
-    latest = read_extracted(spark, out)
-    _, read_s = _timed(ctx, "waves.read_latest", latest.count,
-                       "read latest")
+    parts = range(PROBE_WAVES if probe else inputs.N_WAVES)
+    walls = defaultdict(list)
+    appends, resumes, made = [], [], []
+    for k in range(passes):
+        base = ctx.scratch(f"waves-{k}")
+        inp, out, lineage = _tables(base, "input", "out", "lineage")
+        for w in parts:
+            with ctx.tracer.span("tables.append_wave", wave=w):
+                t = now()
+                inp.append(spark.read.parquet(*inputs.part_dirs(ctx.fixture,
+                                                                [w])))
+                appends.append(now() - t)
+            snap, wall = _timed(
+                ctx, f"waves.wave{w}.pass{k}",
+                lambda: run_extraction_incremental(spark, inp, out, lineage),
+                f"wave {w}")
+            walls[w].append(wall)
+            ctx.gate.record(f"wave {w} commit", snap is not None,
+                            "committed nothing")
+        resumed, resume_s = _timed(
+            ctx, f"waves.resume.pass{k}",
+            lambda: run_extraction(spark, inp.read(spark, INPUT_SCHEMA), out,
+                                   lineage),
+            "final resume")
+        ctx.gate.record("final resume is a no-op", resumed is None,
+                        f"committed snapshot {resumed}")
+        resumes.append(resume_s)
+        made.append(out)
 
-    c = ctx.counters.read(groups)
-    _check_committed(ctx, "waves", latest, inputs.indices_in_parts(
-        ctx.seed, range(PROBE_WAVES)))
-    return {
-        "extraction_job.jobs_per_wave": c["jobs"] / PROBE_WAVES,
-        "extraction_job.stages_per_wave": c["stages"] / PROBE_WAVES,
-        "extraction_job.tasks_per_wave": c["tasks"] / PROBE_WAVES,
-        "extraction_job.resume_noop_s": resume_s,
-        "tables.input_append_s": statistics.mean(appends),
-        "tables.read_latest_s": read_s,
-    }
+    indices = inputs.indices_in_parts(ctx.seed, parts)
+    outcome = Outcome(walls, len(indices))
+    for k, out in enumerate(made):
+        latest = read_extracted(spark, out)
+        _, read_s = _timed(ctx, f"waves.read_latest.pass{k}", latest.count,
+                           "read latest")
+        if k == 0 and ctx.counters is not None:
+            c = ctx.counters.read([f"waves.wave{w}.pass0" for w in parts])
+            outcome.layer = {
+                "extraction_job.jobs_per_wave": c["jobs"] / len(parts),
+                "extraction_job.stages_per_wave": c["stages"] / len(parts),
+                "extraction_job.tasks_per_wave": c["tasks"] / len(parts),
+                "extraction_job.resume_noop_s": resumes[0],
+                "tables.input_append_s": statistics.mean(appends),
+                "tables.read_latest_s": read_s,
+            }
+        _check_committed(ctx, "waves", latest, indices)
+        shutil.rmtree(Path(out.path).parent, ignore_errors=True)
+    return outcome
 
 
 # -- battery -------------------------------------------------------------
@@ -263,14 +297,13 @@ def waves(ctx: Ctx) -> dict:
 
 def battery(ctx: Ctx, passes: int, probe: bool = False) -> Outcome:
     """The ``BATTERY`` queries, each result checked against its DuckDB
-    oracle."""
+    oracle; a probe is the same loop."""
     from zzzarchived_arxiv_fulltext_spark.queries import (
         ORACLES, QUERIES, REGISTRATION_ORDER)
 
     spark, table_dir = ctx.spark, str(ctx.tables)
     family = {n: QUERIES[n].__module__.rsplit(".", 1)[-1] for n in BATTERY}
-    names = [n for n in REGISTRATION_ORDER if n in BATTERY
-             and (not probe or n in BATTERY[::2])]
+    names = [n for n in REGISTRATION_ORDER if n in BATTERY]
     walls = defaultdict(list)
     results = []
     for k in range(passes):
@@ -310,8 +343,11 @@ def _battery_layer(ctx, names, family, outcome) -> dict:
     return layer
 
 
-WORKLOADS = {"extract": extract, "battery": battery}
-# seconds one pass takes on 4 cores: a run makes ``--seconds`` worth of
-# passes, so the work a run does depends on ``--seconds`` alone and two
-# commits compared at one setting time the same calls
-PASS_S = {"extract": 10.0, "battery": 6.5}
+WORKLOADS = {"extract": extract, "waves": waves, "battery": battery}
+# seconds of ``--seconds`` one pass stands for: a run makes
+# ``round(seconds / PASS_S)`` passes, so the work a run does depends on
+# ``--seconds`` alone and two commits compared at one setting time the
+# same calls. On 4 cores a warm pass takes about 6 s (extract), 24 s
+# (waves) and 6 s (battery); the battery's share is smaller than its
+# pass, so that its sub-second queries get a best of three at 14 s.
+PASS_S = {"extract": 7.0, "waves": 24.0, "battery": 4.7}
