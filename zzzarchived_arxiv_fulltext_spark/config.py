@@ -18,7 +18,34 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_ARROW_BATCH = 256
+# Fixed session settings. Each has a single value that every caller
+# wants; a deployment that needs another passes ``--conf`` to
+# spark-submit or calls ``spark.conf.set`` on the built session.
+ARROW_BATCH = 256
+SHUFFLE_PARTITIONS = 32
+# Split sizing: extraction is CPU-bound (~2 MB/s/core through the
+# regex pipeline), so the right input split is ~100x smaller than the
+# scan-optimal 128m — a 4m split is ~2s of UDF work. At real 100TB
+# scale any value yields ample splits; locally it decides whether 32
+# cores get work at all.
+MAX_PARTITION_BYTES = "4m"
+# openCost doubles as the FLOOR on split size for small inputs
+# (maxSplitBytes = min(maxPartitionBytes, max(openCost,
+# total/minPartitionNum))). 512k was kept after measuring a 16k floor:
+# fanning sub-MB tables into 32 ~19KB tasks costs more in per-task
+# scheduling (iterative queries pay it per job) than the extra cores
+# return — see OPTIMIZATION_r07.md.
+OPEN_COST_BYTES = "512k"
+# InferFiltersFromGenerate infers `size(arr)>0 AND isnotnull(arr)`
+# below every explode; filter pushdown then CLONES the whole
+# array-building expression tree (split + transform + hash chains)
+# into the filter, so each row pays the array computation 3x
+# (measured 4.5x on the exact-substring family). Generate with
+# outer=false already skips empty arrays, so the inferred filter is
+# pure rework for every computed-array explode this engine runs
+# (guide §4.4's duplicated-evaluation trap, JVM edition).
+EXCLUDED_RULES = (
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
 
 
 _SHIPPED_APPS: set = set()
@@ -46,14 +73,10 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED_APPS.add(app_id)
 
 
-_ship_package = ship_package  # backward-compat alias
-
-
 def build_spark(
     app_name: str = "arxiv-fulltext-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
-    arrow_batch: int = DEFAULT_ARROW_BATCH,
+    shuffle_partitions: int = SHUFFLE_PARTITIONS,
 ) -> SparkSession:
     """Build a SparkSession with the engine's tuned defaults.
 
@@ -66,8 +89,6 @@ def build_spark(
         master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
     if master is not None:
         builder = builder.master(master)
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     spark = (
         builder
@@ -76,36 +97,14 @@ def build_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        # Split sizing: extraction is CPU-bound (~2 MB/s/core through
-        # the regex pipeline), so the right input split is ~100x smaller
-        # than the scan-optimal 128m — a 4m split is ~2s of UDF work.
-        # At real 100TB scale any value yields ample splits; locally it
-        # decides whether 32 cores get work at all.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
-        # openCost doubles as the FLOOR on split size for small inputs
-        # (maxSplitBytes = min(maxPartitionBytes, max(openCost,
-        # total/minPartitionNum))). 512k was kept after measuring a
-        # 16k floor: fanning sub-MB tables into 32 ~19KB tasks costs
-        # more in per-task scheduling (iterative queries pay it per
-        # job) than the extra cores return — see OPTIMIZATION_r07.md.
-        .config("spark.sql.files.openCostInBytes",
-                os.environ.get("SPARK_GRAFT_OPEN_COST", "512k"))
-        # InferFiltersFromGenerate infers `size(arr)>0 AND
-        # isnotnull(arr)` below every explode; filter pushdown then
-        # CLONES the whole array-building expression tree (split +
-        # transform + hash chains) into the filter, so each row pays
-        # the array computation 3x (measured 4.5x on the exact-
-        # substring family). Generate with outer=false already skips
-        # empty arrays, so the inferred filter is pure rework for
-        # every computed-array explode this engine runs (guide §4.4's
-        # duplicated-evaluation trap, JVM edition).
-        .config("spark.sql.optimizer.excludedRules",
-                os.environ.get(
-                    "SPARK_GRAFT_EXCLUDED_RULES",
-                    "org.apache.spark.sql.catalyst.optimizer."
-                    "InferFiltersFromGenerate"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
+                str(ARROW_BATCH))
+        .config("spark.sql.files.maxPartitionBytes", MAX_PARTITION_BYTES)
+        .config("spark.sql.files.openCostInBytes", OPEN_COST_BYTES)
+        .config("spark.sql.optimizer.excludedRules", EXCLUDED_RULES)
+        # reliable checkpoints (materialize.reuse under a cluster
+        # master) are deleted once their frame is garbage-collected
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # bucketed saveAsTable targets (plans/bucketed_tables) must
         # never land in the caller's cwd, and the default is PER-USER:
@@ -120,5 +119,5 @@ def build_spark(
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
-    _ship_package(spark)
+    ship_package(spark)
     return spark

@@ -28,6 +28,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import reuse
 from .sampling import hash_bucket
 
 
@@ -74,7 +75,7 @@ def train_quality_classifier(
     Per step: score every doc with the current weights INLINED as an
     array literal (``element_at`` lookup — no broadcast exchange, no
     join; guide §2.4), compute the residual ``sigmoid(z) - y``
-    (materialized via ``localCheckpoint`` — one doc-sized frame reused
+    (materialized via ``reuse`` — one doc-sized frame reused
     by both the gradient join and the bias sum instead of recomputing
     the scoring aggregation twice), then collect gradient AND bias in
     ONE action (bias rides along as bucket -1). The labeled set is
@@ -94,7 +95,8 @@ def train_quality_classifier(
         w, bias = [0.0] * buckets, 0.0
     for _ in range(steps):
         warr = F.array(*[F.lit(float(x)) for x in w])
-        resid = (
+        # reused by gradient + bias
+        resid = reuse(
             labeled
             .groupBy(id_col, "_y")
             .agg(F.sum(F.col("tf")
@@ -105,7 +107,6 @@ def train_quality_classifier(
                 (F.lit(1.0) / (F.lit(1.0) + F.exp(-(F.col("_z") + bias)))
                  - F.col("_y")).alias("_r"),
             )
-            .localCheckpoint(eager=True)  # reused by gradient + bias
         )
         # gradient rejoin carries _y in the key: two corpora with
         # overlapping doc ids must not cross-match labels (a silent
@@ -137,13 +138,12 @@ def labeled_features(pos: DataFrame, neg: DataFrame,
     Eagerly checkpointed: it is re-read every GD step, and a caller
     scoring the SAME corpus can pass it to :func:`score_quality` as
     ``features`` so the feature explode runs once, not twice."""
-    return (
+    return reuse(
         hashed_tf(pos, text_col, id_col, buckets)
         .withColumn("_y", F.lit(1.0))
         .unionByName(
             hashed_tf(neg, text_col, id_col, buckets)
             .withColumn("_y", F.lit(0.0)))
-        .localCheckpoint(eager=True)
     )
 
 

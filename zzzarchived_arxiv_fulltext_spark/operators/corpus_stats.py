@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import reuse
+
 
 def _words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(
@@ -291,20 +293,19 @@ def bigram_surprisal(df: DataFrame, text_col: str = "text",
     # ReuseExchange; column pruning gives the probe (with id) and the
     # agg branches (without) different canonical subtrees, so AQE
     # stage reuse cannot fire either — the executed plan ran
-    # scan+split+explode 3x. One eager localCheckpoint trades a local
+    # scan+split+explode 3x. One eager checkpoint trades a local
     # write of the pairs (~2 words/token, same order as the probe-side
     # shuffle the join needs anyway at scale) for two full
     # scan+split+explode re-evaluations. An explicit
     # repartition(w1,w2) variant — shared-exchange pattern — was also
     # measured: it did NOT dedupe (pruning, above) and benched slower
     # than this.
-    exploded = (
+    exploded = reuse(
         df.select(F.col(id_col).alias("id"),
                   F.split(F.col(text_col), " ").alias("_ws"))
         .where(F.size(ws) >= 2)
         .select("id", F.explode(pairs).alias("p"))
         .select("id", "p.w1", "p.w2")
-        .localCheckpoint(eager=True)
     )
     bigrams = exploded.groupBy("w1", "w2").agg(F.count("*").alias("bc"))
     unigrams = bigrams.groupBy("w1").agg(F.sum("bc").alias("uc"))
@@ -547,7 +548,7 @@ def lm_perplexity(train: DataFrame, score: DataFrame, lam: float = 0.7,
     # re-exploded per consumer. The reference corpus is the SMALL
     # side of this operator by construction (CCNet trains on trusted
     # text, scores the crawl), so its token pairs are materializable.
-    tp = pairs(train).localCheckpoint(eager=True)
+    tp = reuse(pairs(train))
     bigrams = (tp.where(F.col("prev").isNotNull())
                .groupBy("prev", "cur").agg(F.count("*").alias("bc")))
     contexts = bigrams.groupBy("prev").agg(F.sum("bc").alias("uc"))
@@ -587,7 +588,7 @@ def perplexity_buckets(scored: DataFrame, k: int = 3,
     # percentile_ranks triggers two bounded aggregate ACTIONS plus the
     # final join; without materialization each action recomputes the
     # whole upstream scoring pipeline (the LM joins) from scratch
-    scored = scored.localCheckpoint(eager=True)
+    scored = reuse(scored)
     ranked = percentile_ranks(scored, ppl_col, id_col=id_col,
                               rank_col="_pr", rounded=False)
     bucket = F.least(F.floor(F.col("_pr") * k) + 1, F.lit(k))
@@ -662,7 +663,7 @@ def bpe_train_merges(df: DataFrame, n_merges: int = 3,
     non-overlapping BPE pass — a run of identical (or empty) tokens
     pairs up without cascading. An earlier array-fold version copied
     the whole accumulator per element — O(n²) per document per round.
-    No growing lineage (localCheckpoint per round, same discipline as
+    No growing lineage (a checkpoint per round, same discipline as
     ``page_rank``). Adjacent pairs are counted WITH overlap (the
     common BPE implementation choice); the sentinel bytes are
     scrubbed from input text (they cannot occur in real tokens).
@@ -711,12 +712,12 @@ def bpe_train_merges(df: DataFrame, n_merges: int = 3,
             break
         l, r, c = top["l"], top["r"], int(top["c"])
         merges.append((rnd, l, r, c))
-        state = state.select(
+        state = reuse(state.select(
             "id",
             F.replace(F.col("seq"),
                       F.lit(B1 + l + B2 + B1 + r + B2),
                       F.lit(B1 + l + r + B2)).alias("seq"),
-        ).localCheckpoint()
+        ))
 
     return df.sparkSession.createDataFrame(
         merges, "round int, left string, right string, pair_count long")

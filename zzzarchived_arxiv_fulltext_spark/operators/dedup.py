@@ -23,6 +23,8 @@ engine-specific integer hashes.
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import reuse
+
 # --------------------------------------------------------------------------
 # exact dedup
 # --------------------------------------------------------------------------
@@ -682,8 +684,8 @@ def dedup_candidate_eval(
     counts true pairs banding missed (silent under-dedup, the number
     that matters).
     """
-    shingled = word_shingles(docs, n=n, text_col=text_col,
-                             id_col=id_col).localCheckpoint(eager=True)
+    shingled = reuse(word_shingles(docs, n=n, text_col=text_col,
+                                   id_col=id_col))
     # ^ consumed by the truth join (twice via exact_jaccard), the
     # signature aggregation, and the sizes aggregation, across THREE
     # actions (the two checkpoints below + the caller's) — without

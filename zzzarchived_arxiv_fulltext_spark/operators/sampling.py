@@ -531,7 +531,7 @@ def leakage_safe_split(
 
     Scale shape: the component fixpoint is the all-DataFrame label
     propagation from ``connected_keep_list`` (converges in
-    O(cluster diameter) rounds, bounded pair degree, localCheckpoint
+    O(cluster diameter) rounds, bounded pair degree, a checkpoint
     per round); the split itself stays a pure JVM projection of the
     cluster label. Returns ``df`` + (cluster, split) columns.
     """

@@ -39,7 +39,7 @@ from ..functions.extract import (
 )
 from ..functions.psv import normalize_text_psv
 from ..functions.quality import MAX_AVG_WORD_LENGTH, average_word_length
-from ..schema import DEFAULT_BUCKET, EXTRACT_RESULT
+from ..schema import DEFAULT_BUCKET
 
 # Struct returned per document by the thin UDF: cleaned text spans
 # (original text echoed back when the quality gate fails) + doc-level
@@ -57,14 +57,12 @@ _TEXT_RESULT = T.StructType(
 )
 
 
-def _extract_texts(texts, compute_psv: bool = True) -> dict:
+def _extract_texts(texts) -> dict:
     """Per-document decision tree over the ordered text-span strings.
 
     Identical semantics to ``functions.extract.extract_document`` —
     same helpers, same gate, same fallback — operating on the text
-    list the JVM already ordered by offset. ``compute_psv=False``
-    skips the PSV normalization stage (the dominant per-doc cost,
-    ~60%) for consumers that only need cleaned plain text.
+    list the JVM already ordered by offset.
     """
     raw = list(texts)
     primary = [_clean_primary(t or "") for t in raw]
@@ -81,7 +79,7 @@ def _extract_texts(texts, compute_psv: bool = True) -> dict:
         return {
             "texts": chosen,
             "plain_text": plain,
-            "psv_text": normalize_text_psv(plain) if compute_psv else None,
+            "psv_text": normalize_text_psv(plain),
             "status": STATUS_SUCCEEDED,
             "failure_class": None,
             "via": via,
@@ -101,13 +99,6 @@ def _extract_texts(texts, compute_psv: bool = True) -> dict:
 @pandas_udf(_TEXT_RESULT)
 def extract_texts_udf(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame([_extract_texts(doc) for doc in texts])
-
-
-@pandas_udf(_TEXT_RESULT)
-def extract_texts_no_psv_udf(texts: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame(
-        [_extract_texts(doc, compute_psv=False) for doc in texts]
-    )
 
 
 # JVM-side reassembly in two linear passes: (1) a prefix-count fold
@@ -159,14 +150,12 @@ def salt_column(parallelism: int, over: Optional[Column] = None) -> Column:
 
 
 def extract_documents(df: DataFrame,
-                      parallelism: Optional[int] = None,
-                      compute_psv: bool = True) -> DataFrame:
+                      parallelism: Optional[int] = None) -> DataFrame:
     """input (doc_id, spans) → extracted output columns.
 
     Plan shape: scan → [optional repartition(salt)] → sort+project
     (JVM) → pandas UDF over text arrays → JVM reassembly. Map-only
-    unless salting is requested. ``compute_psv=False`` emits a null
-    psv_text column and skips the PSV stage (~2x faster per doc).
+    unless salting is requested.
     """
     if parallelism is not None:
         df = df.repartition(parallelism, salt_column(parallelism))
@@ -181,11 +170,10 @@ def extract_documents(df: DataFrame,
     bucket = (
         F.col("bucket") if "bucket" in df.columns else F.lit(DEFAULT_BUCKET)
     )
-    udf = extract_texts_udf if compute_psv else extract_texts_no_psv_udf
     return (
         df.withColumn("_sorted_spans", sorted_spans)
         .withColumn("_ranks", F.expr(_RANKS))
-        .withColumn("_r", udf(texts_in))
+        .withColumn("_r", extract_texts_udf(texts_in))
         .select(
             "doc_id",
             bucket.alias("bucket"),
@@ -198,43 +186,6 @@ def extract_documents(df: DataFrame,
             F.col("_r.chars_extracted").alias("chars_extracted"),
             n_text.cast("int").alias("n_text_spans"),
             (F.size("spans") - n_text).cast("int").alias("n_media_spans"),
-            F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
-            started.alias("started"),
-            F.current_timestamp().alias("ended"),
-            F.spark_partition_id().alias("partition_id"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Reference variant: full span structs through Arrow (kept for A/B
-# comparison and as the simpler-to-audit path; same results).
-# ---------------------------------------------------------------------------
-
-
-@pandas_udf(EXTRACT_RESULT)
-def extract_spans_udf(spans: pd.Series) -> pd.DataFrame:
-    """Batch of raw span-struct arrays → extraction result structs."""
-    from ..functions.extract import extract_document
-
-    return pd.DataFrame([extract_document(doc) for doc in spans])
-
-
-def extract_documents_struct(df: DataFrame,
-                             parallelism: Optional[int] = None) -> DataFrame:
-    """Struct-transport variant of :func:`extract_documents`."""
-    if parallelism is not None:
-        df = df.repartition(parallelism, salt_column(parallelism))
-    bucket = (
-        F.col("bucket") if "bucket" in df.columns else F.lit(DEFAULT_BUCKET)
-    )
-    started = F.current_timestamp()
-    return (
-        df.withColumn("result", extract_spans_udf(F.col("spans")))
-        .select(
-            "doc_id",
-            bucket.alias("bucket"),
-            "result.*",
             F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
             started.alias("started"),
             F.current_timestamp().alias("ended"),

@@ -14,7 +14,7 @@ heuristic runs. These operators implement that family Spark-first:
   so AQE broadcasts it;
 - PageRank is the all-DataFrame iterative pattern (same shape as
   ``plans/dedup_job.connected_keep_list``): per-iteration rank frame,
-  localCheckpoint every round to cut lineage, convergence on
+  a checkpoint every round to cut lineage, convergence on
   materialized data; NO driver-side graph, NO GraphX/RDDs.
 """
 
@@ -22,6 +22,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..materialize import reuse
 
 # scheme://[userinfo@]host[:port]/path — host is group 1, path group 2.
 # The optional non-capturing userinfo segment matters for safety:
@@ -307,7 +309,7 @@ def hits_scores(edges: DataFrame, iterations: int = 5,
     ``first()`` collect — a driver action per half-step forced every
     round to materialize eagerly (2 jobs per iteration of pure
     scheduling overhead on small graphs, and a driver round-trip at
-    any scale). ``localCheckpoint`` every second iteration still
+    any scale). A checkpoint every second iteration still
     bounds lineage/planning depth for long runs. Returns (node, auth,
     hub) for every node.
     """
@@ -316,7 +318,7 @@ def hits_scores(edges: DataFrame, iterations: int = 5,
     src = F.col(src_col).alias("node")
     dst = F.col(dst_col).alias("node")
     nodes = edges.select(src).unionByName(edges.select(dst)).distinct()
-    nodes = nodes.localCheckpoint(eager=True)
+    nodes = reuse(nodes)
 
     def _spread(scores: DataFrame, score_col: str, from_col: str,
                 to_col: str, out_col: str) -> DataFrame:
@@ -343,8 +345,7 @@ def hits_scores(edges: DataFrame, iterations: int = 5,
         # is materialized once per iteration (otherwise its subtree is
         # evaluated twice per round); hubs feeds only the next round's
         # auth and needs no checkpoint between actions.
-        auth = _spread(hubs, "hub", src_col, dst_col, "auth") \
-            .localCheckpoint(eager=True)
+        auth = reuse(_spread(hubs, "hub", src_col, dst_col, "auth"))
         hubs = _spread(auth, "auth", dst_col, src_col, "hub")
     return auth.join(hubs, on="node")
 
@@ -360,7 +361,7 @@ def page_rank(edges: DataFrame, iterations: int = 10,
     along edges, new rank = (1-d)/N + d * (received + dangling/N).
     Dangling mass (nodes with no outlinks) is redistributed uniformly,
     so total rank is conserved at every iteration. Each round is one
-    equi-join + one aggregation; ``localCheckpoint`` cuts lineage per
+    equi-join + one aggregation; a checkpoint cuts lineage per
     round (the keep-list pattern — no driver-side graph, works at
     edge counts that only fit distributed).
 
@@ -369,7 +370,7 @@ def page_rank(edges: DataFrame, iterations: int = 10,
     src = F.col(src_col).alias("node")
     dst = F.col(dst_col).alias("node")
     nodes = edges.select(src).unionByName(edges.select(dst)).distinct()
-    nodes = nodes.localCheckpoint(eager=True)
+    nodes = reuse(nodes)
     n_nodes = nodes.count()
     if not n_nodes:
         # empty link graph (e.g. a corpus slice without http links):
@@ -384,7 +385,7 @@ def page_rank(edges: DataFrame, iterations: int = 10,
     dangling_nodes = nodes.join(out_deg, on="node", how="left_anti")
     has_dangling = bool(dangling_nodes.head(1))
     if has_dangling:
-        dangling_nodes = dangling_nodes.localCheckpoint(eager=True)
+        dangling_nodes = reuse(dangling_nodes)
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
     for it in range(iterations):
@@ -426,7 +427,7 @@ def page_rank(edges: DataFrame, iterations: int = 10,
         # checkpoint every round would only add a scheduling job; keep
         # one every 4 rounds purely to bound plan depth.
         if has_dangling or (it + 1) % 4 == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = reuse(ranks)
     return ranks
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import reuse
 from ..operators.dedup import near_duplicates_minhash
 from ..operators.redact import redact_text
 from ..operators.sampling import hash_split
@@ -113,16 +114,14 @@ def corpus_prep_funnel(
     # the d_exact branch also reads it, MEASURED WORSE — 2.8 vs 2.4 s
     # min — the wider pre-filter materialization costs more than the
     # one cheap scan+window recompute it saves.)
-    s3 = s2r.where(F.col("_rn") == 1).drop("_rn") \
-        .localCheckpoint(eager=True)
+    s3 = reuse(s2r.where(F.col("_rn") == 1).drop("_rn"))
 
     pairs = near_duplicates_minhash(
         s3.select("doc_id", "text"), threshold=near_threshold,
         num_hashes=num_hashes, bands=bands,
     )
-    near_ids = (
+    near_ids = reuse(
         pairs.select(F.col("id_b").alias("doc_id")).distinct()
-        .localCheckpoint(eager=True)
     )
     d_near = s3.join(near_ids, on="doc_id", how="left_semi").select(
         "doc_id", F.lit(STAGE_NEAR).alias("stage"))
@@ -153,7 +152,7 @@ def run_corpus_prep(
     The funnel DAG (including the whole MinHash/LSH pipeline) is
     MATERIALIZED EXACTLY ONCE: committed to ``funnel_table`` first and
     read back for the kept-join and the counts (the write-once-read-
-    committed pattern ``run_dedup`` uses), or localCheckpoint'ed when
+    committed pattern ``run_dedup`` uses), or materialized with ``reuse`` when
     no funnel table is given. Without this, each downstream action
     would re-run shingling + signatures + the bucket join.
     """
@@ -162,7 +161,7 @@ def run_corpus_prep(
         funnel_snap = funnel_table.append(funnel)
         funnel = funnel_table.read_snapshot(spark, funnel_snap)
     else:
-        funnel = funnel.localCheckpoint()
+        funnel = reuse(funnel)
     kept = (
         docs.join(funnel.where(F.col("stage").startswith("kept_")),
                   on="doc_id")

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import types as T
 
+from ..materialize import reuse
 from ..operators.weblinks import crawl_frontier_batches, filter_blocked_domains
 from ..sources.http_fetch import FETCH_SCHEMA, fetch_documents
 from ..sources.ingest_router import raw_to_spans
@@ -108,10 +109,10 @@ def run_crawl_cycle(
     counts["scheduled"] = scheduled.count()
 
     already = bool(commit_meta) and fetch_log.has_meta(commit_meta)
-    fetched = fetch_documents(
+    fetched = reuse(fetch_documents(
         scheduled, fetcher=fetcher, host_delay=host_delay,
         fetch_partitions=fetch_partitions, max_bytes=max_bytes,
-    ).localCheckpoint(eager=True)  # fetch exactly once per cycle
+    ))  # fetch exactly once per cycle
     counts["fetch_ok"] = fetched.where(
         F.col("failure_class").isNull()).count()
     counts["fetch_failed"] = fetched.where(

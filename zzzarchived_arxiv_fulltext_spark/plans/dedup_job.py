@@ -13,6 +13,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import reuse
 from ..operators.dedup import exact_duplicate_groups, near_duplicates_minhash
 from ..sources.tables import SnapshotTable
 
@@ -60,7 +61,7 @@ def connected_keep_list(pairs: DataFrame, corpus: DataFrame,
     neighbors; converges in O(cluster diameter) rounds. All DataFrame
     ops — no driver-side union-find, so 10^9 pairs behave.
     """
-    edges = (
+    edges = reuse(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("id_b").alias("src"),
@@ -72,7 +73,6 @@ def connected_keep_list(pairs: DataFrame, corpus: DataFrame,
         # (shingle -> minhash -> LSH -> verify) from scratch — measured
         # ~2.5s/round saved on the bench corpus (guide §5: cut lineage
         # when an intermediate is reused)
-        .localCheckpoint(eager=True)
     )
     labels = corpus.select(
         F.col(id_col).alias("id"), F.col(id_col).alias("label")
@@ -86,7 +86,7 @@ def connected_keep_list(pairs: DataFrame, corpus: DataFrame,
         # carry the previous label through the checkpoint so the
         # convergence check is a filter on MATERIALIZED data — one
         # action per iteration, no recompute, no second join
-        updated = (
+        updated = reuse(
             labels.join(neighbor_min, on="id", how="left")
             .select(
                 "id",
@@ -96,7 +96,6 @@ def connected_keep_list(pairs: DataFrame, corpus: DataFrame,
                     F.coalesce(F.col("nbr_label"), F.col("label")),
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)  # cut lineage growth
         )
         changed = updated.where("label != _prev").limit(1).count()
         labels = updated.drop("_prev")

@@ -30,6 +30,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import reuse
 from ..operators.dedup import (
     DEFAULT_MAX_BUCKET_SIZE,
     exact_jaccard,
@@ -116,8 +117,8 @@ def run_dedup_incremental(
     # each consumer re-shingles and re-signs the whole delta.
     shingled_delta = word_shingles(delta, n=n, text_col=text_col,
                                    id_col=id_col)
-    sigs = minhash_signatures(
-        shingled_delta, num_hashes=num_hashes).localCheckpoint(eager=True)
+    sigs = reuse(minhash_signatures(
+        shingled_delta, num_hashes=num_hashes))
     rows_per_band = num_hashes // bands
     delta_buckets = _band_buckets(sigs, bands, rows_per_band)
 
@@ -138,7 +139,7 @@ def run_dedup_incremental(
                 if commit_meta else bucket_table.read(spark))
         cross_delta, cross_hist = delta_buckets, hist
         if max_bucket_size is not None:
-            hot = (
+            hot = reuse(
                 cross_delta.groupBy("band", "bucket")
                 .agg(F.count("*").alias("_n"))
                 .unionByName(cross_hist.groupBy("band", "bucket")
@@ -148,7 +149,6 @@ def run_dedup_incremental(
                 .where(F.col("_n") > max_bucket_size)
                 .select("band", "bucket")
                 # bounded by (delta+history) / max_bucket_size rows
-                .localCheckpoint(eager=True)
             )
             cross_delta = cross_delta.join(
                 F.broadcast(hot), on=["band", "bucket"], how="left_anti")
@@ -172,7 +172,7 @@ def run_dedup_incremental(
     # candidates feed BOTH the id-set for bounded re-shingling and the
     # final exact-Jaccard join; materialize once (bounded by candidate
     # count) instead of re-running the LSH joins per consumer.
-    candidates = candidates.localCheckpoint(eager=True)
+    candidates = reuse(candidates)
 
     # exact verify: shingle ONLY candidate docs — the delta side is
     # semi-joined down to candidate ids BEFORE word_shingles (a join
@@ -202,7 +202,7 @@ def run_dedup_incremental(
 
     verified = exact_jaccard(shingled_all, candidates).where(
         F.col("jaccard") >= threshold)
-    verified = verified.localCheckpoint(eager=True)
+    verified = reuse(verified)
 
     if not _already_committed(bucket_table):
         bucket_table.append(delta_buckets, meta=commit_meta)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import reuse
 from ..operators.similarity import assign_nearest_centroid, cosine
 from ..sources.tables import SnapshotTable
 
@@ -64,7 +65,8 @@ def run_semdedup_incremental(
     delta×history members sharing a cluster; commits the delta's
     (id, centroid_id, embedding) rows for the next increment."""
     schema = index_schema(delta, id_col)
-    assigned = (
+    # reused: pairs + sizes + append
+    assigned = reuse(
         assign_nearest_centroid(delta, centroids, vec_col=vec_col,
                                 id_col=id_col)
         .select(F.col(id_col).alias("vec_id"), "centroid_id")
@@ -72,7 +74,6 @@ def run_semdedup_incremental(
                            F.col(vec_col).cast("array<double>")
                            .alias("embedding")),
               on="vec_id")
-        .localCheckpoint(eager=True)  # reused: pairs + sizes + append
     )
 
     if index_table.snapshots():
@@ -84,7 +85,7 @@ def run_semdedup_incremental(
 
     d, h = assigned, hist
     if max_cluster_size is not None:
-        ok = (
+        ok = reuse(
             d.groupBy("centroid_id").agg(F.count("*").alias("_n"))
             .unionByName(
                 h.groupBy("centroid_id").agg(F.count("*").alias("_n")))
@@ -92,7 +93,6 @@ def run_semdedup_incremental(
             .where(F.col("_n") <= max_cluster_size)
             .select("centroid_id")
             # bounded by n_members / 1 rows, tiny in practice
-            .localCheckpoint(eager=True)
         )
         d = d.join(F.broadcast(ok), on="centroid_id")
         h = h.join(F.broadcast(ok), on="centroid_id")
@@ -125,6 +125,6 @@ def run_semdedup_incremental(
 
     already = bool(commit_meta) and index_table.has_meta(commit_meta)
     if not already:
-        pairs = pairs.localCheckpoint(eager=True)  # before the append
+        pairs = reuse(pairs)  # before the append
         index_table.append(assigned, meta=commit_meta)
     return pairs

@@ -26,6 +26,7 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import reuse
 from ..operators.corpus_stats import bpe_encode
 from ..operators.sampling import pack_sequences
 from ..sources.tables import SnapshotTable
@@ -43,7 +44,7 @@ def run_training_batch_prep(
     commit_meta: Optional[dict] = None,
 ) -> Dict[str, int]:
     """Encode + pack ``docs``; commit sequences; return the funnel."""
-    encoded = (
+    encoded = reuse(
         bpe_encode(docs, merges, text_col=text_col, id_col=id_col)
         .select(
             F.col(id_col),
@@ -51,16 +52,15 @@ def run_training_batch_prep(
             F.col("n_bpe_tokens"),
         )
         # two consumers (funnel count + packing) — one encode pass
-        .localCheckpoint(eager=True)
     )
     counts: Dict[str, int] = {"docs": encoded.count()}
     counts["bpe_tokens"] = (
         encoded.agg(F.sum("n_bpe_tokens")).collect()[0][0] or 0)
 
-    seqs = pack_sequences(
+    seqs = reuse(pack_sequences(
         encoded, seq_len=seq_len, text_col="_enc", id_col=id_col,
         seed=seed,
-    ).localCheckpoint(eager=True)
+    ))
     agg = seqs.agg(
         F.count("*").alias("n"),
         F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t"),

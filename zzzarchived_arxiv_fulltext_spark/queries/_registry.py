@@ -18,8 +18,6 @@ correctness evidence the harness can record for the UDF path.
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -34,23 +32,6 @@ def _register(name: str, oracle: str | None = None):
             ORACLES[name] = oracle
         return fn
     return deco
-
-
-def _sorted(df: DataFrame, *cols) -> DataFrame:
-    """``orderBy`` with the input materialized first.
-
-    A global sort range-partitions, and computing the range bounds
-    SAMPLES the child plan — i.e. the whole query subtree executes
-    twice (once for bounds, once for real). For a query whose
-    pipeline is expensive relative to its result size, one eager
-    localCheckpoint halves the work (measured 4.6s -> 3.0s on
-    semdedup_pairs); result rows are identical, only the final sort's
-    input is materialized. Use for expensive pipelines with bounded
-    outputs — a cheap projection query should keep a plain orderBy.
-    (The inline form ``.localCheckpoint(True).orderBy(...)`` used
-    across the family modules is the same pattern.)
-    """
-    return df.localCheckpoint(eager=True).orderBy(*cols)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import sorted_output
 from ._registry import ORACLES, QUERIES, _docs, _events, _register
 from .q_textstats import _planted_ann_inputs  # noqa: E402
 from .q_temporal import _NEAR_TAIL  # noqa: E402
@@ -750,7 +751,7 @@ def q_html_interleaved_spans(spark: SparkSession,
     texts = F.expr(
         "transform(filter(spans, s -> s.kind = 'text'), s -> s.text)")
     media = F.expr("filter(spans, s -> s.kind = 'media')")
-    return (
+    return sorted_output(
         spans.join(docs, on="doc_id")
         .select(
             "doc_id",
@@ -760,9 +761,8 @@ def q_html_interleaved_spans(spark: SparkSession,
             .alias("media_offset"),
             (F.array_join(texts, " ") == F.col("text"))
             .cast("int").alias("text_ok"),
-        )
-        .localCheckpoint(True).orderBy("doc_id")
-    )
+        ),
+        "doc_id")
 
 
 @_register(
@@ -813,7 +813,7 @@ def q_pdf_interleaved_spans(spark: SparkSession,
         raw.select(F.col("doc_id").cast("string").alias("doc_id"), "pdf"))
     texts = F.expr(
         "transform(filter(spans, s -> s.kind = 'text'), s -> s.text)")
-    return (
+    return sorted_output(
         spans.select(F.col("doc_id").cast("long").alias("doc_id"), "spans")
         .join(raw.select("doc_id", "expected"), on="doc_id")
         .select(
@@ -825,9 +825,8 @@ def q_pdf_interleaved_spans(spark: SparkSession,
             .cast("long").alias("n_media_spans"),
             (F.array_join(texts, "\n") == F.col("expected"))
             .cast("int").alias("text_ok"),
-        )
-        .localCheckpoint(True).orderBy("doc_id")
-    )
+        ),
+        "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -890,15 +889,14 @@ def q_media_caption_contexts(spark: SparkSession,
                'offset', 2 * k)))))
     """)
     built = docs.select("doc_id", spans.alias("spans"))
-    return (
+    return sorted_output(
         media_caption_contexts(built)
         .select(
             "doc_id", "media_ref",
             F.col("media_offset").cast("long").alias("media_offset"),
             "text_before", "text_after",
-        )
-        .localCheckpoint(True).orderBy("doc_id", "media_offset")
-    )
+        ),
+        "doc_id", "media_offset")
 
 
 @_register(
@@ -961,7 +959,7 @@ def q_media_boilerplate_filter(spark: SparkSession,
         "transform(filter(spans, s -> s.kind = 'text'), s -> s.text)")
     media_refs = F.expr(
         "transform(filter(spans, s -> s.kind = 'media'), s -> s.media_ref)")
-    return (
+    return sorted_output(
         out.join(docs, on="doc_id")
         .select(
             "doc_id",
@@ -970,9 +968,8 @@ def q_media_boilerplate_filter(spark: SparkSession,
             F.element_at(media_refs, 1).alias("kept_media_ref"),
             (F.array_join(texts, " ") == F.array_join("_w", " "))
             .cast("int").alias("text_ok"),
-        )
-        .localCheckpoint(True).orderBy("doc_id")
-    )
+        ),
+        "doc_id")
 
 
 @_register(
@@ -1060,15 +1057,14 @@ def q_span_extraction_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("doc_id",
                    spans("doc_id % 3 = 0", "doc_id % 5 = 0", 100)
                    .alias("spans")))
-    return (
+    return sorted_output(
         span_extraction_diff(old, new)
         .select(
             "doc_id", "status", "n_spans_old", "n_spans_new",
             "common_prefix", "n_common", "n_added", "n_removed",
             F.col("text_changed").cast("int").alias("text_changed"),
-        )
-        .localCheckpoint(True).orderBy("doc_id")
-    )
+        ),
+        "doc_id")
 
 
 @_register(
@@ -1157,4 +1153,4 @@ def q_quality_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = docs.where(F.col("doc_id") % 10 != 0).select(
         (F.col("doc_id") - F.col("doc_id") % 10).alias("id_a"),
         F.col("doc_id").alias("id_b"))
-    return quality_keep_list(pairs, docs, "score").localCheckpoint(True).orderBy("id")
+    return sorted_output(quality_keep_list(pairs, docs, "score"), "id")

@@ -8,7 +8,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._registry import ORACLES, QUERIES, _docs, _events, _register, _sorted
+from ..materialize import sorted_output
+from ._registry import ORACLES, QUERIES, _docs, _events, _register
 from .q_textstats import _DECON_ORACLE  # noqa: E402
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -169,7 +170,7 @@ def q_global_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("shared "), (F.col("doc_id") % 7).cast("string")),
         F.lit("tail line"))
     docs = _docs(spark, sf_dir).select("doc_id", planted.alias("text"))
-    return dedup_lines_global(docs).localCheckpoint(True).orderBy("doc_id")
+    return sorted_output(dedup_lines_global(docs), "doc_id")
 
 
 @_register(
@@ -311,8 +312,9 @@ def q_lm_perplexity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     train = docs.where(F.col("doc_id") % 4 == 0)
     score = docs.where(F.col("doc_id") % 4 == 2)
-    return (lm_perplexity(train, score, lam=0.7)
-            .withColumnRenamed("id", "doc_id").localCheckpoint(True).orderBy("doc_id"))
+    return sorted_output(
+        lm_perplexity(train, score, lam=0.7).withColumnRenamed("id", "doc_id"),
+        "doc_id")
 
 
 @_register(
@@ -340,8 +342,9 @@ def q_ccnet_perplexity_buckets(spark: SparkSession,
     train = docs.where(F.col("doc_id") % 4 == 0)
     score = docs.where(F.col("doc_id") % 4 == 2)
     scored = lm_perplexity(train, score, lam=0.7)
-    return (perplexity_buckets(scored, k=3)
-            .withColumnRenamed("id", "doc_id").localCheckpoint(True).orderBy("doc_id"))
+    return sorted_output(
+        perplexity_buckets(scored, k=3).withColumnRenamed("id", "doc_id"),
+        "doc_id")
 
 
 @_register(
@@ -372,8 +375,8 @@ def q_robots_noindex_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</p></body></html>"))
     docs = _docs(spark, sf_dir).select(
         "doc_id", "lang", page.alias("html"))
-    return (drop_noindex_pages(docs)
-            .select("doc_id", "lang").localCheckpoint(True).orderBy("doc_id"))
+    return sorted_output(
+        drop_noindex_pages(docs).select("doc_id", "lang"), "doc_id")
 
 
 @_register(
@@ -999,12 +1002,11 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in emb.where(F.col("vec_id") < 8)
         .orderBy("vec_id").collect()
     ]
-    return (
+    return sorted_output(
         assign_nearest_centroid(emb, cents)
         .select("vec_id", F.col("centroid_id").cast("long")
-                .alias("centroid_id"))
-        .localCheckpoint(True).orderBy("vec_id")
-    )
+                .alias("centroid_id")),
+        "vec_id")
 
 
 @_register(
@@ -1067,7 +1069,7 @@ def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in emb.where(F.col("vec_id") < 8)
         .orderBy("vec_id").collect()
     ]
-    return _sorted(
+    return sorted_output(
         semantic_near_duplicates(allv, cents, threshold=0.9,
                                  pair_engine="blas")
         .select(F.col("id_a").cast("long").alias("id_a"),
@@ -1123,7 +1125,7 @@ def q_hashed_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0), lambda acc, x: acc + x)
     nnz = F.size(F.filter(v, lambda x: x > 0))
     norm_sq = F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
-    return _sorted(vecs.select(
+    return sorted_output(vecs.select(
         "doc_id",
         nnz.cast("long").alias("nnz"),
         F.round(norm_sq, 6).alias("unit_norm_sq"),
@@ -1178,5 +1180,7 @@ def q_stupid_backoff_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     train = docs.where(F.col("doc_id") % 4 == 0)
     score = docs.where(F.col("doc_id") % 4 == 2)
-    return (stupid_backoff_scores(train, score, alpha=0.4)
-            .withColumnRenamed("id", "doc_id").localCheckpoint(True).orderBy("doc_id"))
+    return sorted_output(
+        stupid_backoff_scores(train, score, alpha=0.4)
+        .withColumnRenamed("id", "doc_id"),
+        "doc_id")

@@ -8,7 +8,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._registry import ORACLES, QUERIES, _docs, _events, _register, _sorted
+from ..materialize import sorted_output
+from ._registry import ORACLES, QUERIES, _docs, _events, _register
 from .q_textpipe import _pair_corpus  # noqa: E402
 from .q_textpipe import _SHINGLE_SQL  # noqa: E402
 
@@ -152,12 +153,12 @@ def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = quantize_embeddings(emb)
-    return out.select(
+    return sorted_output(out.select(
         "vec_id",
         F.array_max(F.transform("qvec", lambda x: F.abs(x)))
         .alias("max_abs_q"),
         "rmse",
-    ).localCheckpoint(True).orderBy("vec_id")
+    ), "vec_id")
 
 
 @_register(
@@ -260,8 +261,8 @@ def q_script_profile_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.repeat(F.lit("ж"), (F.col("doc_id") % 4).cast("int")),
         F.repeat(F.lit("中"), (F.col("doc_id") % 3).cast("int")))
     docs = _docs(spark, sf_dir).select("doc_id", planted.alias("text"))
-    return (script_profile(docs)
-            .withColumnRenamed("id", "doc_id").localCheckpoint(True).orderBy("doc_id"))
+    return sorted_output(
+        script_profile(docs).withColumnRenamed("id", "doc_id"), "doc_id")
 
 
 @_register(
@@ -445,7 +446,7 @@ def q_duplicated_window_coverage(spark: SparkSession,
                    F.lit(_DUPWIN_TAIL)).otherwise(F.lit("")),
         ).alias("text"),
     )
-    return _sorted(duplicated_window_coverage(docs, n=5), "doc_id")
+    return sorted_output(duplicated_window_coverage(docs, n=5), "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -554,7 +555,7 @@ def q_exact_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.lit(_DUPWIN_TAIL)).otherwise(F.lit("")),
         ).alias("text"),
     )
-    return _sorted(cut_duplicated_windows(docs, n=5), "doc_id")
+    return sorted_output(cut_duplicated_windows(docs, n=5), "doc_id")
 
 
 def _dedup_eval_sql() -> str:
@@ -660,5 +661,5 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.lit(" p q")).otherwise(F.lit("")),
         ).alias("text"),
     )
-    return tokenizer_fertility(
-        docs, [("p", "q"), ("pq", "r")]).localCheckpoint(True).orderBy("lang")
+    return sorted_output(
+        tokenizer_fertility(docs, [("p", "q"), ("pq", "r")]), "lang")

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import sorted_output
 from ._registry import ORACLES, QUERIES, _docs, _events, _register
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -403,12 +404,11 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") - F.col("doc_id") % 10).alias("id_a"),
         F.col("doc_id").alias("id_b"),
     )
-    return (
+    return sorted_output(
         leakage_safe_split(
             docs, pairs, {"train": 0.8, "val": 0.1, "test": 0.1})
-        .select("doc_id", "cluster", "split")
-        .localCheckpoint(True).orderBy("doc_id")
-    )
+        .select("doc_id", "cluster", "split"),
+        "doc_id")
 
 
 @_register(
@@ -457,7 +457,5 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     target = docs.where(F.col("doc_id") % 10 == 0)
-    return (
-        dsir_importance_weights(docs, target, buckets=64)
-        .localCheckpoint(True).orderBy("doc_id")
-    )
+    return sorted_output(
+        dsir_importance_weights(docs, target, buckets=64), "doc_id")

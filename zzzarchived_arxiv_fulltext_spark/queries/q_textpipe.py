@@ -8,7 +8,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._registry import ORACLES, QUERIES, _docs, _events, _register, _sorted
+from ..materialize import reuse, sorted_output
+from ._registry import ORACLES, QUERIES, _docs, _events, _register
 
 __all__ = ["QUERIES", "ORACLES"]
 
@@ -673,8 +674,8 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersection join; all_pairs feeds candidate_ids (twice via the
     # narrowed self-join) plus a semi-join — without materialization
     # the scan+explode subtree is replicated ~14x in the plan.
-    sh = word_shingles(docs, n=3).localCheckpoint(True)
-    all_pairs = (
+    sh = reuse(word_shingles(docs, n=3))
+    all_pairs = reuse(
         sh.alias("a").join(
             sh.alias("b"),
             (F.col("a.shingle") == F.col("b.shingle"))
@@ -682,7 +683,6 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
-        .localCheckpoint(True)
     )
     return exact_jaccard(sh, all_pairs).select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
@@ -759,7 +759,7 @@ def q_reference_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-block path emits nothing."""
     from ..operators.references import reference_entries
 
-    return _sorted(
+    return sorted_output(
         reference_entries(_planted_refs_docs(spark, sf_dir)),
         "doc_id", "ref_idx",
     )
@@ -837,8 +837,7 @@ def q_section_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                               cast(j as string))), '\n'))))
         """).alias("text"),
     )
-    return (
+    return sorted_output(
         section_segments(planted)
-        .select("doc_id", "sec_idx", "heading", "n_lines", "n_words")
-        .localCheckpoint(True).orderBy("doc_id", "sec_idx")
-    )
+        .select("doc_id", "sec_idx", "heading", "n_lines", "n_words"),
+        "doc_id", "sec_idx")

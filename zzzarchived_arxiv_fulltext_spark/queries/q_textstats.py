@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import sorted_output
 from ._registry import ORACLES, QUERIES, _docs, _events, _register
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -386,7 +387,7 @@ def q_latex_math_density(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(r"repeat(' \\alpha', cast(doc_id % 5 as int))"),
         ).alias("text"),
     )
-    return latex_math_stats(planted).localCheckpoint(True).orderBy("doc_id")
+    return sorted_output(latex_math_stats(planted), "doc_id")
 
 
 @_register(
@@ -481,8 +482,7 @@ def q_quality_classifier_scores(spark: SparkSession,
     feats = labeled_features(pos, neg, buckets=16)
     w, b = train_quality_classifier(pos, neg, buckets=16, steps=2,
                                     lr=1.0, labeled=feats)
-    return score_quality(docs, w, b, features=feats) \
-        .localCheckpoint(True).orderBy("doc_id")
+    return sorted_output(score_quality(docs, w, b, features=feats), "doc_id")
 
 
 @_register(
@@ -531,8 +531,8 @@ def q_kmv_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
                      lambda t: t != F.lit(""))
         ).alias("tok"),
     )
-    return kmv_distinct(toks, "tok", k=64,
-                        group_cols=["lang"]).localCheckpoint(True).orderBy("lang")
+    return sorted_output(
+        kmv_distinct(toks, "tok", k=64, group_cols=["lang"]), "lang")
 
 
 @_register(
@@ -589,8 +589,8 @@ def q_cm_sketch_heavy_hitters(spark: SparkSession,
         F.col("tok").isin("a", "the", "row", "spark", "zzzz_absent")
     ).unionByName(
         spark.createDataFrame([("zzzz_absent",)], "tok string"))
-    return cm_estimate(sketch, probes, "tok", width=512,
-                       depth=4).localCheckpoint(True).orderBy("item")
+    return sorted_output(
+        cm_estimate(sketch, probes, "tok", width=512, depth=4), "item")
 
 
 @_register(

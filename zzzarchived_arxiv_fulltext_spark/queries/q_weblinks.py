@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..materialize import sorted_output
 from ._registry import ORACLES, QUERIES, _docs, _events, _register
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -71,7 +72,7 @@ def q_url_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.weblinks import domain_stats
 
     wu = _docs(spark, sf_dir).withColumn("url", _planted_url())
-    return domain_stats(wu).localCheckpoint(True).orderBy("domain")
+    return sorted_output(domain_stats(wu), "domain")
 
 
 @_register(
@@ -92,8 +93,8 @@ def q_blocked_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     wu = _docs(spark, sf_dir).select("doc_id", _planted_url().alias("url"))
     bl = spark.createDataFrame(
         [("site0.com",), ("blog.site1.org",)], ["blocked_domain"])
-    return (filter_blocked_domains(wu, bl)
-            .select("doc_id").localCheckpoint(True).orderBy("doc_id"))
+    return sorted_output(
+        filter_blocked_domains(wu, bl).select("doc_id"), "doc_id")
 
 
 def _pagerank_sql(iterations: int = 3, n: int = 25, d: float = 0.85) -> str:
@@ -168,16 +169,17 @@ def q_domain_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("src"), ((F.col("id") * 2 + 1) % 25).alias("dst")
     ).unionByName(spark.range(25).select(
         F.col("id").alias("src"), ((F.col("id") * 3 + 2) % 25).alias("dst")))
-    return (hits_scores(edges, iterations=2)
-            .select("node", F.round("auth", 6).alias("auth"),
-                    F.round("hub", 6).alias("hub"))
-            .localCheckpoint(True).orderBy("node"))
+    return sorted_output(
+        hits_scores(edges, iterations=2)
+        .select("node", F.round("auth", 6).alias("auth"),
+                F.round("hub", 6).alias("hub")),
+        "node")
 
 
 @_register("domain_pagerank", _pagerank_sql())
 def q_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link-graph PageRank (domain quality weighting) — all-DataFrame
-    iterative with per-round localCheckpoint, no driver-side graph.
+    iterative with a per-round checkpoint, no driver-side graph.
     Planted 25-node graph; oracle is the unrolled 3-step fixpoint."""
     from ..operators.weblinks import page_rank
 
@@ -185,9 +187,10 @@ def q_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("src"), ((F.col("id") * 2 + 1) % 25).alias("dst")
     ).unionByName(spark.range(25).select(
         F.col("id").alias("src"), ((F.col("id") * 3 + 2) % 25).alias("dst")))
-    return (page_rank(edges, iterations=3)
-            .select("node", F.round("rank", 6).alias("rank"))
-            .localCheckpoint(True).orderBy("node"))
+    return sorted_output(
+        page_rank(edges, iterations=3)
+        .select("node", F.round("rank", 6).alias("rank")),
+        "node")
 
 
 @_register(
@@ -222,7 +225,7 @@ def q_mojibake_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(F.lit(" Ã©x"), F.lit(" â€œy Â z"), F.lit("")),
             (F.col("doc_id") % 3 + 1).cast("int"))),
     )
-    return mojibake_score(docs).localCheckpoint(True).orderBy("doc_id")
+    return sorted_output(mojibake_score(docs), "doc_id")
 
 
 @_register(
@@ -256,7 +259,7 @@ def q_normalized_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = docs.select(F.col("doc_id").alias("doc_id"), "text").unionByName(
         docs.select((F.col("doc_id") + 10000000).alias("doc_id"),
                     F.upper("text").alias("text")))
-    return drop_normalized_duplicates(u).localCheckpoint(True).orderBy("id")
+    return sorted_output(drop_normalized_duplicates(u), "id")
 
 
 @_register(
@@ -396,9 +399,10 @@ def q_gopher_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(" ### ### ###"),
         ), (F.col("doc_id") % 4 + 1).cast("int"))),
     )
-    return (gopher_quality_signals(docs)
-            .withColumn("passes", F.col("passes").cast("int"))
-            .localCheckpoint(True).orderBy("doc_id"))
+    return sorted_output(
+        gopher_quality_signals(docs)
+        .withColumn("passes", F.col("passes").cast("int")),
+        "doc_id")
 
 
 @_register(
@@ -431,7 +435,7 @@ def q_c4_line_cleaning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("\nJavascript is required to view. lorem ipsum"),
         ), (F.col("doc_id") % 3 + 1).cast("int"))),
     )
-    return c4_line_filter(docs).localCheckpoint(True).orderBy("doc_id")
+    return sorted_output(c4_line_filter(docs), "doc_id")
 
 
 @_register(
@@ -500,8 +504,8 @@ def q_domain_doc_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wu = _docs(spark, sf_dir).select(
         "doc_id", _planted_url().alias("url"))
-    return (cap_docs_per_domain(wu, 7)
-            .select("doc_id", "domain").localCheckpoint(True).orderBy("doc_id"))
+    return sorted_output(
+        cap_docs_per_domain(wu, 7).select("doc_id", "domain"), "doc_id")
 
 
 @_register(
@@ -567,7 +571,7 @@ def q_html_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pages = _docs(spark, sf_dir).select(
         "doc_id", _planted_url().alias("url"), html.alias("html"))
-    return link_graph(pages).localCheckpoint(True).orderBy("src", "dst")
+    return sorted_output(link_graph(pages), "src", "dst")
 
 
 @_register(
@@ -609,7 +613,7 @@ def q_anchor_text_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pages = _docs(spark, sf_dir).select(
         "doc_id", _planted_url().alias("url"), html.alias("html"))
-    return anchor_text_pairs(pages).localCheckpoint(True).orderBy("doc_id", "target")
+    return sorted_output(anchor_text_pairs(pages), "doc_id", "target")
 
 
 @_register(
@@ -648,7 +652,7 @@ def q_corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[c for c in old.columns if c not in ("doc_id", "text")])
         .select(old.columns)
     )
-    return corpus_diff(old, new).localCheckpoint(True).orderBy("id")
+    return sorted_output(corpus_diff(old, new), "id")
 
 
 @_register(
@@ -707,7 +711,8 @@ def q_pdf_page_furniture_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "array_join(transform(array_sort(filter(spans, s -> s.kind = 'text'),"
         " (a, b) -> a.offset - b.offset), s -> s.text), '\\n')"
     )
-    return spans.select("doc_id", text.alias("extracted")).localCheckpoint(True).orderBy("doc_id")
+    return sorted_output(
+        spans.select("doc_id", text.alias("extracted")), "doc_id")
 
 
 @_register(
@@ -736,8 +741,8 @@ def q_inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs stays the true document frequency)."""
     from ..operators.search import inverted_index
 
-    return inverted_index(_docs(spark, sf_dir),
-                          max_postings=20).localCheckpoint(True).orderBy("term")
+    return sorted_output(
+        inverted_index(_docs(spark, sf_dir), max_postings=20), "term")
 
 
 @_register(
@@ -858,7 +863,7 @@ def q_packed_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical ordering/slicing with a plain SQL window."""
     from ..operators.sampling import pack_sequences
 
-    return pack_sequences(_docs(spark, sf_dir), 512).localCheckpoint(True).orderBy("seq_id")
+    return sorted_output(pack_sequences(_docs(spark, sf_dir), 512), "seq_id")
 
 
 # The clean suffix and its UTF-8-read-as-Latin-1 corruption, computed
@@ -890,8 +895,8 @@ def q_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 2 == 0,
                F.concat(F.col("text"), F.lit(_MOJI_BAD)))
         .otherwise(F.col("text")))
-    return (fix_mojibake(docs)
-            .select("doc_id", "text", "repaired").localCheckpoint(True).orderBy("doc_id"))
+    return sorted_output(
+        fix_mojibake(docs).select("doc_id", "text", "repaired"), "doc_id")
 
 
 @_register(
@@ -923,14 +928,13 @@ def q_inter_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("_us"))
     w = Window.partitionBy("user_id").orderBy("_us", "event_id")
     gaps = ev.withColumn("_gap", F.col("_us") - F.lag("_us").over(w))
-    return (
+    return sorted_output(
         gaps.groupBy("user_id")
         .agg(F.count("_gap").cast("long").alias("n_gaps"),
              F.round(F.avg(F.col("_gap") / 1e6), 6).alias("avg_gap_sec"),
              F.round(F.max(F.col("_gap") / 1e6), 6).alias("max_gap_sec"))
-        .where(F.col("n_gaps") > 0)
-        .localCheckpoint(True).orderBy("user_id")
-    )
+        .where(F.col("n_gaps") > 0),
+        "user_id")
 
 
 @_register(
@@ -996,11 +1000,10 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n"))
     )
     norm = Window.partitionBy("src")
-    return (
+    return sorted_output(
         pairs.withColumn(
-            "p", F.round(F.col("n") / F.sum("n").over(norm), 6))
-        .localCheckpoint(True).orderBy("src", "dst")
-    )
+            "p", F.round(F.col("n") / F.sum("n").over(norm), 6)),
+        "src", "dst")
 
 
 @_register(
@@ -1058,7 +1061,7 @@ def q_registrable_domain_keying(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wu = _docs(spark, sf_dir).withColumn(
         "url", F.concat(F.lit("https://"), host, F.lit("/page")))
-    return domain_stats(wu).localCheckpoint(True).orderBy("domain")
+    return sorted_output(domain_stats(wu), "domain")
 
 
 
@@ -1107,10 +1110,10 @@ def q_robots_disallow_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
          for k, txt in policies.items() for tld in (".com", ".org")],
         ["host", "robots_txt"])
     out = filter_robots_disallowed(wu, robots)
-    return out.select(
+    return sorted_output(out.select(
         "doc_id",
         F.regexp_extract("url", "https://([^/]+)/", 1).alias("host"),
-    ).localCheckpoint(True).orderBy("doc_id")
+    ), "doc_id")
 
 
 @_register(
@@ -1145,8 +1148,7 @@ def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         _planted_url().alias("url"),
         (F.col("doc_id") % 11).cast("double").alias("score"),
     )
-    return (
+    return sorted_output(
         crawl_frontier_batches(docs, per_host_per_batch=2)
-        .select("url", "host", "fetch_batch")
-        .localCheckpoint(True).orderBy("url", "fetch_batch")
-    )
+        .select("url", "host", "fetch_batch"),
+        "url", "fetch_batch")

@@ -34,6 +34,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import reuse
 from ..operators.redact import redact_text
 from ..operators.sampling import hash_split
 from ..plans.corpus_prep import (
@@ -95,7 +96,7 @@ def run_streaming_corpus_prep(
         if batch_df.isEmpty():
             return
         meta = {"stream_batch_id": batch_id}
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = reuse(batch_df)
 
         base = with_quality_stats(batch_df)
         bad_quality = bad_quality_expr(min_tokens, max_avg_token_len)
@@ -129,11 +130,10 @@ def run_streaming_corpus_prep(
                 dup_in_hist.select("doc_id"), on="doc_id",
                 how="left_semi")
         ).select("doc_id", F.lit(STAGE_EXACT).alias("stage")).distinct()
-        s3 = (
+        s3 = reuse(
             s2r.where(F.col("_rn") == 1)
             .join(hist_hashes, on="_h", how="left_anti")
             .select("doc_id", "text", "lang", "_h")
-            .localCheckpoint(eager=True)
         )
 
         # near dedup vs self + the committed bucket index; candidate
@@ -160,8 +160,7 @@ def run_streaming_corpus_prep(
         # dropped regardless of id order (pairs are (min,max) by id,
         # so with id reuse / multi-source feeds the new doc can be
         # id_a); within the batch the larger id drops.
-        new_ids = s3.select(F.col("doc_id").alias("_nid")) \
-            .localCheckpoint(eager=True)
+        new_ids = reuse(s3.select(F.col("doc_id").alias("_nid")))
         na = new_ids.select(F.col("_nid").alias("_a_nid"),
                             F.lit(True).alias("_a_new"))
         nb = new_ids.select(F.col("_nid").alias("_b_nid"),

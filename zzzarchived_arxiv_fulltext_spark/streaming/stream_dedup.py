@@ -15,6 +15,7 @@ dedup state) plus the idempotent file sink.
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import reuse
 from ..schema import INPUT_SCHEMA
 from ..sources.tables import SnapshotTable
 
@@ -103,7 +104,7 @@ def run_streaming_near_dedup(
         if batch_df.isEmpty():
             return
         meta = {"stream_batch_id": batch_id}
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = reuse(batch_df)
         history = (
             corpus_table.read(spark)
             if corpus_table.snapshots() else batch_df.limit(0)
@@ -165,7 +166,7 @@ def run_streaming_line_dedup(
         if batch_df.isEmpty():
             return
         meta = {"stream_batch_id": batch_id}
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = reuse(batch_df)
         out = run_line_dedup_increment(
             spark, batch_df, index_table,
             min_chars=min_chars, commit_meta=meta)

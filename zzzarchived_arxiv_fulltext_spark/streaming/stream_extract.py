@@ -18,6 +18,7 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from ..materialize import reuse
 from ..plans.extraction_job import run_extraction
 from ..schema import INPUT_SCHEMA
 from ..sources.tables import SnapshotTable
@@ -104,7 +105,7 @@ def run_streaming_crawl(
         if batch_df.isEmpty():
             return
         run_crawl_cycle(
-            spark, batch_df.localCheckpoint(eager=True),
+            spark, reuse(batch_df),
             fetch_log, spans_table,
             blocklist=blocklist,
             per_host_per_batch=per_host_per_batch,
