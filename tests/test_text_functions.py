@@ -20,8 +20,8 @@ from zzzarchived_arxiv_fulltext_spark.functions.tidy import (
     drop_boilerplate_lines,
     expand_abbreviations,
     repair_line_breaks,
-    scrub_line,
 )
+from psv_reference import scrub_line  # noqa: F401
 
 # Reference test corpus: test_process_psv.py:6-21.
 PAULI = """

@@ -68,23 +68,31 @@ def split_on_references(
     return list(lines[: cut - 1]), list(lines[cut - 1:])
 
 
+def _body_and_references(txt: str) -> Tuple[List[str], List[str]]:
+    """Accent recovery, split into newline-terminated lines, reference
+    split. Parity: ``process_text`` (psv.py:36-61) up to the tidy."""
+    txt = recover_accents(txt)
+    lines = [piece + "\n" for piece in _LINE_BREAKS.split(txt)]
+    return split_on_references(lines)
+
+
 def process_text(txt: str) -> Tuple[str, str]:
     """Full-document normalization → (psv_body, cleaned_references).
 
-    Parity: ``process_text`` (psv.py:36-61): accent recovery, split into
-    newline-terminated lines, reference split, tidy both halves, join
-    each with newlines.
+    Parity: ``process_text`` (psv.py:36-61): tidy both halves of the
+    reference split and join each with newlines.
     """
-    txt = recover_accents(txt)
-    lines = [piece + "\n" for piece in _LINE_BREAKS.split(txt)]
-    body, refs = split_on_references(lines)
+    body, refs = _body_and_references(txt)
     return "\n".join(tidy_lines(body)), "\n".join(tidy_lines(refs))
 
 
 def normalize_text_psv(txt: str) -> str:
     """PSV body as one space-joined string (references dropped).
 
-    Parity: ``normalize_text_psv`` (psv.py:16-33).
+    Parity: ``normalize_text_psv`` (psv.py:16-33), which tidies the
+    reference block too and then discards it; here it is never tidied.
+    No tidied sentence holds a newline, so joining with spaces equals
+    the reference's newline join followed by newline → space.
     """
-    body, _ = process_text(txt)
-    return body.replace("\n", " ")
+    body, _ = _body_and_references(txt)
+    return " ".join(tidy_lines(body))

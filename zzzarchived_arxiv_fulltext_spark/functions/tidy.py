@@ -6,8 +6,18 @@ reference lines whose observable behavior it reproduces; the code is a
 fresh implementation (generator-based passes, pre-compiled patterns).
 
 Pipeline order is load-bearing (psv.py:64-100): keyword strip →
-whitespace → EOL repair → per-line scalar chain → whitespace → EOL
-repair → sentence split → sentence clean.
+whitespace → EOL repair → scalar chain → EOL repair → sentence split →
+sentence clean. (The reference blanks whitespace again before the
+second EOL repair; after the scalar chain that pass changes nothing.)
+
+The reference runs the scalar chain and the sentence passes once per
+line. Here they run once per document: the repaired lines are joined
+with ``"\\n"`` and no later pass can match ``"\\n"`` (each ``\\s`` of
+the reference is ``[^\\S\\n]`` or a literal space). A line holds no
+``"\\n"`` once ``blank_intra_whitespace`` has run, so no match crosses a
+line and the result equals the per-line chain byte for byte.
+``tests/psv_reference.py`` keeps the per-line chain;
+``tests/test_psv_parity.py`` checks the two agree.
 """
 
 import re
@@ -77,19 +87,21 @@ def repair_line_breaks(lines: Iterable[str]) -> List[str]:
     return out
 
 
-# --- per-line scalar chain ---------------------------------------------------
+# --- scalar chain, once per document ------------------------------------------
 
 # Abbreviation expansions; parity: ``expandWords`` (psv.py:151-167).
 # The reference applies six sequential case-insensitive substitutions.
 # The patterns have no leading context, are prefix-disjoint, and no
 # replacement text can create a match for another pattern, so one
 # alternation pass with leftmost-alternative priority is equivalent to
-# the sequential passes (validated by the dev-time fuzz harness
-# against the reference implementation).
+# the sequential passes. The lookahead holds the first letters of the
+# six alternatives (case-folded like them), so the engine skips every
+# other position with one class test instead of six branch attempts.
 _EXPANSION_RX = re.compile(
-    r"(?P<fig>Fig[s]?[\.]?\s)|(?P<eq>Eq[s]?[\.]?\s)"
-    r"|(?P<sect>Sect[s]?[\.]?\s)|(?P<ref>Ref[s]?[\.]?\s)"
-    r"|(?P<prof>Prof\.)|(?P<dr>Dr\.)",
+    r"(?=[fesrpd])(?:"
+    r"(?P<fig>Figs?\.?[^\S\n])|(?P<eq>Eqs?\.?[^\S\n])"
+    r"|(?P<sect>Sects?\.?[^\S\n])|(?P<ref>Refs?\.?[^\S\n])"
+    r"|(?P<prof>Prof\.)|(?P<dr>Dr\.))",
     re.IGNORECASE,
 )
 _EXPANSION_OUT = {
@@ -102,99 +114,82 @@ def _expand_match(m: "re.Match") -> str:
     return _EXPANSION_OUT[m.lastgroup]
 
 
-# The scalar cleanup chain applied to every line, in order
-# (psv.py:86-92). Each entry is (pattern, replacement) with global,
-# left-to-right, non-overlapping substitution — the reference's
-# sequential ``re.subn`` semantics. Two pairs of consecutive reference
-# passes are merged into single alternation passes because the second
-# pattern of each pair can never match text produced by the first
-# ('_' is \w so the symbol class never yields it; digit runs replaced
-# by spaces never yield digits) — also fuzz-validated:
-# symbols -> space; parity: _remove_Symbols (psv.py:170-174)
-_SYMBOLS = re.compile(r"[^\.\w ]|_")
-# digits -> space; parity: _remove_Numbers (psv.py:177-181)
-_DIGITS = re.compile(r"\d+[\.]?\d+/|\d")
-# dotted abbreviations; parity: _remove_Abbrev (psv.py:184-193).
+# The scalar cleanup chain (psv.py:86-92), each a global, left-to-right,
+# non-overlapping substitution as in the reference's ``re.subn``.
+# Symbols and digits -> space in one pass; parity: _remove_Symbols and
+# _remove_Numbers (psv.py:170-181). The reference's digit pattern
+# ``\d+[\.]?\d+/|\d`` reduces to ``\d`` because the symbol pass has
+# already turned every '/' into a space, and a digit replaced by a
+# space is never a symbol, so the two single-character passes fold
+# into one class.
+_SYMBOLS_DIGITS = re.compile(r"[^.\w \n]|[_\d]")
+# After that pass the only whitespace left is ' ' (and the '\n' between
+# lines), so every later reference ``\s`` is a literal space here.
+# Dotted abbreviations; parity: _remove_Abbrev (psv.py:184-193).
 # NOT merged: each pass consumes surrounding whitespace, and a later
 # pass must see the space characters an earlier pass re-introduced.
-_ABBREV3 = re.compile(r"\s\w\.\w\.\w\.\s")
-_ABBREV2 = re.compile(r"\s\w\.\w\.\s")
-_ABBREV1 = re.compile(r"\s\w\.\s")
+_ABBREV3 = re.compile(r" \w\.\w\.\w\. ")
+_ABBREV2 = re.compile(r" \w\.\w\. ")
+_ABBREV1 = re.compile(r" \w\. ")
 # single letters; applied twice to catch overlapping matches;
 # parity: _remove_SingleAlphabet (psv.py:196-201)
-_SINGLE = re.compile(r"\s[a-zA-Z]\s")
-_SINGLE_DOT = re.compile(r"\s[a-zA-Z]\.")
-
-_WS_RUN = re.compile(r"\s+")
-_LEADING_WS = re.compile(r"^\s+")
-_TRAILING_WS = re.compile(r"\s+$")
-
-
-def expand_abbreviations(line: str) -> str:
-    """Parity: ``expandWords`` (psv.py:151-167)."""
-    return _EXPANSION_RX.sub(_expand_match, line)
+_SINGLE = re.compile(r" [a-zA-Z] ")
+_SINGLE_DOT = re.compile(r" [a-zA-Z]\.")
+# space collapse; parity: _remove_ExtraSpaces (psv.py:204-208). A lone
+# space maps to itself, so only runs of two or more need replacing.
+_SPACE_RUN = re.compile(r" {2,}")
 
 
-def scrub_line(line: str) -> str:
-    """Expand abbreviations then run the scalar cleanup chain.
+def expand_abbreviations(text: str) -> str:
+    """Parity: ``expandWords`` (psv.py:151-167); never crosses a line."""
+    return _EXPANSION_RX.sub(_expand_match, text)
+
+
+def scrub_text(text: str) -> str:
+    """Expand abbreviations then run the scalar cleanup chain on every
+    ``"\\n"``-separated line of ``text``.
 
     Same pass order as tidy_txt_from_pdf (psv.py:86-92). Passes whose
     pattern requires a literal '.' are gated on a C-level containment
     check — skipping a pass that cannot match is identical to running
     it.
     """
-    line = _EXPANSION_RX.sub(_expand_match, line)
-    line = _SYMBOLS.sub(" ", line)
-    line = _DIGITS.sub(" ", line)
-    if "." in line:
-        line = _ABBREV3.sub(" ", line)
-        line = _ABBREV2.sub(" ", line)
-        line = _ABBREV1.sub(" ", line)
-    line = _SINGLE.sub(" ", line)
-    line = _SINGLE.sub(" ", line)
-    if "." in line:
-        line = _SINGLE_DOT.sub(".", line)
-    line = _WS_RUN.sub(" ", line)
-    return _LEADING_WS.sub("", line)
-
-
-def collapse_spaces(line: str) -> str:
-    """Parity: ``_remove_ExtraSpaces`` (psv.py:204-208)."""
-    line = _WS_RUN.sub(" ", line)
-    return _LEADING_WS.sub("", line)
+    text = _SYMBOLS_DIGITS.sub(" ", expand_abbreviations(text))
+    if "." in text:
+        text = _ABBREV3.sub(" ", text)
+        text = _ABBREV2.sub(" ", text)
+        text = _ABBREV1.sub(" ", text)
+    text = _SINGLE.sub(" ", text)
+    text = _SINGLE.sub(" ", text)
+    if "." in text:
+        text = _SINGLE_DOT.sub(".", text)
+    # after the collapse a line starts with at most one space
+    text = _SPACE_RUN.sub(" ", text).replace("\n ", "\n")
+    return text[1:] if text.startswith(" ") else text
 
 
 # --- sentence passes ----------------------------------------------------------
 
-_SENTENCE_SPLIT = re.compile(r"\.\s")
-_HAS_WORD = re.compile(r"\w")
-_NON_WORD = re.compile(r"\W")
 
+def clean_sentences(text: str) -> List[str]:
+    """Split scrubbed lines into sentences; keep word-bearing ones,
+    strip non-word chars, lowercase.
 
-def split_sentences(lines: Iterable[str]) -> Iterator[str]:
-    """Flatten lines into ``". "``-delimited sentences.
-
-    Parity: ``_split_sentence`` (psv.py:211-216).
+    Parity: ``_split_sentence`` and ``_clean_sentence``
+    (psv.py:211-240). ``text`` is ``scrub_text`` output, so its only
+    non-word characters are ' ', '.' and the newline between lines:
+    the reference's ``\\.\\s`` split is a split on ". " and on newlines,
+    a sentence starts with a word char unless it starts with ' ' or
+    '.', and its words are what lies between spaces and dots. The words
+    joined by single spaces must exceed 3 chars.
     """
-    for line in lines:
-        yield from _SENTENCE_SPLIT.split(line)
-
-
-def clean_sentences(lines: Iterable[str]) -> Iterator[str]:
-    """Keep word-bearing sentences; strip non-word chars; lowercase.
-
-    Parity: ``_clean_sentence`` (psv.py:219-240): sentence must *start*
-    with a word char, length (post-scrub) must exceed 3.
-    """
-    for line in lines:
-        if not _HAS_WORD.match(line):
-            continue
-        line = collapse_spaces(_NON_WORD.sub(" ", line))
-        line = _LEADING_WS.sub("", line)
-        line = _TRAILING_WS.sub("", line)
-        if len(line) <= 3:
-            continue
-        yield line.lower()
+    out = []
+    for sentence in text.replace(". ", "\n").split("\n"):
+        if sentence and sentence[0] not in " .":
+            sentence = " ".join(sentence.replace(".", " ").split())
+            if len(sentence) > 3:
+                out.append(sentence.lower())
+    return out
 
 
 # --- the full pipeline --------------------------------------------------------
@@ -203,12 +198,11 @@ def clean_sentences(lines: Iterable[str]) -> Iterator[str]:
 def tidy_lines(lines: List[str]) -> List[str]:
     """Run the full tidy pipeline over a document's lines.
 
-    Parity: ``tidy_txt_from_pdf`` (psv.py:64-100), including the exact
-    pass ordering and the doubled whitespace/EOL passes.
+    Parity: ``tidy_txt_from_pdf`` (psv.py:64-100), in the pass order
+    the module docstring gives, including the doubled EOL pass.
     """
     staged = repair_line_breaks(
         blank_intra_whitespace(drop_boilerplate_lines(lines))
     )
-    staged = [scrub_line(line) for line in staged]
-    staged = repair_line_breaks(blank_intra_whitespace(staged))
-    return list(clean_sentences(split_sentences(staged)))
+    staged = scrub_text("\n".join(staged)).split("\n")
+    return clean_sentences("\n".join(repair_line_breaks(staged)))
