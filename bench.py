@@ -101,14 +101,14 @@ IDLE_CALIBRATION_SEC = 0.5
 
 def _control_child(args) -> int:
     lo, hi = args
-    from zzzarchived_arxiv_fulltext_spark.operators.span_extract import (
-        _extract_texts,
+    from zzzarchived_arxiv_fulltext_spark.functions.extract import (
+        extract_texts,
     )
     from zzzarchived_arxiv_fulltext_spark.sources.fixtures import make_doc
 
     for i in range(lo, hi):
         _, spans = make_doc(i)
-        _extract_texts([
+        extract_texts([
             s["text"]
             for s in sorted(spans, key=lambda s: s["offset"])
             if s["kind"] == "text"

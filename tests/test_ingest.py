@@ -3,7 +3,6 @@ main-content extraction, down to the full extraction job."""
 
 import zlib
 
-import pytest
 from pyspark.sql import functions as F
 
 from zzzarchived_arxiv_fulltext_spark.functions.html_extract import (
@@ -434,12 +433,6 @@ def test_pdf_to_spans_classifies_encrypted(spark):
     assert got["ok"]["failure_class"] is None
     assert [s["text"] for s in got["ok"]["spans"]] == ["readable page"]
     assert got["junk"]["failure_class"] is None  # not encrypted, just junk
-
-
-def test_pdf_engine_gate(spark):
-    with pytest.raises(ValueError):
-        pdf_to_spans(spark.createDataFrame(
-            [("x", b"")], "doc_id string, pdf binary"), engine="nope")
 
 
 # -- unified format-sniffing router --------------------------------------------

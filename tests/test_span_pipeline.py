@@ -350,18 +350,27 @@ def test_run_extraction_quarantines_invalid_spans(spark, tmp_path):
                 "offset": off}
 
     rows = [
-        ("good", [span("text", "hello clean doc", None, 0)]),
-        ("dup_off", [span("text", "a", None, 0),
-                     span("text", "b", None, 0)]),
+        ("good", "arxiv", [span("text", "hello clean doc", None, 0)]),
+        # the same doc_id in another bucket is a distinct document
+        ("good", "submission", [span("text", "hello clean doc", None, 0)]),
+        ("dup_off", "arxiv", [span("text", "a", None, 0),
+                              span("text", "b", None, 0)]),
     ]
     df = spark.createDataFrame(
         rows,
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>")
+        "doc_id string, bucket string, spans array<struct<kind:string,"
+        "text:string,media_ref:string,offset:int>>")
     out = SnapshotTable(str(tmp_path / "out"))
     run_extraction(spark, df, out, validate_spans=True)
-    got = {r["doc_id"]: r for r in out.read(spark).collect()}
+    committed = out.read(spark).collect()
+    # one committed row per input row: validation must not fan out
+    # rows that share a doc_id across buckets
+    assert len(committed) == len(rows)
+    assert len({(r["bucket"], r["doc_id"]) for r in committed}) == len(rows)
+    got = {r["doc_id"]: r for r in committed if r["bucket"] == "arxiv"}
     assert got["good"]["status"] == "succeeded"
+    assert [r["status"] for r in committed
+            if r["bucket"] == "submission"] == ["succeeded"]
     assert got["dup_off"]["status"] == "failed"
     assert got["dup_off"]["failure_class"] == "invalid_spans"
     assert got["dup_off"]["extractor_version"] == \

@@ -58,11 +58,11 @@ sys.path.insert(0, {repo!r})
 def work(args):
     lo, hi = args
     from zzzarchived_arxiv_fulltext_spark.sources.fixtures import make_doc
-    from zzzarchived_arxiv_fulltext_spark.operators.span_extract import _extract_texts
+    from zzzarchived_arxiv_fulltext_spark.functions.extract import extract_texts
     for i in range(lo, hi):
         _, spans = make_doc(i)
-        _extract_texts([s['text'] for s in sorted(spans, key=lambda s: s['offset'])
-                        if s['kind'] == 'text'])
+        extract_texts([s['text'] for s in sorted(spans, key=lambda s: s['offset'])
+                       if s['kind'] == 'text'])
     return hi - lo
 
 n, procs = int(sys.argv[1]), int(sys.argv[2])

@@ -8,23 +8,24 @@ Our input already carries extracted text per span, so "retry with
 layout analysis" is restated as the deterministic junk/stamp strip in
 ``quality.strip_layout_junk``.
 
-This module is plain Python: it is the single source of truth used both
-inside the Spark pandas UDF (one call per document within an Arrow
-batch) and by the pytest oracle that asserts span-sequence equality.
+This module is plain Python and holds the decision tree once:
+``extract_texts`` is what the Spark pandas UDF runs (one call per
+document within an Arrow batch), and ``extract_document`` wraps the
+same call in a Python span reassembly — the pytest oracle that asserts
+span-sequence equality against the JVM-side reassembly.
 
 Failure isolation parity: a failing document yields ``status='failed'``
 with a failure class instead of raising, mirroring the reference's
 charge-on-to-the-next-file behavior (fulltext.py:244-253).
 """
 
-from typing import Any, Dict, List, Mapping, Optional, Sequence
+from typing import Any, Dict, Iterable, List, Mapping, Optional, Sequence
 
 from .quality import MAX_AVG_WORD_LENGTH, average_word_length, strip_layout_junk
 from .psv import normalize_text_psv
 from .unicode_fix import fix_unicode
 
 KIND_TEXT = "text"
-KIND_MEDIA = "media"
 
 STATUS_SUCCEEDED = "succeeded"
 STATUS_FAILED = "failed"
@@ -36,12 +37,46 @@ VIA_NONE = "none"
 FAILURE_QUALITY_GATE = "quality_gate"
 
 
-def _clean_primary(text: str) -> str:
-    return fix_unicode(text)
+def extract_texts(texts: Iterable[Optional[str]]) -> Dict[str, Any]:
+    """Run the decision tree over one document's text spans, given in
+    offset order.
 
+    Returns a dict with keys:
+        ``texts``      — the cleaned text of each span (the raw texts,
+                         unchanged, if the document failed the gate);
+        ``plain_text`` — newline-joined cleaned text (None on failure);
+        ``psv_text``   — PSV normalization of plain_text (None on failure);
+        ``status`` / ``failure_class`` / ``via``; ``chars_extracted``.
+    """
+    raw = list(texts)
+    # Attempt 1: plain unicode fix (parity: fulltext.py:158-167).
+    chosen = [fix_unicode(t or "") for t in raw]
+    via = VIA_PRIMARY
+    if average_word_length("\n".join(chosen)) > MAX_AVG_WORD_LENGTH:
+        # Attempt 2: layout-analysis retry (parity: fulltext.py:169-178).
+        chosen = [fix_unicode(strip_layout_junk(t or "")) for t in raw]
+        via = VIA_LAYOUT_RETRY
+        if average_word_length("\n".join(chosen)) > MAX_AVG_WORD_LENGTH:
+            return {
+                "texts": raw,
+                "plain_text": None,
+                "psv_text": None,
+                "status": STATUS_FAILED,
+                "failure_class": FAILURE_QUALITY_GATE,
+                "via": VIA_NONE,
+                "chars_extracted": 0,
+            }
 
-def _clean_retry(text: str) -> str:
-    return fix_unicode(strip_layout_junk(text))
+    plain = "\n".join(chosen)
+    return {
+        "texts": chosen,
+        "plain_text": plain,
+        "psv_text": normalize_text_psv(plain),
+        "status": STATUS_SUCCEEDED,
+        "failure_class": None,
+        "via": via,
+        "chars_extracted": len(plain),
+    }
 
 
 def extract_document(spans: Sequence[Mapping[str, Any]]) -> Dict[str, Any]:
@@ -57,72 +92,36 @@ def extract_document(spans: Sequence[Mapping[str, Any]]) -> Dict[str, Any]:
 
     Returns
     -------
-    dict with keys:
+    dict with the keys of ``extract_texts`` except ``texts``, plus:
         ``spans``   — output span list ``(kind, text, media_ref, order)``,
                       ordered by the input ``offset`` rank; media spans
-                      pass through untouched, text spans carry cleaned
-                      text (raw text if the document failed the gate);
-        ``plain_text`` — newline-joined cleaned text (None on failure);
-        ``psv_text``   — PSV normalization of plain_text (None on failure);
-        ``status`` / ``failure_class`` / ``via``;
-        ``chars_extracted``, ``n_text_spans``, ``n_media_spans``.
+                      pass through untouched, text spans carry the
+                      ``texts`` of ``extract_texts`` in order;
+        ``n_text_spans``, ``n_media_spans``.
     """
     ordered = sorted(spans, key=lambda s: s["offset"])
-    raw_parts: List[str] = [
-        s["text"] or "" for s in ordered if s["kind"] == KIND_TEXT
-    ]
-
-    # Attempt 1: plain unicode fix (parity: fulltext.py:158-167).
-    primary_parts = [_clean_primary(p) for p in raw_parts]
-    chosen: Optional[List[str]] = primary_parts
-    via = VIA_PRIMARY
-    failure: Optional[str] = None
-
-    if average_word_length("\n".join(primary_parts)) > MAX_AVG_WORD_LENGTH:
-        # Attempt 2: layout-analysis retry (parity: fulltext.py:169-178).
-        retry_parts = [_clean_retry(p) for p in raw_parts]
-        if average_word_length("\n".join(retry_parts)) > MAX_AVG_WORD_LENGTH:
-            chosen, via, failure = None, VIA_NONE, FAILURE_QUALITY_GATE
-        else:
-            chosen, via = retry_parts, VIA_LAYOUT_RETRY
+    result = extract_texts(
+        s["text"] for s in ordered if s["kind"] == KIND_TEXT)
+    texts = iter(result.pop("texts"))
 
     out_spans: List[Dict[str, Any]] = []
-    text_idx = 0
-    n_text = n_media = 0
+    n_text = 0
     for order, span in enumerate(ordered):
         if span["kind"] == KIND_TEXT:
-            cleaned = chosen[text_idx] if chosen is not None else span["text"]
-            text_idx += 1
             n_text += 1
             out_spans.append(
-                {"kind": KIND_TEXT, "text": cleaned, "media_ref": None,
+                {"kind": KIND_TEXT, "text": next(texts), "media_ref": None,
                  "order": order}
             )
         else:
-            n_media += 1
             out_spans.append(
                 {"kind": span["kind"], "text": None,
                  "media_ref": span["media_ref"], "order": order}
             )
 
-    if chosen is not None:
-        plain = "\n".join(chosen)
-        psv = normalize_text_psv(plain)
-        chars = len(plain)
-        status = STATUS_SUCCEEDED
-    else:
-        plain = psv = None
-        chars = 0
-        status = STATUS_FAILED
-
     return {
         "spans": out_spans,
-        "plain_text": plain,
-        "psv_text": psv,
-        "status": status,
-        "failure_class": failure,
-        "via": via,
-        "chars_extracted": chars,
+        **result,
         "n_text_spans": n_text,
-        "n_media_spans": n_media,
+        "n_media_spans": len(ordered) - n_text,
     }

@@ -20,9 +20,7 @@ born-digital PDFs actually use for their text layer —
 - line positioning via ``Td``/``TD``/``T*``/``Tm``,
 
 with zero external dependencies, so a raw-PDF corpus can be ingested
-with no cluster provisioning beyond ``--py-files``. For full-fidelity
-layout analysis of adversarial PDFs, ``sources/pdf_ingest.py`` can
-switch to pdfminer.six when it is installed.
+with no cluster provisioning beyond ``--py-files``.
 """
 
 import base64

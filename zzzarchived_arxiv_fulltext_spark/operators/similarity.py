@@ -103,25 +103,15 @@ def _hyperplane(table: int, plane: int, dim: int) -> List[float]:
     return out
 
 
-def srp_signature(vec: Column, table: int, planes: int, dim: int) -> Column:
-    """Signed-random-projection bucket id (int) for one LSH table."""
-    sig = F.lit(0)
-    for p in range(planes):
-        plane = F.array(*[F.lit(w) for w in _hyperplane(table, p, dim)])
-        bit = F.when(dot(vec, plane) >= 0, 1).otherwise(0)
-        sig = sig + bit * (1 << p)
-    return sig
-
-
 def _srp_buckets_udf(tables: int, planes: int, dim: int):
     """All-tables SRP bucketing as one numpy matmul per Arrow batch.
 
-    The JVM-expression variant (``srp_signature``) folds a 64-element
-    lambda per plane per row — tables×planes×dim scalar ops through
-    Catalyst. One (batch×dim)·(dim×tables·planes) matmul replaces all
-    of it; measured ~10× on the bench corpus. Plane weights are the
-    same seeded values, so buckets agree with the JVM variant except
-    for sign flips on |dot| ≈ 0 (irrelevant to an approximate index).
+    Bit ``p`` of a row's bucket in table ``t`` is set when its dot
+    product with the seeded hyperplane ``_hyperplane(t, p, dim)`` is
+    >= 0. One (batch×dim)·(dim×tables·planes) matmul computes every
+    bit of every table at once, instead of tables×planes×dim scalar
+    ops per row through Catalyst lambdas (measured ~10× slower on the
+    bench corpus).
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf

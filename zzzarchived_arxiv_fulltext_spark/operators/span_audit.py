@@ -21,15 +21,17 @@ Violation classes:
   legal input, but extraction should know how many there are).
 """
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# the classes under which reassembly is undefined; ``empty_spans`` is
+# counted but legal
+_INVALID_CLASSES = ("offsets_not_dense", "bad_text_span", "bad_media_span",
+                   "unknown_kind")
 
-def span_doc_flags(df: DataFrame, id_col: str = "doc_id",
-                   spans_col: str = "spans") -> DataFrame:
-    """Per-document violation flags (0/1) + span count — the row-level
-    view behind :func:`span_integrity_report`, usable as a filter."""
-    s = F.col(spans_col)
+
+def _violation_flags(s: Column) -> dict:
+    """violation class -> 0/1 flag column over one spans column."""
     n = F.size(s)
     offsets = F.transform(s, lambda x: x["offset"])
     dense = F.array_sort(offsets) == F.sequence(
@@ -42,15 +44,33 @@ def span_doc_flags(df: DataFrame, id_col: str = "doc_id",
         & (x["media_ref"].isNull() | x["text"].isNotNull())))
     unknown = F.size(F.filter(
         s, lambda x: ~x["kind"].isin("text", "media")))
+    return {
+        "offsets_not_dense": F.when((n > 0) & ~dense, 1).otherwise(0),
+        "bad_text_span": F.when(bad_text > 0, 1).otherwise(0),
+        "bad_media_span": F.when(bad_media > 0, 1).otherwise(0),
+        "unknown_kind": F.when(unknown > 0, 1).otherwise(0),
+        "empty_spans": F.when(n == 0, 1).otherwise(0),
+    }
+
+
+def invalid_spans() -> Column:
+    """True for a document whose reassembly order is undefined (any
+    class but ``empty_spans``): the gate of ``run_extraction``'s
+    ``validate_spans``, as a column of the same frame."""
+    flags = _violation_flags(F.col("spans"))
+    return sum(flags[c] for c in _INVALID_CLASSES) > 0
+
+
+def span_doc_flags(df: DataFrame, id_col: str = "doc_id",
+                   spans_col: str = "spans") -> DataFrame:
+    """Per-document violation flags (0/1) + span count — the row-level
+    view behind :func:`span_integrity_report`, usable as a filter."""
+    s = F.col(spans_col)
     return df.select(
         F.col(id_col),
-        n.cast("long").alias("n_spans"),
-        F.when((n > 0) & ~dense, 1).otherwise(0).alias(
-            "offsets_not_dense"),
-        F.when(bad_text > 0, 1).otherwise(0).alias("bad_text_span"),
-        F.when(bad_media > 0, 1).otherwise(0).alias("bad_media_span"),
-        F.when(unknown > 0, 1).otherwise(0).alias("unknown_kind"),
-        F.when(n == 0, 1).otherwise(0).alias("empty_spans"),
+        F.size(s).cast("long").alias("n_spans"),
+        *[flag.alias(name)
+          for name, flag in _violation_flags(s).items()],
     )
 
 
@@ -59,8 +79,7 @@ def span_integrity_report(df: DataFrame, id_col: str = "doc_id",
     """(violation, n_docs) in long format, one row per class plus a
     ``clean`` row — map-side-combinable aggregation over the flags."""
     flags = span_doc_flags(df, id_col=id_col, spans_col=spans_col)
-    classes = ["offsets_not_dense", "bad_text_span", "bad_media_span",
-               "unknown_kind", "empty_spans"]
+    classes = [*_INVALID_CLASSES, "empty_spans"]
     clean = F.when(
         sum(F.col(c) for c in classes) == 0, 1).otherwise(0)
     agg = flags.agg(

@@ -11,6 +11,9 @@ This is the engine's single JVM→Python crossing for the hot path
 - The output span sequence is reassembled JVM-side with a linear
   ``aggregate`` fold that zips cleaned texts back into the
   offset-sorted span list (media passthrough, order = position).
+- The Python side is exactly ``functions.extract.extract_texts``, the
+  decision tree the pytest oracle ``extract_document`` also runs; this
+  module adds no per-document logic of its own.
 
 Reference analogue: the per-document Celery task body
 (``fulltext/extract.py:194-230``) and the extractor fallback ladder
@@ -27,23 +30,13 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .. import EXTRACTOR_VERSION
-from ..functions.extract import (
-    FAILURE_QUALITY_GATE,
-    STATUS_FAILED,
-    STATUS_SUCCEEDED,
-    VIA_LAYOUT_RETRY,
-    VIA_NONE,
-    VIA_PRIMARY,
-    _clean_primary,
-    _clean_retry,
-)
-from ..functions.psv import normalize_text_psv
-from ..functions.quality import MAX_AVG_WORD_LENGTH, average_word_length
+from ..functions.extract import extract_texts
 from ..schema import DEFAULT_BUCKET
 
-# Struct returned per document by the thin UDF: cleaned text spans
-# (original text echoed back when the quality gate fails) + doc-level
-# outputs. Everything span-structural stays JVM-side.
+# Struct returned per document by the thin UDF: the dict of
+# ``extract_texts`` — cleaned text spans (original text echoed back
+# when the quality gate fails) + doc-level outputs. Everything
+# span-structural stays JVM-side.
 _TEXT_RESULT = T.StructType(
     [
         T.StructField("texts", T.ArrayType(T.StringType()), False),
@@ -57,48 +50,11 @@ _TEXT_RESULT = T.StructType(
 )
 
 
-def _extract_texts(texts) -> dict:
-    """Per-document decision tree over the ordered text-span strings.
-
-    Identical semantics to ``functions.extract.extract_document`` —
-    same helpers, same gate, same fallback — operating on the text
-    list the JVM already ordered by offset.
-    """
-    raw = list(texts)
-    primary = [_clean_primary(t or "") for t in raw]
-    chosen, via, failure = primary, VIA_PRIMARY, None
-    if average_word_length("\n".join(primary)) > MAX_AVG_WORD_LENGTH:
-        retry = [_clean_retry(t or "") for t in raw]
-        if average_word_length("\n".join(retry)) > MAX_AVG_WORD_LENGTH:
-            chosen, via, failure = None, VIA_NONE, FAILURE_QUALITY_GATE
-        else:
-            chosen, via = retry, VIA_LAYOUT_RETRY
-
-    if chosen is not None:
-        plain = "\n".join(chosen)
-        return {
-            "texts": chosen,
-            "plain_text": plain,
-            "psv_text": normalize_text_psv(plain),
-            "status": STATUS_SUCCEEDED,
-            "failure_class": None,
-            "via": via,
-            "chars_extracted": len(plain),
-        }
-    return {
-        "texts": raw,  # failed docs keep their original text
-        "plain_text": None,
-        "psv_text": None,
-        "status": STATUS_FAILED,
-        "failure_class": failure,
-        "via": via,
-        "chars_extracted": 0,
-    }
-
-
 @pandas_udf(_TEXT_RESULT)
 def extract_texts_udf(texts: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame([_extract_texts(doc) for doc in texts])
+    """``functions.extract.extract_texts`` over each document's
+    offset-ordered text spans in the Arrow batch."""
+    return pd.DataFrame([extract_texts(doc) for doc in texts])
 
 
 # JVM-side reassembly in two linear passes: (1) a prefix-count fold
@@ -136,7 +92,7 @@ if(size(_sorted_spans) = 0,
 """
 
 
-def salt_column(parallelism: int, over: Optional[Column] = None) -> Column:
+def salt_column(parallelism: int) -> Column:
     """Skew-spreading repartition key.
 
     Documents cannot be split below row granularity, so balance comes
@@ -145,8 +101,7 @@ def salt_column(parallelism: int, over: Optional[Column] = None) -> Column:
     the source partitioning is pathologically clustered — a parquet
     scan with small ``maxPartitionBytes`` splits is already uniform.
     """
-    over = F.col("doc_id") if over is None else over
-    return F.pmod(F.xxhash64(over), F.lit(parallelism * 8))
+    return F.pmod(F.xxhash64("doc_id"), F.lit(parallelism * 8))
 
 
 def extract_documents(df: DataFrame,

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import EXTRACTOR_VERSION
+from ..operators.span_audit import invalid_spans
 from ..operators.span_extract import extract_documents
 from ..schema import (
     DEFAULT_BUCKET,
@@ -168,49 +169,48 @@ def run_extraction(
     if todo.isEmpty():
         return None
     if validate_spans:
-        from ..operators.span_audit import span_doc_flags
-
-        flags = span_doc_flags(todo).select(
+        todo = todo.withColumn("_invalid", invalid_spans())
+        quarantined = todo.where("_invalid").select(
             "doc_id",
-            ((F.col("offsets_not_dense") + F.col("bad_text_span")
-              + F.col("bad_media_span") + F.col("unknown_kind")) > 0
-             ).alias("_invalid"),
+            "bucket",
+            F.expr("CAST(array() AS array<struct<kind:string,"
+                   "text:string,media_ref:string,order:int>>)")
+            .alias("spans"),
+            F.lit(None).cast("string").alias("plain_text"),
+            F.lit(None).cast("string").alias("psv_text"),
+            F.lit("failed").alias("status"),
+            F.lit("invalid_spans").alias("failure_class"),
+            F.lit(None).cast("string").alias("via"),
+            F.lit(0).cast("long").alias("chars_extracted"),
+            F.lit(0).cast("int").alias("n_text_spans"),
+            F.lit(0).cast("int").alias("n_media_spans"),
+            # same version stamp as real extractions: the
+            # skip-if-exists anti-join keys on it, so a NULL here
+            # would re-pend the quarantined doc every increment
+            F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
+            F.current_timestamp().alias("started"),
+            F.current_timestamp().alias("ended"),
+            F.spark_partition_id().alias("partition_id"),
         )
-        todo = todo.join(flags, on="doc_id")
-        invalid = todo.where("_invalid").drop("_invalid")
-        todo = todo.where("NOT _invalid").drop("_invalid")
-        extracted = extract_documents(todo, parallelism=parallelism)
-        if not invalid.isEmpty():
-            quarantined = invalid.select(
-                "doc_id",
-                F.expr("CAST(array() AS array<struct<kind:string,"
-                       "text:string,media_ref:string,order:int>>)")
-                .alias("spans"),
-                F.lit(None).cast("string").alias("plain_text"),
-                F.lit(None).cast("string").alias("psv_text"),
-                F.lit("failed").alias("status"),
-                F.lit("invalid_spans").alias("failure_class"),
-                F.lit(None).cast("string").alias("via"),
-                F.lit(0).cast("long").alias("chars_extracted"),
-                F.lit(0).cast("int").alias("n_text_spans"),
-                F.lit(0).cast("int").alias("n_media_spans"),
-                # same version stamp as real extractions: the
-                # skip-if-exists anti-join keys on it, so a NULL here
-                # would re-pend the quarantined doc every increment
-                F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
-                F.current_timestamp().alias("started"),
-                F.current_timestamp().alias("ended"),
-                F.spark_partition_id().alias("partition_id"),
-                *([F.col("bucket")] if "bucket" in invalid.columns
-                  else [F.lit(DEFAULT_BUCKET).alias("bucket")]),
-            )
-            extracted = extracted.unionByName(
-                quarantined.select(*extracted.columns))
+        extracted = extract_documents(
+            todo.where("NOT _invalid"), parallelism=parallelism
+        ).unionByName(quarantined)
     else:
         extracted = extract_documents(todo, parallelism=parallelism)
+    return _commit(spark, extracted, output_table, lineage_table)
 
-    snap_id = output_table.append(extracted)
 
+def _commit(
+    spark: SparkSession,
+    extracted: DataFrame,
+    output_table: SnapshotTable,
+    lineage_table: Optional[SnapshotTable],
+    meta: Optional[dict] = None,
+) -> int:
+    """Commit ``extracted`` as one output snapshot carrying ``meta``,
+    then append that snapshot's lineage rows; the tail both entry
+    points share. Returns the committed snapshot id."""
+    snap_id = output_table.append(extracted, meta=meta)
     if lineage_table is not None:
         lineage_table.append(
             _lineage_from_snapshot(spark, output_table, snap_id)
@@ -312,12 +312,6 @@ def run_extraction_incremental(
     if head <= last:
         return None
     todo = input_table.read_since(spark, last, INPUT_SCHEMA, up_to=head)
-    extracted = extract_documents(todo, parallelism=parallelism)
-    snap_id = output_table.append(
-        extracted, meta={"consumed_input_snapshot": head}
-    )
-    if lineage_table is not None:
-        lineage_table.append(
-            _lineage_from_snapshot(spark, output_table, snap_id)
-        )
-    return snap_id
+    return _commit(spark, extract_documents(todo, parallelism=parallelism),
+                   output_table, lineage_table,
+                   meta={"consumed_input_snapshot": head})

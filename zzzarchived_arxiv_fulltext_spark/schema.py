@@ -35,7 +35,10 @@ OUTPUT_SPAN = T.StructType(
     ]
 )
 
-# Struct returned by the extraction UDF, one per document.
+# The per-document extraction columns of the committed output (the
+# keys of ``functions.extract.extract_document``). The UDF itself
+# returns the thinner ``span_extract._TEXT_RESULT``; spans and span
+# counts are rebuilt JVM-side.
 EXTRACT_RESULT = T.StructType(
     [
         T.StructField("spans", T.ArrayType(OUTPUT_SPAN), False),

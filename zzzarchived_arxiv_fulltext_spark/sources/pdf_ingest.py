@@ -9,11 +9,6 @@ per page plus one media span per embedded image — the exact
 ``INPUT_SCHEMA`` shape the extraction pipeline consumes, so
 ``extract_documents`` / ``run_extraction`` work unchanged downstream.
 
-``engine="pdfminer"`` switches to pdfminer.six (full layout analysis)
-when that optional dependency is installed; this container does not
-ship it, so the builtin parser is the default and the pdfminer path
-is import-gated.
-
 Scale shape: map-only (no shuffle), payload crosses into Python once,
 output is row-per-document — identical plan profile to the extraction
 hot path, so the same split sizing / skew arguments apply (SCALE.md).
@@ -44,22 +39,6 @@ INGEST_SCHEMA = T.StructType(
     list(INPUT_SCHEMA.fields)
     + [T.StructField("failure_class", T.StringType(), True)]
 )
-
-
-def _pdfminer_page_texts(pdf: bytes) -> List[str]:  # pragma: no cover
-    """Optional full-fidelity engine (pdfminer.six, if installed)."""
-    try:
-        import io
-
-        from pdfminer.high_level import extract_text
-    except ImportError as exc:
-        raise ImportError(
-            "engine='pdfminer' requires pdfminer.six, which is not "
-            "installed in this environment; use the default builtin "
-            "parser instead"
-        ) from exc
-    text = extract_text(io.BytesIO(pdf))
-    return [p for p in text.split("\f") if p.strip()]
 
 
 def build_pdf_spans(doc_id: str, data: bytes,
@@ -108,8 +87,7 @@ def build_pdf_spans(doc_id: str, data: bytes,
     return spans
 
 
-def pdf_to_spans(pdfs: DataFrame, engine: str = "builtin",
-                 strip_furniture: bool = False) -> DataFrame:
+def pdf_to_spans(pdfs: DataFrame, strip_furniture: bool = False) -> DataFrame:
     """(doc_id, pdf:binary) → (doc_id, spans, failure_class).
 
     Text spans carry page text in page order; every embedded image
@@ -122,9 +100,6 @@ def pdf_to_spans(pdfs: DataFrame, engine: str = "builtin",
     repeated-line heuristic (``functions.quality.strip_page_furniture``)
     before span emission.
     """
-    if engine not in ("builtin", "pdfminer"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     from ..functions.quality import strip_page_furniture
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -142,10 +117,7 @@ def pdf_to_spans(pdfs: DataFrame, engine: str = "builtin",
                     dec = decrypt_pdf(data)
                     if dec is not None:
                         data = dec
-                if engine == "pdfminer":
-                    pages = _pdfminer_page_texts(data)
-                else:
-                    pages = extract_pdf_page_texts(data)
+                pages = extract_pdf_page_texts(data)
                 if strip_furniture:
                     pages, _ = strip_page_furniture(pages)
                 spans = build_pdf_spans(doc_id, data, pages)

@@ -53,9 +53,8 @@ class SnapshotTable:
         ids = self.snapshot_ids()
         return max(ids) if ids else None
 
-    def _commit(self, entry: dict) -> None:
-        """Atomic manifest update: write-temp + rename."""
-        snaps = self.snapshots() + [entry]
+    def _commit(self, snaps: List[dict]) -> None:
+        """Atomic manifest replace: write-temp + rename."""
         tmp = self._manifest_path() + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(snaps, f, indent=1)
@@ -75,6 +74,15 @@ class SnapshotTable:
 
     # -- write --------------------------------------------------------------
 
+    def _stage(self, df: DataFrame, snap_id: int) -> str:
+        """Write ``df`` to an uncommitted staging dir, then rename it to
+        the snapshot's dir; returns that dir's name."""
+        staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
+        df.write.mode("overwrite").parquet(staging)
+        final = f"snap-{snap_id:05d}"
+        os.replace(staging, os.path.join(self.path, final))
+        return final
+
     def append(self, df: DataFrame, meta: Optional[dict] = None) -> int:
         """Write ``df`` as a new snapshot; visible only after commit.
 
@@ -91,15 +99,9 @@ class SnapshotTable:
         advanced".
         """
         snap_id = (self.latest_snapshot_id() or 0) + 1
-        staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        final = os.path.join(self.path, f"snap-{snap_id:05d}")
-        os.replace(staging, final)
-        entry = {"id": snap_id, "dir": os.path.basename(final),
-                 "ts": time.time(), "rows": None}
-        if meta:
-            entry.update(meta)
-        self._commit(entry)
+        entry = {"id": snap_id, "dir": self._stage(df, snap_id),
+                 "ts": time.time(), **(meta or {})}
+        self._commit(self.snapshots() + [entry])
         return snap_id
 
     # -- read ---------------------------------------------------------------
@@ -109,6 +111,20 @@ class SnapshotTable:
             if s["id"] == snap_id:
                 return os.path.join(self.path, s["dir"])
         raise KeyError(f"no snapshot {snap_id} in {self.path}")
+
+    def _scan(self, spark: SparkSession, snaps: List[dict],
+              schema: Optional[T.StructType], empty_error: str) -> DataFrame:
+        """The rows of the manifest entries ``snaps``, read under
+        ``schema`` when given. With no entries the result is an empty
+        frame of ``schema``; without a schema that raises
+        ``ValueError(empty_error)``."""
+        if not snaps:
+            if schema is None:
+                raise ValueError(empty_error)
+            return spark.createDataFrame([], schema)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(
+            *[os.path.join(self.path, s["dir"]) for s in snaps])
 
     def read(self, spark: SparkSession,
              schema: Optional[T.StructType] = None) -> DataFrame:
@@ -120,15 +136,8 @@ class SnapshotTable:
         without the footer-merging cost of ``mergeSchema`` — the
         schema-evolution contract Iceberg tables give for free.
         """
-        dirs = [os.path.join(self.path, s["dir"]) for s in self.snapshots()]
-        if not dirs:
-            if schema is None:
-                raise ValueError(
-                    f"empty table {self.path} needs an explicit schema"
-                )
-            return spark.createDataFrame([], schema)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*dirs)
+        return self._scan(spark, self.snapshots(), schema,
+                          f"empty table {self.path} needs an explicit schema")
 
     def read_excluding_meta(self, spark: SparkSession, meta: dict,
                             schema: Optional[T.StructType] = None
@@ -143,19 +152,10 @@ class SnapshotTable:
         appends poison the rerun (every doc looks like a duplicate of
         itself) and the replay commits empty output.
         """
-        dirs = [
-            os.path.join(self.path, s["dir"])
-            for s in self.snapshots()
-            if not all(s.get(k) == v for k, v in meta.items())
-        ]
-        if not dirs:
-            if schema is None:
-                raise ValueError(
-                    f"empty table {self.path} needs an explicit schema"
-                )
-            return spark.createDataFrame([], schema)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*dirs)
+        snaps = [s for s in self.snapshots()
+                 if not all(s.get(k) == v for k, v in meta.items())]
+        return self._scan(spark, snaps, schema,
+                          f"empty table {self.path} needs an explicit schema")
 
     def read_snapshot(self, spark: SparkSession, snap_id: int) -> DataFrame:
         return spark.read.parquet(self.snapshot_dir(snap_id))
@@ -166,19 +166,10 @@ class SnapshotTable:
         (Iceberg's ``VERSION AS OF`` shape) — reproduce any historical
         training-set cut exactly, long after later appends.
         """
-        dirs = [
-            os.path.join(self.path, s["dir"])
-            for s in self.snapshots() if s["id"] <= snap_id
-        ]
-        if not dirs:
-            if schema is None:
-                raise ValueError(
-                    f"nothing committed at or before {snap_id} in "
-                    f"{self.path}; need an explicit schema"
-                )
-            return spark.createDataFrame([], schema)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*dirs)
+        snaps = [s for s in self.snapshots() if s["id"] <= snap_id]
+        return self._scan(spark, snaps, schema,
+                          f"nothing committed at or before {snap_id} in "
+                          f"{self.path}; need an explicit schema")
 
     def read_since(self, spark: SparkSession, after_snap_id: int,
                    schema: Optional[T.StructType] = None,
@@ -192,21 +183,13 @@ class SnapshotTable:
         bounds the scan (inclusive) so a consumer that captured the
         head position first is immune to commits racing in behind it.
         """
-        dirs = [
-            os.path.join(self.path, s["dir"])
-            for s in self.snapshots()
-            if s["id"] > after_snap_id
-            and (up_to is None or s["id"] <= up_to)
-        ]
-        if not dirs:
-            if schema is None:
-                raise ValueError(
-                    f"no snapshots after {after_snap_id} in {self.path}; "
-                    "need an explicit schema for the empty result"
-                )
-            return spark.createDataFrame([], schema)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*dirs)
+        snaps = [s for s in self.snapshots()
+                 if s["id"] > after_snap_id
+                 and (up_to is None or s["id"] <= up_to)]
+        return self._scan(spark, snaps, schema,
+                          f"no snapshots after {after_snap_id} in "
+                          f"{self.path}; need an explicit schema for the "
+                          "empty result")
 
     # -- maintenance ----------------------------------------------------------
 
@@ -228,18 +211,9 @@ class SnapshotTable:
             df = df.coalesce(target_partitions)
 
         snap_id = self.latest_snapshot_id() + 1
-        staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        final = os.path.join(self.path, f"snap-{snap_id:05d}")
-        os.replace(staging, final)
-
-        new_manifest = [{"id": snap_id, "dir": os.path.basename(final),
-                         "ts": time.time(), "rows": None,
-                         "compacted_from": [s["id"] for s in snaps]}]
-        tmp = self._manifest_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(new_manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path())
+        self._commit([{"id": snap_id, "dir": self._stage(df, snap_id),
+                       "ts": time.time(),
+                       "compacted_from": [s["id"] for s in snaps]}])
 
         for s in snaps:
             shutil.rmtree(os.path.join(self.path, s["dir"]),
