@@ -27,19 +27,11 @@ def test_every_query_has_an_oracle_or_documented_exemption():
     assert set(QUERIES) == set(ORACLES)
 
 
-def test_staleness_rotation_reads_repo_root_evidence():
-    """The driver-evidence rotation must glob CORRECTNESS_r*.json at
-    the REPO root — after the r6 package split it silently globbed the
-    package dir, rotated nothing, and the r6 driver sample came out as
-    exactly REGISTRATION_ORDER[:50]."""
-    from zzzarchived_arxiv_fulltext_spark import queries as qpkg
+def test_registry_order_is_registration_order():
+    """``QUERIES`` stays in registration order: nothing outside the
+    package (no file at the repo root) reorders it at import."""
+    from zzzarchived_arxiv_fulltext_spark.queries import (
+        QUERIES, REGISTRATION_ORDER)
 
-    root = Path(qpkg.__file__).resolve().parent.parent.parent
-    files = sorted(root.glob("CORRECTNESS_r*.json"))
-    assert files, "repo root evidence files must be visible"
-    # a query with r6 driver evidence must not outrank one that has
-    # never been driver-checked
-    order = list(qpkg.QUERIES)
-    assert order.index("ps_text_extraction") < order.index(
-        "avg_word_length")
-    assert order != list(qpkg.REGISTRATION_ORDER)
+    want = json.loads(FIXTURE.read_text())["registration_order"]
+    assert list(QUERIES) == list(REGISTRATION_ORDER) == want

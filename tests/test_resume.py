@@ -84,6 +84,38 @@ def test_lineage_metrics_cover_all_docs(spark, tmp_tables):
     assert len({r["partition_id"] for r in lin}) >= 2
 
 
+
+def test_lineage_is_not_backfilled_for_compacted_snapshots(spark, tmp_tables):
+    """Compaction renumbers committed rows into a new snapshot id; the
+    lineage rows already written under the old ids still count them, so
+    the next run must not backfill the compacted snapshot again."""
+    from zzzarchived_arxiv_fulltext_spark.schema import LINEAGE_SCHEMA
+
+    out, lineage = tmp_tables
+
+    def lineage_docs():
+        return sum(r["n_docs"] for r in lineage.read(spark, LINEAGE_SCHEMA)
+                   .select("n_docs").collect())
+
+    full = spans_table(spark, 40, seed=9)
+    run_extraction(spark, full.where("pmod(xxhash64(doc_id), 2) = 0"),
+                   out, lineage, parallelism=2)
+    run_extraction(spark, full, out, lineage, parallelism=2)
+    assert lineage_docs() == 40
+    out.compact(spark)
+    assert run_extraction(spark, full, out, lineage, parallelism=2) is None
+    assert out.read(spark, OUTPUT_SCHEMA).count() == 40
+    assert lineage_docs() == 40
+
+    # a second compaction folds the first one in: still covered
+    run_extraction(spark, spans_table(spark, 50, seed=9), out, lineage,
+                   parallelism=2)
+    out.compact(spark)
+    assert run_extraction(spark, spans_table(spark, 50, seed=9), out,
+                          lineage, parallelism=2) is None
+    assert out.read(spark, OUTPUT_SCHEMA).count() == 50
+    assert lineage_docs() == 50
+
 def test_force_reextraction_and_latest_version_view(spark, tmp_tables):
     out, _ = tmp_tables
     df = spans_table(spark, 15, seed=11)

@@ -2,18 +2,24 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
 on DuckDB over the same parquet tables, then compares row count,
-sorted column names, and order-insensitive values.
+sorted column names, and order-insensitive values. Each result line
+carries the query's Spark seconds (building the frame plus collecting
+it). DuckDB runs under a memory limit and spills to a bounded temp
+directory inside the checkout, so an oracle whose plan blows up fails
+by name instead of exhausting the host.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 """
 
 import math
 import sys
+import time
 from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -120,6 +126,9 @@ def main():
                         shuffle_partitions=8)
 
     con = duckdb.connect()
+    con.execute("SET memory_limit='2GB'")
+    con.execute(f"SET temp_directory='{REPO / '.duckdb_tmp'}'")
+    con.execute("SET max_temp_directory_size='4GB'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -130,12 +139,15 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
         except Exception as ex:
-            print(f"[FAIL] {name}: spark raised {ex}")
+            print(f"[FAIL] {name} (spark {time.perf_counter() - t0:.2f}s): "
+                  f"spark raised {ex}")
             failures += 1
             continue
+        spark_s = time.perf_counter() - t0
         if name not in oracles:
             n = df.count()
             print(f"[rows-only] {name}: {n} rows")
@@ -146,15 +158,19 @@ def main():
             duck_types = list(rel.types)
             duck_rows = rel.fetchall()
         except Exception as ex:
-            print(f"[FAIL] {name}: duckdb raised {ex}")
+            print(f"[FAIL] {name} (spark {spark_s:.2f}s): duckdb raised {ex}")
             failures += 1
             continue
+        t0 = time.perf_counter()
         err = compare(name, df, duck_rows, duck_cols, duck_types)
+        # compare's collect runs the Spark query
+        spark_s += time.perf_counter() - t0
+        secs = f"(spark {spark_s:.2f}s)"
         if err:
-            print(f"[FAIL] {name}: {err}")
+            print(f"[FAIL] {name} {secs}: {err}")
             failures += 1
         else:
-            print(f"[OK]   {name}: {len(duck_rows)} rows match")
+            print(f"[OK]   {name} {secs}: {len(duck_rows)} rows match")
     print(f"\n{failures} failures")
     sys.exit(1 if failures else 0)
 

@@ -6,9 +6,11 @@ input at multiple parallelism levels, each in a fresh subprocess
 (fresh JVM). Writes BENCH/BASELINE.md with throughput at every level,
 the N vs 4N efficiencies, and a frameworkless control measurement
 that bounds what this single box can physically deliver for
-string-regex workloads at high core counts.
+string-regex workloads at high core counts. The fixture is cached
+under ``.bench_cache/`` in the checkout.
 
-Usage: python tools/scaling_bench.py [n_docs] [levels...]
+Usage: python -m tools.scaling_bench [n_docs] [levels...]
+(default: 120000 docs at levels 1 4)
 """
 
 import json
@@ -18,7 +20,7 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-CACHE = "/tmp/spark_graft_bench_cache"
+CACHE = REPO / ".bench_cache"
 
 _CHILD = """
 import json, sys, time
@@ -31,14 +33,14 @@ spark = build_spark(app_name=f"scale-{{cpus}}", master=f"local[{{cpus}}]",
                     shuffle_partitions=cpus)
 spark.sparkContext.setLogLevel("ERROR")
 # COLD: first full-input run in this fresh JVM — includes Python
-# worker spin-up (~13 s at 32 cores) and code-path JIT, i.e. what a
-# brand-new cluster pays once.
+# worker spin-up and code-path JIT, i.e. what a brand-new cluster pays
+# once.
 t0 = time.perf_counter()
 extract_documents(spark.read.parquet(path)) \\
     .write.format("noop").mode("overwrite").save()
 cold = time.perf_counter() - t0
 # WARM: best of 2 repeat runs with workers/JIT hot — the steady-state
-# number a long-running job sees (matches bench.py's headline).
+# number a long-running job sees.
 best = None
 for _ in range(2):
     t0 = time.perf_counter()
@@ -80,31 +82,19 @@ def run_json(code: str, *args: str) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def calibrations() -> tuple:
-    """(serial_sec, parallel_sec) box-speed probes (see bench.py) —
-    recorded in the MD so a reader can tell a quiet-window measurement
-    from a contended one before trusting the efficiency numbers."""
-    sys.path.insert(0, str(REPO))
-    import bench
-
-    return (bench.calibration_seconds(),
-            bench.calibration_parallel_seconds())
-
-
 def main():
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 120000
-    levels = [int(x) for x in sys.argv[2:]] or [2, 8, 32]
-    cal0 = calibrations()
+    levels = [int(x) for x in sys.argv[2:]] or [1, 4]
 
     # materialize the fixture once
     subprocess.run([sys.executable, "-c", f"""
 import sys; sys.path.insert(0, {str(REPO)!r})
 import os
 from zzzarchived_arxiv_fulltext_spark.config import build_spark
-from zzzarchived_arxiv_fulltext_spark.sources.fixtures import write_spans_parquet, DEFAULT_SEED
+from zzzarchived_arxiv_fulltext_spark.sources.fixtures import write_spans_parquet
 path = "{CACHE}/spans_{n_docs}_42"
 if not os.path.exists(path + "/_SUCCESS"):
-    spark = build_spark(master="local[32]")
+    spark = build_spark()
     spark.sparkContext.setLogLevel("ERROR")
     write_spans_parquet(spark, path, {n_docs})
 """], check=True, timeout=1200)
@@ -141,35 +131,14 @@ if not os.path.exists(path + "/_SUCCESS"):
         f"{eff(lo, hi) / ceff(lo, hi):.3f})"
         for lo, hi in pairs
     )
-    cal1 = calibrations()
-    # co-tenant load shows up as parallel calibration exceeding serial
-    # (all 8 probe workers queue behind foreign threads); a uniformly
-    # slow-but-idle box keeps parallel ≈ serial and is NOT contention
-    contended = max(cal0[1] / cal0[0], cal1[1] / cal1[0]) > 1.3
-    cal_note = (
-        f"Box-speed calibration (bench.py probes; idle box ~0.5 s "
-        f"serial): start {cal0[0]:.2f} s serial / {cal0[1]:.2f} s "
-        f"parallel-8, end {cal1[0]:.2f} / {cal1[1]:.2f}."
-        + (" **Parallel calibration exceeds 1.3x serial: this window"
-           " was CONTENDED — co-tenant load occupies the cores 4N"
-           " needs, so the raw N->4N number under-reads the engine;"
-           " read the engine-attributable ratio (and prefer a quieter"
-           " re-run) before judging the >=0.8 gate.**" if contended else
-           " Quiet window (parallel ≈ serial: no co-tenant load); the"
-           " efficiencies above reflect the engine plus this VM's"
-           " physical per-core scaling ceiling, with the"
-           " engine-attributable ratio isolating the engine.")
-    )
-
     md = f"""# BENCH/BASELINE — measured scaling evidence
 
 Identical extraction job (parquet scan → sort → Arrow pandas UDF →
 JVM reassembly → noop sink), identical materialized input
 ({n_docs} interleaved-span documents, seed 42), fresh JVM per level.
-COLD = first full run in the fresh JVM (pays Python-worker spin-up,
-~13 s at 32 cores, plus JIT — the one-time cost of a brand-new
-cluster). WARM = best of 2 repeat runs (steady state; matches
-bench.py's headline number):
+COLD = first full run in the fresh JVM (pays Python-worker spin-up
+plus JIT — the one-time cost of a brand-new cluster). WARM = best of
+2 repeat runs (steady state):
 
 | cores | cold sec | cold docs/sec | warm sec | warm docs/sec | control docs/sec (raw multiprocessing, same pure-Python extraction, no Spark) |
 |---|---|---|---|---|---|
@@ -177,8 +146,6 @@ bench.py's headline number):
 
 N vs 4N scaling efficiency on WARM throughput (target >= 0.8):
 {effs}
-
-{cal_note}
 
 Interpretation: the control column shows what this single VM can
 physically deliver for regex/string-heavy Python at each concurrency —
@@ -195,7 +162,8 @@ This engine: {max(r['docs_per_sec'] for r in results.values()):.0f} docs/sec
 warm ({max(r['cold_docs_per_sec'] for r in results.values()):.0f} cold)
 on one node.
 
-Generated by tools/scaling_bench.py on {time.strftime('%Y-%m-%d %H:%M:%S')}.
+Generated by `python -m tools.scaling_bench {n_docs} {' '.join(map(str, levels))}`
+on {time.strftime('%Y-%m-%d %H:%M:%S')}.
 """
     out_path = REPO / "BENCH" / "BASELINE.md"
     out_path.parent.mkdir(exist_ok=True)

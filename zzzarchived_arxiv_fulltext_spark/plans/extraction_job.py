@@ -127,17 +127,20 @@ def _heal_lineage(
     The output commit and the lineage commit are separate atomic steps;
     a crash between them leaves a committed snapshot with no metrics
     row. Lineage is derived data, so the fix is idempotent backfill at
-    the start of every run.
+    the start of every run. A compacted snapshot holds rows whose
+    lineage was written under the ids it was compacted from, so it is
+    covered once all of those have lineage.
     """
     have = {
         r["snapshot_id"]
         for r in lineage_table.read(spark, LINEAGE_SCHEMA)
         .select("snapshot_id").distinct().collect()
     } if lineage_table.snapshots() else set()
-    for snap_id in output_table.snapshot_ids():
-        if snap_id not in have:
+    for s in output_table.snapshots():
+        if s["id"] not in have and not have.issuperset(
+                s.get("compacted_from", [s["id"]])):
             lineage_table.append(
-                _lineage_from_snapshot(spark, output_table, snap_id)
+                _lineage_from_snapshot(spark, output_table, s["id"])
             )
 
 

@@ -3,8 +3,8 @@
 Package form of the original single-module battery (split per VERDICT
 r5 #7): ``_registry`` holds the shared dicts and helpers; the family
 modules below register every query at import, in the SAME order the
-single module did (import order == registration order); the driver
-staleness rotation and REGISTRATION_ORDER live here.
+single module did (import order == registration order), and
+``QUERIES`` keeps that order.
 
 Every natively-expressible operator from SURVEY.md §2 (and the
 training-data ops battery) is registered twice: as a PySpark DataFrame
@@ -29,88 +29,6 @@ from . import q_weblinks  # noqa: F401,E402
 
 __all__ = ["QUERIES", "ORACLES", "QueryFn", "REGISTRATION_ORDER"]
 
-# --------------------------------------------------------------------------
-# Driver-evidence scheduling.
-#
-# The correctness harness records a bounded prefix (~50 entries) of
-# this registry per round, in insertion order; with 70+ registered
-# queries, a static order would leave the tail permanently without a
-# driver-recorded row. Rotate the queries that have never (or least
-# recently) appeared in a driver CORRECTNESS_r*.json to the FRONT so
-# every operator accumulates hard driver evidence across rounds. The
-# full battery is still verified every round by tools/check_oracles.py
-# regardless of position.
-# --------------------------------------------------------------------------
-
-def _driver_staleness_order() -> list:
-    """Order queries by how badly they need fresh driver evidence:
-
-    1. queries whose LATEST driver check failed (need a green row ASAP),
-    2. then by the round of their latest driver check, oldest first
-       (never-checked queries sort as round 0, i.e. to the front),
-    3. registration order as the deterministic tie-break.
-
-    Evidence is read from the committed ``CORRECTNESS_r*.json`` files at
-    the repo root, so the rotation maintains itself — a new query or a
-    stale one surfaces automatically instead of via a hand-curated list
-    (VERDICT r4 #4).
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    latest: dict = {}  # name -> (round, passed)
-    # CORRECTNESS_r*.json live at the REPO root: three levels up from
-    # queries/__init__.py (queries/ -> package -> repo). The r6 package
-    # split moved this file one level deeper and the old parent.parent
-    # silently globbed the package dir instead — the rotation became a
-    # no-op and the r6 driver sample was exactly registration order.
-    root = Path(__file__).resolve().parent.parent.parent
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(p.read_text())
-        except Exception:
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, v in rows.items():
-            if name in latest and latest[name][0] >= rnd:
-                continue
-            if isinstance(v, dict):
-                ok = (bool(v.get("rows_match"))
-                      and v.get("schema_match") is not False
-                      and v.get("hash_match") is not False
-                      and not v.get("err"))
-            else:
-                ok = False
-            latest[name] = (rnd, ok)
-
-    reg_idx = {n: i for i, n in enumerate(QUERIES)}
-
-    def key(name):
-        rnd, ok = latest.get(name, (0, True))
-        return (0 if (name in latest and not ok) else 1, rnd, reg_idx[name])
-
-    return sorted(QUERIES, key=key)
-
-
-#: Immutable registration order, captured BEFORE the driver staleness
-#: rotation below reorders ``QUERIES``. bench.py times the battery in
-#: this order so per-query times are comparable round-over-round —
-#: otherwise each round a different battery head eats the JVM/worker
-#: cold start and shows up as a phantom regression (VERDICT r5 #1).
+#: Immutable copy of the registration order, for callers that time the
+#: battery in a fixed order.
 REGISTRATION_ORDER = tuple(QUERIES)
-
-
-def _schedule_for_driver() -> None:
-    for n in _driver_staleness_order():
-        QUERIES[n] = QUERIES.pop(n)
-        if n in ORACLES:
-            ORACLES[n] = ORACLES.pop(n)
-
-
-_schedule_for_driver()

@@ -659,7 +659,7 @@ def _keep_list_sql(threshold: float = 0.5, hashes: int = 16,
       JOIN sizes sb ON sb.id = i.id_b
       WHERE i.n_inter / (sa.n + sb.n - i.n_inter) >= {threshold}
     ),
-    e AS (
+    e AS MATERIALIZED (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs

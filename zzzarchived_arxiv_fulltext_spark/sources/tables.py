@@ -201,7 +201,9 @@ class SnapshotTable:
         listing, split packing); compaction is the standard remedy.
         Readers are never broken: data is staged first, the manifest
         replace is atomic, and old snapshot dirs are removed only
-        after the new manifest is durable.
+        after the new manifest is durable. The new entry's
+        ``compacted_from`` lists the appended snapshots whose rows it
+        holds, through earlier compactions too.
         """
         snaps = self.snapshots()
         if len(snaps) <= 1:
@@ -213,7 +215,9 @@ class SnapshotTable:
         snap_id = self.latest_snapshot_id() + 1
         self._commit([{"id": snap_id, "dir": self._stage(df, snap_id),
                        "ts": time.time(),
-                       "compacted_from": [s["id"] for s in snaps]}])
+                       "compacted_from": [
+                           i for s in snaps
+                           for i in s.get("compacted_from", [s["id"]])]}])
 
         for s in snaps:
             shutil.rmtree(os.path.join(self.path, s["dir"]),
