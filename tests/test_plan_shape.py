@@ -31,7 +31,7 @@ def test_extraction_is_map_only(spark, tmp_path):
     assert "ArrowEvalPython" in plan  # single Arrow-batched UDF stage
 
 
-def test_salted_path_has_exactly_one_exchange(spark, tmp_path):
+def test_packed_path_has_exactly_one_exchange(spark, tmp_path):
     path = str(tmp_path / "spans")
     spans_table(spark, 50, seed=1).write.parquet(path)
     plan = _plan(extract_documents(spark.read.parquet(path), parallelism=4))

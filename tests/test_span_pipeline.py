@@ -5,6 +5,8 @@ sequence equals the oracle's, compared on (kind, text, media_ref,
 order).
 """
 
+import random
+
 import pytest
 
 from zzzarchived_arxiv_fulltext_spark.functions import extract_document
@@ -64,6 +66,51 @@ def test_fixture_mix_covers_all_paths(extracted_rows):
         if r["n_media_spans"] > 0 and r["n_text_spans"] == 0
     ]
     assert media_only and all(len(r["spans"]) > 0 for r in media_only)
+
+
+def test_packed_extraction_balances_giants_and_keeps_rows(spark):
+    """``parallelism=16`` on ``local[4]``: one task per core, each giant
+    on its own task, chars balanced across tasks, and the same rows as
+    the map-only path apart from timestamps and ``partition_id``."""
+    rng = random.Random(7)
+    words = ["spark", "document", "extraction", "of", "the", "arxiv",
+             "full", "text", "pipeline", "a", "span", "balanced"]
+
+    def spans(n_words):
+        text = "\n".join(
+            " ".join(rng.choice(words) for _ in range(12))
+            for _ in range(n_words // 12))
+        return [{"kind": "text", "text": text, "media_ref": None,
+                 "offset": 0}]
+
+    rows = [(f"giant{i}", "arxiv", spans(6000)) for i in range(3)]
+    rows += [(f"small{i}", "arxiv", spans(rng.randint(24, 96)))
+             for i in range(400)]
+    # one doc_id in two buckets, large enough to be placed by size
+    rows += [("dup", bucket, spans(300)) for bucket in ("arxiv", "submission")]
+    df = spark.createDataFrame(
+        rows,
+        "doc_id string, bucket string, spans array<struct<kind:string,"
+        "text:string,media_ref:string,offset:int>>")
+    chars = {(b, d): sum(len(s["text"]) for s in sp) for d, b, sp in rows}
+
+    packed = extract_documents(df, parallelism=16).collect()
+    part = {(r["bucket"], r["doc_id"]): r["partition_id"] for r in packed}
+    assert len(set(part.values())) == 4
+    assert len({part["arxiv", f"giant{i}"] for i in range(3)}) == 3
+    assert part["arxiv", "dup"] == part["submission", "dup"]
+    bin_chars = [0] * 4
+    for key, p in part.items():
+        bin_chars[p] += chars[key]
+    assert max(bin_chars) / (sum(bin_chars) / 4) <= 1.15, bin_chars
+
+    def content(rows):
+        drop = ("started", "ended", "partition_id")
+        return sorted(
+            (tuple(v for k, v in r.asDict().items() if k not in drop)
+             for r in rows), key=lambda t: t[:2])
+
+    assert content(packed) == content(extract_documents(df).collect())
 
 
 def test_generator_is_deterministic_across_partitioning(spark):

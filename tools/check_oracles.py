@@ -4,15 +4,20 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
 on DuckDB over the same parquet tables, then compares row count,
 sorted column names, and order-insensitive values. Each result line
 carries the query's Spark seconds (building the frame plus collecting
-it). DuckDB runs under a memory limit and spills to a bounded temp
-directory inside the checkout, so an oracle whose plan blows up fails
-by name instead of exhausting the host.
+it). DuckDB runs under a memory limit, spills to a bounded temp
+directory inside the checkout and is interrupted after
+``ORACLE_TIMEOUT_S``, so an oracle whose plan blows up fails by name
+instead of exhausting the host. The Spark session runs at
+``build_spark``'s default master (``SPARK_GRAFT_CPUS``, else all cores)
+with two shuffle partitions per core, so the Spark seconds are not
+measured oversubscribed.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 """
 
 import math
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -20,6 +25,9 @@ import duckdb
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+# The slowest oracle takes under a second; this only stops a runaway.
+ORACLE_TIMEOUT_S = 30
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -115,6 +123,18 @@ def compare(name, spark_df, duck_rows, duck_cols, duck_types=None):
     return None
 
 
+def run_oracle(con, sql):
+    """``(columns, types, rows)`` of ``sql``, interrupted after
+    ``ORACLE_TIMEOUT_S`` (DuckDB then raises ``InterruptException``)."""
+    timer = threading.Timer(ORACLE_TIMEOUT_S, con.interrupt)
+    timer.start()
+    try:
+        rel = con.sql(sql)
+        return list(rel.columns), list(rel.types), rel.fetchall()
+    finally:
+        timer.cancel()
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -122,8 +142,9 @@ def main():
     import __spark_entry__ as e
     from zzzarchived_arxiv_fulltext_spark.config import build_spark
 
-    spark = build_spark(app_name="oracle-check", master="local[8]",
-                        shuffle_partitions=8)
+    spark = build_spark(app_name="oracle-check")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   2 * spark.sparkContext.defaultParallelism)
 
     con = duckdb.connect()
     con.execute("SET memory_limit='2GB'")
@@ -153,10 +174,12 @@ def main():
             print(f"[rows-only] {name}: {n} rows")
             continue
         try:
-            rel = con.sql(oracles[name])
-            duck_cols = list(rel.columns)
-            duck_types = list(rel.types)
-            duck_rows = rel.fetchall()
+            duck_cols, duck_types, duck_rows = run_oracle(con, oracles[name])
+        except duckdb.InterruptException:
+            print(f"[FAIL] {name}: duckdb timed out after "
+                  f"{ORACLE_TIMEOUT_S} s")
+            failures += 1
+            continue
         except Exception as ex:
             print(f"[FAIL] {name} (spark {spark_s:.2f}s): duckdb raised {ex}")
             failures += 1

@@ -34,8 +34,9 @@ def main():
     ap.add_argument("--output", required=True)
     ap.add_argument("--lineage")
     ap.add_argument("--parallelism", type=int, default=None,
-                    help="salted-repartition width; omit to rely on "
-                         "input split sizing (preferred for parquet)")
+                    help="upper bound on extraction tasks: pack docs by "
+                         "chars into one task per core, at most this many; "
+                         "omit to extract in the input's own splits")
     ap.add_argument("--force", action="store_true",
                     help="re-extract even if committed (controllers.py:140)")
     ap.add_argument("--incremental", action="store_true",

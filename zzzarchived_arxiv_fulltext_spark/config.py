@@ -28,7 +28,7 @@ SHUFFLE_PARTITIONS = 32
 # scan-optimal 128m — a 4m split is ~2s of UDF work. At real 100TB
 # scale any value yields ample splits; locally it decides whether 32
 # cores get work at all.
-MAX_PARTITION_BYTES = "4m"
+MAX_PARTITION_BYTES = 4 << 20
 # openCost doubles as the FLOOR on split size for small inputs
 # (maxSplitBytes = min(maxPartitionBytes, max(openCost,
 # total/minPartitionNum))). 512k was kept after measuring a 16k floor:
@@ -99,7 +99,7 @@ def build_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_BATCH))
-        .config("spark.sql.files.maxPartitionBytes", MAX_PARTITION_BYTES)
+        .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         .config("spark.sql.files.openCostInBytes", OPEN_COST_BYTES)
         .config("spark.sql.optimizer.excludedRules", EXCLUDED_RULES)
         # reliable checkpoints (materialize.reuse under a cluster

@@ -21,15 +21,18 @@ Reference analogue: the per-document Celery task body
 DataFrame stage.
 """
 
+import heapq
+import itertools
 from typing import Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .. import EXTRACTOR_VERSION
+from ..config import MAX_PARTITION_BYTES
 from ..functions.extract import extract_texts
 from ..schema import DEFAULT_BUCKET
 
@@ -92,28 +95,101 @@ if(size(_sorted_spans) = 0,
 """
 
 
-def salt_column(parallelism: int) -> Column:
-    """Skew-spreading repartition key.
+# Char budget of one extraction task: one input split
+# (config.MAX_PARTITION_BYTES, ~2 s of UDF work) read as chars.
+_TASK_CHARS = MAX_PARTITION_BYTES
+# The sizing action returns this many of the largest docs per bin the
+# caller allows; they are placed one by one, the rest by hash.
+_HEAVY_PER_BIN = 4
 
-    Documents cannot be split below row granularity, so balance comes
-    from spreading docs uniformly over ``parallelism·8`` buckets.
-    Cheap JVM-side hash, no extra scan. Only worth its shuffle when
-    the source partitioning is pathologically clustered — a parquet
-    scan with small ``maxPartitionBytes`` splits is already uniform.
+_DOC_CHARS = "aggregate(spans, 0L, (a, s) -> a + coalesce(length(s.text), 0))"
+
+
+def _water_level(loads: list, rest: int) -> float:
+    """The level ``T`` at which ``sum(max(T - load, 0))`` equals
+    ``rest``: pouring ``rest`` chars into the emptiest bins first."""
+    low = sorted(loads)
+    filled = 0
+    for i, load in enumerate(low):
+        filled += load
+        level = (rest + filled) / (i + 1)
+        if i + 1 == len(low) or level <= low[i + 1]:
+            break
+    return level
+
+
+def _packed(df: DataFrame, parallelism: int) -> DataFrame:
+    """``df`` repartitioned into char-balanced bins, one task each.
+
+    One sizing action computes each doc's chars in the JVM and returns
+    only the ``_HEAVY_PER_BIN · parallelism`` largest docs, with the
+    total chars observed on the same pass. The bin count is one per
+    core, capped at ``parallelism``; it grows by whole multiples of
+    the cores only when a bin would exceed ``_TASK_CHARS``. The large
+    docs go largest-first onto the least-loaded bin (LPT) and are
+    pinned there by ``doc_id``; every other doc is routed by
+    ``xxhash64(doc_id)``, weighted by the room each bin has left
+    below the common level (water-filling). Placement decides only
+    which task runs a doc, never what it outputs.
     """
-    return F.pmod(F.xxhash64("doc_id"), F.lit(parallelism * 8))
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    seen = Observation("doc_chars")
+    top = (
+        df.select("doc_id", F.expr(_DOC_CHARS).alias("chars"))
+        .observe(seen, F.sum("chars").alias("total"))
+        .orderBy(F.desc("chars"), "doc_id")
+        .limit(_HEAVY_PER_BIN * parallelism)
+        .collect()
+    )
+    total = seen.get["total"] or 0
+    bins = min(parallelism, cores)
+    if total > bins * _TASK_CHARS:
+        bins = min(parallelism, cores * -(-total // (cores * _TASK_CHARS)))
+
+    # a doc_id may head two rows (one per bucket); the map takes one
+    # key per doc_id, so its rows are placed together
+    heavy = {}
+    for row in top:
+        if row.doc_id is not None:
+            heavy[row.doc_id] = heavy.get(row.doc_id, 0) + row.chars
+    loads = [(0, b) for b in range(bins)]
+    pinned = {}
+    for doc_id, chars in sorted(heavy.items(), key=lambda kv: -kv[1]):
+        load, b = heapq.heappop(loads)
+        pinned[doc_id] = b
+        heapq.heappush(loads, (load + chars, b))
+    loads = [load for load, _ in sorted(loads, key=lambda lb: lb[1])]
+
+    level = _water_level(loads, max(total - sum(loads), 0))
+    room = [max(int(level) - load, 0) for load in loads]
+    if not any(room):  # no chars left to route: any split will do
+        room = [1] * bins
+    cuts = list(itertools.accumulate(room))
+    bin_id = F.size(F.filter(
+        F.array(*map(F.lit, cuts)),
+        lambda cut: cut <= F.pmod(F.xxhash64("doc_id"), F.lit(cuts[-1]))))
+    if pinned:
+        keyed = F.create_map(*(F.lit(v) for kv in pinned.items() for v in kv))
+        bin_id = F.coalesce(keyed[F.col("doc_id")], bin_id)
+    return df.repartitionById(bins, bin_id)
 
 
 def extract_documents(df: DataFrame,
                       parallelism: Optional[int] = None) -> DataFrame:
     """input (doc_id, spans) → extracted output columns.
 
-    Plan shape: scan → [optional repartition(salt)] → sort+project
-    (JVM) → pandas UDF over text arrays → JVM reassembly. Map-only
-    unless salting is requested.
+    Plan shape: scan → [optional char-balanced repartition] →
+    sort+project (JVM) → pandas UDF over text arrays → JVM
+    reassembly. Map-only when ``parallelism`` is None.
+
+    ``parallelism`` is an upper bound on the extraction tasks: the
+    docs are packed by chars into one task per core (more only when a
+    task would exceed its char budget), never into more than
+    ``parallelism``. Packing runs one sizing action when this frame
+    is built; see ``_packed``.
     """
     if parallelism is not None:
-        df = df.repartition(parallelism, salt_column(parallelism))
+        df = _packed(df, parallelism)
 
     started = F.current_timestamp()
     sorted_spans = F.expr("array_sort(spans, (a, b) -> a.offset - b.offset)")

@@ -158,6 +158,11 @@ def run_extraction(
     Returns None when there was nothing to do (all documents already
     committed at this extractor version).
 
+    ``parallelism`` caps the extraction tasks: given, the pending docs
+    are packed by chars into one task per core, never more than
+    ``parallelism`` (``operators/span_extract.extract_documents``);
+    omitted, extraction runs in the input's own splits.
+
     ``validate_spans=True`` gates the input on the span-table
     invariant (``operators/span_audit``): documents violating it are
     NOT extracted — extraction over undefined span order would commit
