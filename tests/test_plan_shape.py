@@ -41,6 +41,33 @@ def test_packed_path_has_exactly_one_exchange(spark, tmp_path):
     assert len(nodes) == 1, plan
 
 
+def test_packed_run_extraction_runs_five_jobs(spark, tmp_path):
+    """One packed ``run_extraction`` with lineage on fresh tables: the
+    sizing collect, the output write (shuffle map + write), and the
+    lineage write (shuffle map + write). The sizing action also says
+    whether anything is pending, and the lineage reads the committed
+    snapshot under ``OUTPUT_SCHEMA``, so neither needs a job of its
+    own."""
+    from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
+        run_extraction,
+    )
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import SnapshotTable
+
+    path = str(tmp_path / "spans")
+    spans_table(spark, 50, seed=1).write.parquet(path)
+    df = spark.read.parquet(path)
+    out = SnapshotTable(str(tmp_path / "out"))
+    lineage = SnapshotTable(str(tmp_path / "lineage"))
+    sc = spark.sparkContext
+    group = f"five-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        run_extraction(spark, df, out, lineage, parallelism=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+
+
 def test_revenue_join_broadcasts_and_pushes_filters(spark):
     from zzzarchived_arxiv_fulltext_spark.queries import QUERIES
 

@@ -384,7 +384,9 @@ def test_span_integrity_clean_on_real_fixture(spark):
     assert sum(v for k, v in report.items() if k != "clean") == 0
 
 
-def test_run_extraction_quarantines_invalid_spans(spark, tmp_path):
+@pytest.mark.parametrize("parallelism", [None, 4])
+def test_run_extraction_quarantines_invalid_spans(spark, tmp_path,
+                                                  parallelism):
     from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
         run_extraction,
     )
@@ -408,7 +410,8 @@ def test_run_extraction_quarantines_invalid_spans(spark, tmp_path):
         "doc_id string, bucket string, spans array<struct<kind:string,"
         "text:string,media_ref:string,offset:int>>")
     out = SnapshotTable(str(tmp_path / "out"))
-    run_extraction(spark, df, out, validate_spans=True)
+    run_extraction(spark, df, out, validate_spans=True,
+                   parallelism=parallelism)
     committed = out.read(spark).collect()
     # one committed row per input row: validation must not fan out
     # rows that share a doc_id across buckets
@@ -424,4 +427,65 @@ def test_run_extraction_quarantines_invalid_spans(spark, tmp_path):
         got["good"]["extractor_version"]
     # quarantined docs are committed work: a second increment over the
     # same input has nothing to do
-    assert run_extraction(spark, df, out, validate_spans=True) is None
+    assert run_extraction(spark, df, out, validate_spans=True,
+                          parallelism=parallelism) is None
+
+    # every pending doc invalid: none reaches the UDF, yet its row
+    # commits, and then nothing is pending
+    invalid = df.where("doc_id = 'dup_off'")
+    only_invalid = SnapshotTable(str(tmp_path / "only_invalid"))
+    assert run_extraction(spark, invalid, only_invalid, validate_spans=True,
+                          parallelism=parallelism) is not None
+    [row] = only_invalid.read(spark).collect()
+    assert (row["doc_id"], row["failure_class"]) == ("dup_off",
+                                                     "invalid_spans")
+    assert run_extraction(spark, invalid, only_invalid, validate_spans=True,
+                          parallelism=parallelism) is None
+
+
+def test_drop_zip_finders_stops_directory_rereads(tmp_path, monkeypatch):
+    """After ``_drop_zip_finders`` no zip finder is cached, so
+    ``importlib.invalidate_caches()`` re-reads no archive directory,
+    and the archive's other modules still import."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from zzzarchived_arxiv_fulltext_spark.operators.span_extract import (
+        _drop_zip_finders,
+    )
+
+    archive = tmp_path / "finders.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipfinderpkg/__init__.py", "")
+        z.writestr("zipfinderpkg/first.py", "VALUE = 1\n")
+        z.writestr("zipfinderpkg/second.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(str(archive))
+
+    def zip_finders():
+        return [p for p, f in sys.path_importer_cache.items()
+                if isinstance(f, zipimport.zipimporter)]
+
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counted(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counted)
+    try:
+        importlib.import_module("zipfinderpkg.first")
+        assert zip_finders()
+        _drop_zip_finders()
+        assert zip_finders() == []
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads == []
+        assert importlib.import_module("zipfinderpkg.second").VALUE == 2
+    finally:
+        for name in ("zipfinderpkg", "zipfinderpkg.first",
+                     "zipfinderpkg.second"):
+            sys.modules.pop(name, None)
+        _drop_zip_finders()  # no finder may outlive the temp archive

@@ -32,20 +32,25 @@ cpus, n_docs, path = int(sys.argv[1]), int(sys.argv[2]), sys.argv[3]
 spark = build_spark(app_name=f"scale-{{cpus}}", master=f"local[{{cpus}}]",
                     shuffle_partitions=cpus)
 spark.sparkContext.setLogLevel("ERROR")
+
+def run():
+    # the char-packed path that perfbench and run_extraction_job
+    # --parallelism take; its sizing action runs inside the timed call
+    extract_documents(spark.read.parquet(path), parallelism=4 * cpus) \\
+        .write.format("noop").mode("overwrite").save()
+
 # COLD: first full-input run in this fresh JVM — includes Python
 # worker spin-up and code-path JIT, i.e. what a brand-new cluster pays
 # once.
 t0 = time.perf_counter()
-extract_documents(spark.read.parquet(path)) \\
-    .write.format("noop").mode("overwrite").save()
+run()
 cold = time.perf_counter() - t0
 # WARM: best of 2 repeat runs with workers/JIT hot — the steady-state
 # number a long-running job sees.
 best = None
 for _ in range(2):
     t0 = time.perf_counter()
-    extract_documents(spark.read.parquet(path)) \\
-        .write.format("noop").mode("overwrite").save()
+    run()
     sec = time.perf_counter() - t0
     best = sec if best is None or sec < best else best
 print(json.dumps({{"cpus": cpus, "docs": n_docs,
@@ -139,8 +144,9 @@ if not os.path.exists(path + "/_SUCCESS"):
     )
     md = f"""# BENCH/BASELINE — measured scaling evidence
 
-Identical extraction job (parquet scan → sort → Arrow pandas UDF →
-JVM reassembly → noop sink), identical materialized input
+Identical extraction job (parquet scan → char packing into one task
+per core, `parallelism` = 4 × cores → sort → Arrow pandas UDF → JVM
+reassembly → noop sink), identical materialized input
 ({n_docs} interleaved-span documents, seed 42), fresh JVM per level.
 COLD = first full run in the fresh JVM (pays Python-worker spin-up
 plus JIT — the one-time cost of a brand-new cluster). WARM = best of

@@ -23,7 +23,10 @@ DataFrame stage.
 
 import heapq
 import itertools
-from typing import Optional
+import json
+import sys
+import zipimport
+from typing import Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation
@@ -53,11 +56,35 @@ _TEXT_RESULT = T.StructType(
 )
 
 
+def _drop_zip_finders() -> None:
+    """Forget the worker's cached zip-archive import finders.
+
+    PySpark calls ``importlib.invalidate_caches()`` before every Python
+    task (``pyspark.worker_util.setup_spark_files``). Under CPython
+    3.11 that makes each ``zipimporter`` in ``sys.path_importer_cache``
+    re-read its archive's whole directory: a local worker holds 17 of
+    them (12 on pyspark.zip, 2 on the spark-core jar, 2 on py4j, 1 on
+    the shipped package), ~26.7k entries, 0.26-0.32 s of wall per task
+    on 4 busy cores. Dropped after each batch, they are gone when the
+    reused worker's next task invalidates (0.1 ms). A finder dropped
+    here is rebuilt by the next import that needs it from
+    ``zipimport._zip_directory_cache``, without reading the archive;
+    Spark never rewrites a shipped archive within an application, so
+    that cache stays true.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
 @pandas_udf(_TEXT_RESULT)
 def extract_texts_udf(texts: pd.Series) -> pd.DataFrame:
     """``functions.extract.extract_texts`` over each document's
     offset-ordered text spans in the Arrow batch."""
-    return pd.DataFrame([extract_texts(doc) for doc in texts])
+    out = pd.DataFrame([extract_texts(doc) for doc in texts])
+    _drop_zip_finders()
+    return out
 
 
 # JVM-side reassembly in two linear passes: (1) a prefix-count fold
@@ -118,25 +145,29 @@ def _water_level(loads: list, rest: int) -> float:
     return level
 
 
-def _packed(df: DataFrame, parallelism: int) -> DataFrame:
-    """``df`` repartitioned into char-balanced bins, one task each.
+def pack_documents(df: DataFrame,
+                   parallelism: int) -> Tuple[DataFrame, int]:
+    """``df`` repartitioned into char-balanced bins, one task each,
+    and the number of rows the sizing action saw.
 
     One sizing action computes each doc's chars in the JVM and returns
     only the ``_HEAVY_PER_BIN · parallelism`` largest docs, with the
-    total chars observed on the same pass. The bin count is one per
-    core, capped at ``parallelism``; it grows by whole multiples of
-    the cores only when a bin would exceed ``_TASK_CHARS``. The large
-    docs go largest-first onto the least-loaded bin (LPT) and are
-    pinned there by ``doc_id``; every other doc is routed by
-    ``xxhash64(doc_id)``, weighted by the room each bin has left
-    below the common level (water-filling). Placement decides only
-    which task runs a doc, never what it outputs.
+    total chars and the row count observed on the same pass. The bin
+    count is one per core, capped at ``parallelism``; it grows by
+    whole multiples of the cores only when a bin would exceed
+    ``_TASK_CHARS``. The large docs go largest-first onto the
+    least-loaded bin (LPT) and are pinned there by ``doc_id``; every
+    other doc is routed by ``xxhash64(doc_id)``, weighted by the room
+    each bin has left below the common level (water-filling).
+    Placement decides only which task runs a doc, never what it
+    outputs.
     """
     cores = df.sparkSession.sparkContext.defaultParallelism
     seen = Observation("doc_chars")
     top = (
         df.select("doc_id", F.expr(_DOC_CHARS).alias("chars"))
-        .observe(seen, F.sum("chars").alias("total"))
+        .observe(seen, F.sum("chars").alias("total"),
+                 F.count(F.lit(1)).alias("rows"))
         .orderBy(F.desc("chars"), "doc_id")
         .limit(_HEAVY_PER_BIN * parallelism)
         .collect()
@@ -165,13 +196,21 @@ def _packed(df: DataFrame, parallelism: int) -> DataFrame:
     if not any(room):  # no chars left to route: any split will do
         room = [1] * bins
     cuts = list(itertools.accumulate(room))
+    # the cut array and the pin map each cross py4j as one JSON
+    # string that Catalyst folds to a literal: a Column per element
+    # would cost one py4j round trip each
     bin_id = F.size(F.filter(
-        F.array(*map(F.lit, cuts)),
+        _json_literal(cuts, "array<bigint>"),
         lambda cut: cut <= F.pmod(F.xxhash64("doc_id"), F.lit(cuts[-1]))))
     if pinned:
-        keyed = F.create_map(*(F.lit(v) for kv in pinned.items() for v in kv))
+        keyed = _json_literal(pinned, "map<string,int>")
         bin_id = F.coalesce(keyed[F.col("doc_id")], bin_id)
-    return df.repartitionById(bins, bin_id)
+    return df.repartitionById(bins, bin_id), seen.get["rows"]
+
+
+def _json_literal(value, ddl: str):
+    """``value`` as a constant Column of type ``ddl``."""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
 
 
 def extract_documents(df: DataFrame,
@@ -186,10 +225,10 @@ def extract_documents(df: DataFrame,
     docs are packed by chars into one task per core (more only when a
     task would exceed its char budget), never into more than
     ``parallelism``. Packing runs one sizing action when this frame
-    is built; see ``_packed``.
+    is built; see ``pack_documents``.
     """
     if parallelism is not None:
-        df = _packed(df, parallelism)
+        df, _ = pack_documents(df, parallelism)
 
     started = F.current_timestamp()
     sorted_spans = F.expr("array_sort(spans, (a, b) -> a.offset - b.offset)")

@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 
 from .. import EXTRACTOR_VERSION
 from ..operators.span_audit import invalid_spans
-from ..operators.span_extract import extract_documents
+from ..operators.span_extract import extract_documents, pack_documents
 from ..schema import (
     DEFAULT_BUCKET,
     INPUT_SCHEMA,
@@ -90,7 +90,7 @@ def pending_documents(
 def _lineage_from_snapshot(
     spark: SparkSession, output_table: SnapshotTable, snap_id: int
 ) -> DataFrame:
-    committed = output_table.read_snapshot(spark, snap_id)
+    committed = output_table.read_snapshot(spark, snap_id, OUTPUT_SCHEMA)
     return (
         committed.groupBy("partition_id")
         .agg(
@@ -160,8 +160,9 @@ def run_extraction(
 
     ``parallelism`` caps the extraction tasks: given, the pending docs
     are packed by chars into one task per core, never more than
-    ``parallelism`` (``operators/span_extract.extract_documents``);
-    omitted, extraction runs in the input's own splits.
+    ``parallelism`` (``operators/span_extract.pack_documents``, whose
+    sizing action also says whether anything is pending); omitted,
+    extraction runs in the input's own splits.
 
     ``validate_spans=True`` gates the input on the span-table
     invariant (``operators/span_audit``): documents violating it are
@@ -174,7 +175,11 @@ def run_extraction(
     if lineage_table is not None:
         _heal_lineage(spark, output_table, lineage_table)
     todo = pending_documents(input_df, output_table, spark, force=force)
-    if todo.isEmpty():
+    if parallelism is None:
+        pending = not todo.isEmpty()
+    else:  # the packer's sizing action also counts the pending rows
+        todo, pending = pack_documents(todo, parallelism)
+    if not pending:
         return None
     if validate_spans:
         todo = todo.withColumn("_invalid", invalid_spans())
@@ -201,10 +206,9 @@ def run_extraction(
             F.spark_partition_id().alias("partition_id"),
         )
         extracted = extract_documents(
-            todo.where("NOT _invalid"), parallelism=parallelism
-        ).unionByName(quarantined)
+            todo.where("NOT _invalid")).unionByName(quarantined)
     else:
-        extracted = extract_documents(todo, parallelism=parallelism)
+        extracted = extract_documents(todo)
     return _commit(spark, extracted, output_table, lineage_table)
 
 

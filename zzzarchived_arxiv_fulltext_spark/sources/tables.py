@@ -106,11 +106,14 @@ class SnapshotTable:
 
     # -- read ---------------------------------------------------------------
 
-    def snapshot_dir(self, snap_id: int) -> str:
+    def _entry(self, snap_id: int) -> dict:
         for s in self.snapshots():
             if s["id"] == snap_id:
-                return os.path.join(self.path, s["dir"])
+                return s
         raise KeyError(f"no snapshot {snap_id} in {self.path}")
+
+    def snapshot_dir(self, snap_id: int) -> str:
+        return os.path.join(self.path, self._entry(snap_id)["dir"])
 
     def _scan(self, spark: SparkSession, snaps: List[dict],
               schema: Optional[T.StructType], empty_error: str) -> DataFrame:
@@ -157,8 +160,13 @@ class SnapshotTable:
         return self._scan(spark, snaps, schema,
                           f"empty table {self.path} needs an explicit schema")
 
-    def read_snapshot(self, spark: SparkSession, snap_id: int) -> DataFrame:
-        return spark.read.parquet(self.snapshot_dir(snap_id))
+    def read_snapshot(self, spark: SparkSession, snap_id: int,
+                      schema: Optional[T.StructType] = None) -> DataFrame:
+        """The rows of snapshot ``snap_id`` alone; ``schema``, when
+        given, is imposed as in ``read`` and spares the footer-reading
+        job that infers it."""
+        return self._scan(spark, [self._entry(snap_id)], schema,
+                          f"no snapshot {snap_id} in {self.path}")
 
     def read_as_of(self, spark: SparkSession, snap_id: int,
                    schema: Optional[T.StructType] = None) -> DataFrame:
