@@ -264,11 +264,14 @@ def test_round6_operators_plan_shapes(spark):
     assert "Exchange" not in plan, plan
     assert "EvalPython" not in plan and "InPandas" not in plan, plan
 
-    # SemDeDup pairs: the ONLY joins are keyed on centroid_id (no
-    # unkeyed cartesian), and no Python stage anywhere
+    # SemDeDup pairs: no unkeyed cartesian, exactly one per-cluster
+    # pandas kernel, and no join back on the vector id
     plan = _plan(semantic_near_duplicates(vecs, cents, threshold=0.9))
     assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan and "InPandas" not in plan, plan
+    assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", plan)) == 1, \
+        plan
+    keys = re.findall(r"(?:Left|Right) keys \[\d+\]: \[([^\]]*)\]", plan)
+    assert keys and not any("vec_id" in k for k in keys), plan
 
     # classifier scoring: the weights are INLINED as an array literal
     # (element_at lookup — r7: no weight-table join or broadcast

@@ -116,6 +116,30 @@ def test_lineage_is_not_backfilled_for_compacted_snapshots(spark, tmp_tables):
     assert out.read(spark, OUTPUT_SCHEMA).count() == 50
     assert lineage_docs() == 50
 
+
+def test_empty_output_snapshot_is_not_rebackfilled(spark, tmp_path,
+                                                   tmp_tables):
+    """A zero-row output snapshot has no lineage rows; its lineage
+    append still records it as covered, so later runs append no
+    further lineage snapshot for it."""
+    from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
+        run_extraction_incremental,
+    )
+    from zzzarchived_arxiv_fulltext_spark.schema import INPUT_SCHEMA
+
+    out, lineage = tmp_tables
+    empty = spark.createDataFrame([], INPUT_SCHEMA)
+    inp = SnapshotTable(str(tmp_path / "in"))
+    inp.append(empty)
+    assert run_extraction_incremental(spark, inp, out, lineage,
+                                      parallelism=2) == 1
+    assert out.read(spark, OUTPUT_SCHEMA).count() == 0
+    assert len(lineage.snapshots()) == 1
+    for _ in range(3):
+        assert run_extraction(spark, empty, out, lineage,
+                              parallelism=2) is None
+    assert len(lineage.snapshots()) == 1
+
 def test_force_reextraction_and_latest_version_view(spark, tmp_tables):
     out, _ = tmp_tables
     df = spans_table(spark, 15, seed=11)

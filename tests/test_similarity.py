@@ -223,14 +223,56 @@ def test_hashed_doc_vectors_feed_semdedup(spark):
     assert [(r["id_a"], r["id_b"]) for r in pairs.collect()] == [(1, 2)]
 
 
-def test_semdedup_pair_engines_agree(spark):
-    """The BLAS (per-cluster GEMM applyInPandas) engine must produce
-    the same pair set as the pure-JVM self-join, with cosines equal to
-    1e-9 before rounding differences could matter."""
+def _nearest(v, cents):
+    import math
+
+    d = [math.fsum((a - b) ** 2 for a, b in zip(v, c)) for c in cents]
+    return d.index(min(d))
+
+
+def _semdedup_reference(new, old, cents, threshold, cap):
+    """Pure-Python SemDeDup: argmin assignment, ``math.fsum`` dot
+    products, every within-cluster pair with a new side, no pairs from
+    clusters whose new + old membership exceeds ``cap``."""
+    import itertools
+    import math
+
+    clusters = {}
+    for is_new, rows in ((True, new), (False, old)):
+        for i, v in rows:
+            clusters.setdefault(_nearest(v, cents), []).append(
+                (i, v, is_new))
+    out = {}
+    for members in clusters.values():
+        if cap is not None and len(members) > cap:
+            continue
+        for (ia, va, na), (ib, vb, nb) in itertools.combinations(members, 2):
+            if not (na or nb) or ia == ib:
+                continue
+            cos = math.fsum(x * y for x, y in zip(va, vb)) / math.sqrt(
+                math.fsum(x * x for x in va) * math.fsum(y * y for y in vb))
+            if cos >= threshold:
+                out[(min(ia, ib), max(ia, ib))] = cos
+    return out
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+@pytest.mark.parametrize("capped", [False, True])
+def test_semdedup_matches_python_reference(spark, tmp_path, id_type,
+                                           capped):
+    """Batch and two incremental waves against the in-test reference
+    on one planted fixture: equal pair sets, ``cos`` within 1e-6."""
+    import collections
     import random
 
     from zzzarchived_arxiv_fulltext_spark.operators.similarity import (
         semantic_near_duplicates,
+    )
+    from zzzarchived_arxiv_fulltext_spark.plans.incremental_semdedup import (
+        run_semdedup_incremental,
+    )
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import (
+        SnapshotTable,
     )
 
     rnd = random.Random(7)
@@ -241,14 +283,42 @@ def test_semdedup_pair_engines_agree(spark):
         if i % 7 == 0:  # planted near-dup with a tiny perturbation
             rows.append((1000 + i,
                          [x + rnd.uniform(-1e-4, 1e-4) for x in base]))
-    vecs = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    cents = [r["embedding"] for r in
-             vecs.where("vec_id < 4").orderBy("vec_id").collect()]
-    jvm = {(r["id_a"], r["id_b"]): r["cos"] for r in
-           semantic_near_duplicates(vecs, cents, threshold=0.95).collect()}
-    blas = {(r["id_a"], r["id_b"]): r["cos"] for r in
-            semantic_near_duplicates(vecs, cents, threshold=0.95,
-                                     pair_engine="blas").collect()}
-    assert set(jvm) == set(blas) and jvm
-    for k in jvm:
-        assert abs(jvm[k] - blas[k]) <= 1e-6, (k, jvm[k], blas[k])
+    cents = [v for i, v in rows if i < 4]
+    # wave 0: bases 0-59 and the twins of 0-29; the twins of 30-59
+    # pair across waves, through the index
+    in_wave0 = [i % 1000 < (60 if i < 1000 else 30) for i, _ in rows]
+    if id_type == "string":  # string order differs from int order
+        rows = [(f"d{i}", v) for i, v in rows]
+    waves = [[r for r, w in zip(rows, in_wave0) if w == first]
+             for first in (True, False)]
+    cap = None
+    if capped:  # only the largest cluster goes over the cap
+        sizes = sorted(collections.Counter(
+            _nearest(v, cents) for _, v in rows).values())
+        cap = sizes[-1] - 1
+        assert sizes[-2] <= cap
+    schema = f"vec_id {id_type}, embedding array<double>"
+
+    def check(got, want):
+        assert want  # non-vacuous
+        got = {(r["id_a"], r["id_b"]): r["cos"] for r in got.collect()}
+        assert set(got) == set(want)
+        for k, cos in want.items():
+            assert abs(got[k] - cos) <= 1e-6, (k, got[k], cos)
+
+    batch = _semdedup_reference(rows, [], cents, 0.95, cap)
+    if capped:
+        assert batch != _semdedup_reference(rows, [], cents, 0.95, None)
+    check(semantic_near_duplicates(
+        spark.createDataFrame(rows, schema), cents, threshold=0.95,
+        max_cluster_size=cap), batch)
+
+    table = SnapshotTable(str(tmp_path / "idx"))
+    old = []
+    for k, wave in enumerate(waves):
+        check(run_semdedup_incremental(
+            spark, spark.createDataFrame(wave, schema), table, cents,
+            threshold=0.95, commit_meta={"wave": k},
+            max_cluster_size=cap),
+            _semdedup_reference(wave, old, cents, 0.95, cap))
+        old += wave

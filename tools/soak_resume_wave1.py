@@ -28,12 +28,13 @@ from zzzarchived_arxiv_fulltext_spark.sources.tables import (  # noqa: E402
 
 
 def main():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     work = Path(os.environ.get(
         "SPARK_GRAFT_SOAK_DIR", "/tmp/spark_graft_soak"))
 
-    spark = build_spark(app_name="soak-sf1-wave1", master=f"local[{cpus}]",
-                        shuffle_partitions=cpus * 4)
+    # build_spark's master: local[$SPARK_GRAFT_CPUS], else all cores
+    spark = build_spark(app_name="soak-sf1-wave1")
+    cpus = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(cpus * 4))
     spark.sparkContext.setLogLevel("ERROR")
     sampler = RssSampler()
     sampler.start()

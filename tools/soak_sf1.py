@@ -109,13 +109,14 @@ def stage(name, fn):
 
 def main():
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_200_000
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     work = Path(os.environ.get(
         "SPARK_GRAFT_SOAK_DIR", "/tmp/spark_graft_soak"))
     fixture = work / f"spans_{n_docs}_{DEFAULT_SEED}"
 
-    spark = build_spark(app_name="soak-sf1", master=f"local[{cpus}]",
-                        shuffle_partitions=cpus * 4)
+    # build_spark's master: local[$SPARK_GRAFT_CPUS], else all cores
+    spark = build_spark(app_name="soak-sf1")
+    cpus = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(cpus * 4))
     spark.sparkContext.setLogLevel("ERROR")
     sampler = RssSampler()
     sampler.start()

@@ -40,10 +40,6 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -206,7 +202,8 @@ def embedding_near_duplicates(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     # norm hoisted to one-per-vector (same O(pairs·dim) saving as the
-    # SemDeDup join); dot/(na·nb) is bit-identical to cosine()
+    # SemDeDup join); dot/(na·nb) is bit-identical to
+    # dot/(l2_norm(a)·l2_norm(b))
     ).withColumn("nrm", l2_norm(F.col("vec")))
     buckets_udf = _srp_buckets_udf(tables, planes, dim)
     b = (
@@ -343,18 +340,23 @@ def ivf_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cvec"),
-    ).withColumn("cluster", assign(F.col("cvec")))
+    ).withColumn("cluster", assign(F.col("cvec"))
+    ).withColumn("cn", l2_norm(F.col("cvec")))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qvec"),
+    ).withColumn("qn", l2_norm(F.col("qvec"))
     ).withColumn("cluster", F.explode(probe_clusters(F.col("qvec"))))
 
+    # norms once per vector, before the probe explode; candidates
+    # evaluate only the dot
+    cos = dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
     scored = (
         c.join(F.broadcast(q), on="cluster")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
+            F.round(cos, 6).alias("cos"),
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
@@ -475,6 +477,101 @@ def assign_nearest_centroid(df: DataFrame, centroids,
     )
 
 
+def assign_clusters(df: DataFrame, centroids,
+                    vec_col: str = "embedding",
+                    id_col: str = "vec_id") -> DataFrame:
+    """(id, centroid_id, vector as array<double>): the SemDeDup
+    assignment step as ONE zero-shuffle projection. The centroid table
+    is inlined (:func:`assign_nearest_centroid`'s expression), so the
+    nearest centroid is computed in the same projection that carries
+    the vector — no join back on the id to re-attach it."""
+    v, dists = _centroid_dists(centroids, vec_col)
+    return df.select(
+        F.col(id_col),
+        (F.array_position(dists, F.array_min(dists)) - 1)
+        .cast("int").alias("centroid_id"),
+        v.alias(vec_col),
+    )
+
+
+def cluster_pairs(
+    new: DataFrame,
+    old: Optional[DataFrame],
+    threshold: float,
+    max_cluster_size: Optional[int],
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """(id_a, id_b, cos) for every unordered pair of members sharing a
+    ``centroid_id`` with ``id_a < id_b``, cosine >= ``threshold``
+    (rounded to 6 places), and at least one side in ``new``.
+
+    ``new`` and ``old`` are (id, centroid_id, array<double> vector)
+    frames, as :func:`assign_clusters` makes them; ``old`` (committed
+    history, or None) contributes pair partners only, so only the
+    clusters ``new`` touches are read into the kernel.
+
+    A cluster whose membership (new + old) exceeds ``max_cluster_size``
+    yields no pairs — the observable-drop contract of the LSH
+    hot-bucket cap in ``dedup.lsh_candidate_pairs``; None disables it.
+
+    The pair kernel is one ``applyInPandas`` per cluster: its members
+    cross the Arrow boundary once, and a numpy GEMM of the new rows
+    against all rows scores every candidate in native code; only pairs
+    >= threshold come back. Per cluster it holds |new| x |cluster|
+    doubles, at most 800 MB at the default cap of 10,000.
+    """
+    members = new.select("centroid_id", id_col, vec_col,
+                         F.lit(True).alias("_new"))
+    if old is not None:
+        touched = new.select("centroid_id").distinct()
+        members = members.unionByName(
+            old.join(F.broadcast(touched), on="centroid_id",
+                     how="left_semi")
+            .select("centroid_id", id_col, vec_col,
+                    F.lit(False).alias("_new")))
+    # one explicit exchange on the cluster key, shared by the cap's
+    # count and the kernel's grouping
+    members = members.repartition("centroid_id")
+    if max_cluster_size is not None:
+        ok = (
+            members.groupBy("centroid_id")
+            .agg(F.count("*").alias("_n"))
+            .where(F.col("_n") <= max_cluster_size)
+            .select("centroid_id")
+        )
+        members = members.join(F.broadcast(ok), on="centroid_id")
+    id_type = new.schema[id_col].dataType.simpleString()
+    thr = float(threshold)
+
+    def kernel(pdf):
+        import numpy as np
+
+        ids = pdf[id_col].to_numpy()
+        is_new = pdf["_new"].to_numpy(dtype=bool)
+        mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+        unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        rows = np.flatnonzero(is_new)
+        gram = unit[rows] @ unit.T  # |new| x |cluster|
+        r, j = np.nonzero(gram >= thr)
+        a, b = ids[rows[r]], ids[j]
+        # a new-new pair is scored from both ends: keep one; a
+        # new-old pair is scored once
+        keep = np.where(is_new[j], a < b, a != b)
+        a, b = a[keep], b[keep]
+        return pd.DataFrame({
+            "id_a": np.where(a < b, a, b),
+            "id_b": np.where(a < b, b, a),
+            "cos": np.round(gram[r[keep], j[keep]], 6),
+        })
+
+    return (
+        members.groupBy("centroid_id")
+        .applyInPandas(kernel,
+                       f"id_a {id_type}, id_b {id_type}, cos double")
+    )
+
+
 def semantic_near_duplicates(
     df: DataFrame,
     centroids,
@@ -482,7 +579,6 @@ def semantic_near_duplicates(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_cluster_size: Optional[int] = 10_000,
-    pair_engine: str = "jvm",
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: (id_a, id_b, cos)
     with ``id_a < id_b``, cosine >= ``threshold``, and BOTH vectors
@@ -491,120 +587,19 @@ def semantic_near_duplicates(
     The cluster partition (Abbas et al., SemDeDup) is what makes
     embedding dedup tractable at corpus scale: pairwise cosine runs
     only WITHIN a cluster, so total candidate work is sum(c_i^2)
-    instead of n^2 — with balanced clusters that is n^2/k. The
-    assignment step is the zero-shuffle inlined-centroid projection
-    (:func:`assign_nearest_centroid`); the within-cluster self-join
-    shuffles once on ``centroid_id``.
+    instead of n^2 — with balanced clusters that is n^2/k. Assignment
+    is :func:`assign_clusters`; pairs come from :func:`cluster_pairs`
+    with every row new, which shuffles once on ``centroid_id``.
 
     ``max_cluster_size`` bounds the degenerate case (one cluster
     swallowing the corpus → n^2 again): clusters larger than the cap
-    are excluded from pair generation — same observable-drop contract
-    as the LSH hot-bucket cap in ``dedup.lsh_candidate_pairs``. Pass
-    ``None`` to disable. Chain the pairs into
-    ``plans.dedup_job.connected_keep_list`` (or drop ``id_b``
-    greedily) for the keeper election.
-
-    ``pair_engine`` selects how within-cluster cosines are computed:
-
-    - ``"jvm"`` (default): the pure-JVM self-join + per-pair
-      zip_with/aggregate dot. No Python anywhere; fine up to ~10^5-ish
-      pairs per run, but the HOF dot is interpreted, so the per-pair
-      constant is high (~5 µs·dim/64).
-    - ``"blas"``: one ``applyInPandas`` per cluster computing the
-      upper-triangle cosine matrix with a numpy GEMM (guide §4.2 —
-      hand whole batches to vectorized native code). Each cluster's
-      vectors cross the Arrow boundary ONCE (≤ max_cluster_size × dim
-      doubles, ≤ ~5 MB at the default cap), the n² work runs in BLAS,
-      and only pairs ≥ threshold come back. Measured 35x on 25M pairs
-      (52 s → 1.5 s warm). Same pairs; ``cos`` may differ in the last
-      rounded decimal on ties because BLAS accumulates in a different
-      order than the sequential JVM fold (the parity test pins pair
-      sets and cosines to 1e-9).
+    are excluded from pair generation. Pass ``None`` to disable. Chain
+    the pairs into ``plans.dedup_job.connected_keep_list`` (or drop
+    ``id_b`` greedily) for the keeper election.
     """
-    # assignment + vector + norm in ONE zero-shuffle projection: the
-    # old shape joined assign_nearest_centroid's output back to df on
-    # the id to re-attach the vector, which shuffled the corpus twice
-    # for no reason — the centroid table is inlined, so the nearest
-    # centroid is computable in the same projection that carries the
-    # vector (guide §2.4: remove shuffles outright). The L2 norm stays
-    # hoisted to one-per-vector: computing cosine's two norms inside
-    # the pair join costs O(pairs · dim) twice over — measured 3x on
-    # the bench corpus.
-    v, dists = _centroid_dists(centroids, vec_col)
-    assigned = df.select(
-        F.col(id_col),
-        (F.array_position(dists, F.array_min(dists)) - 1)
-        .cast("int").alias("centroid_id"),
-        v.alias(vec_col),
-    ).withColumn("_nrm", l2_norm(F.col(vec_col)))
-    # one explicit exchange on the join key, shared by all three
-    # consumers (the cluster-size cap, and both sides of the pair
-    # self-join — guide §2.4 "two operations keyed the same way share
-    # one exchange"): without it each consumer re-evaluates the k×dim
-    # assignment projection, and the self-join would shuffle on
-    # centroid_id anyway. Per-cluster co-location (≤k populated
-    # partitions) is inherent to any cluster-keyed pair join; the
-    # hot-cluster cap below is what bounds it.
-    assigned = assigned.repartition("centroid_id")
-    if max_cluster_size is not None:
-        ok = (
-            assigned.groupBy("centroid_id")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") <= max_cluster_size)
-            .select("centroid_id")
-        )
-        assigned = assigned.join(F.broadcast(ok), on="centroid_id")
-    if pair_engine == "blas":
-        id_type = df.schema[id_col].dataType.simpleString()
-        out_schema = f"id_a {id_type}, id_b {id_type}, cos double"
-        thr = float(threshold)
-
-        def cluster_pairs(pdf):
-            import numpy as np
-            import pandas as pd
-
-            n = len(pdf)
-            if n < 2:
-                return pd.DataFrame(
-                    {"id_a": [], "id_b": [], "cos": []})
-            order = pdf[id_col].argsort(kind="stable")
-            ids = pdf[id_col].to_numpy()[order]
-            mat = np.asarray(
-                [pdf[vec_col].iloc[i] for i in order], dtype=np.float64)
-            unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            gram = unit @ unit.T
-            ia, ib = np.triu_indices(n, k=1)
-            keep = gram[ia, ib] >= thr
-            return pd.DataFrame({
-                "id_a": ids[ia[keep]],
-                "id_b": ids[ib[keep]],
-                "cos": np.round(gram[ia[keep], ib[keep]], 6),
-            })
-
-        return (
-            assigned.select("centroid_id", id_col, vec_col)
-            .groupBy("centroid_id")
-            .applyInPandas(cluster_pairs, out_schema)
-        )
-    a = assigned.select(
-        F.col("centroid_id"),
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        F.col("_nrm").alias("_na"),
-    )
-    b = assigned.select(
-        F.col("centroid_id"),
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_nrm").alias("_nb"),
-    )
-    cos = dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    return (
-        a.join(b, on="centroid_id")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(cos >= threshold)
-        .select("id_a", "id_b", F.round(cos, 6).alias("cos"))
-    )
+    return cluster_pairs(
+        assign_clusters(df, centroids, vec_col=vec_col, id_col=id_col),
+        None, threshold, max_cluster_size, vec_col=vec_col, id_col=id_col)
 
 
 def hashed_doc_vectors(df: DataFrame, dim: int = 64,

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from pyspark.sql import types as T
 
-from ..operators.similarity import _srp_buckets_udf, cosine
+from ..operators.similarity import _srp_buckets_udf, dot, l2_norm
 from ..sources.tables import SnapshotTable
 
 INDEX_SCHEMA = T.StructType([
@@ -84,14 +84,16 @@ def query_ann_index(
     q = _with_buckets(
         queries.select(
             F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qvec")),
+            F.col(vec_col).cast("array<double>").alias("qvec"))
+        .withColumn("qn", l2_norm(F.col("qvec"))),
         "qvec", tables, planes, dim,
     )
     idx = index_table.read(spark, INDEX_SCHEMA)  # empty index → no rows
     candidates = (
         idx.join(F.broadcast(q), on=["tbl", "bucket"])
         .where(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "qvec", F.col("vec_id").alias("neighbor_id"))
+        .select("query_id", "qvec", "qn",
+                F.col("vec_id").alias("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     vecs = (
@@ -100,12 +102,15 @@ def query_ann_index(
             F.col(vec_col).cast("array<double>").alias("cvec"))
         .join(candidates.select("neighbor_id").distinct(),
               on="neighbor_id", how="left_semi")
+        .withColumn("cn", l2_norm(F.col("cvec")))
     )
+    # norms once per vector; each candidate pair evaluates only the dot
+    cos = dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
     scored = (
         candidates.join(vecs, on="neighbor_id")
         .select(
             "query_id", "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
+            F.round(cos, 6).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

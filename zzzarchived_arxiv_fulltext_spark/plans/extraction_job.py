@@ -117,6 +117,21 @@ def _lineage_from_snapshot(
     )
 
 
+def _append_lineage(
+    spark: SparkSession,
+    output_table: SnapshotTable,
+    lineage_table: SnapshotTable,
+    snap_id: int,
+) -> None:
+    """Append output snapshot ``snap_id``'s lineage rows, stamping
+    ``lineage_of`` in the manifest entry so the snapshot counts as
+    covered even when it has no rows."""
+    lineage_table.append(
+        _lineage_from_snapshot(spark, output_table, snap_id),
+        meta={"lineage_of": snap_id},
+    )
+
+
 def _heal_lineage(
     spark: SparkSession,
     output_table: SnapshotTable,
@@ -131,17 +146,20 @@ def _heal_lineage(
     lineage was written under the ids it was compacted from, so it is
     covered once all of those have lineage.
     """
-    have = {
-        r["snapshot_id"]
-        for r in lineage_table.read(spark, LINEAGE_SCHEMA)
-        .select("snapshot_id").distinct().collect()
-    } if lineage_table.snapshots() else set()
+    lineage_snaps = lineage_table.snapshots()
+    # a zero-row output snapshot has no lineage rows; its lineage
+    # append's manifest entry is what records it as covered
+    have = {s["lineage_of"] for s in lineage_snaps if "lineage_of" in s}
+    if lineage_snaps:
+        have |= {
+            r["snapshot_id"]
+            for r in lineage_table.read(spark, LINEAGE_SCHEMA)
+            .select("snapshot_id").distinct().collect()
+        }
     for s in output_table.snapshots():
         if s["id"] not in have and not have.issuperset(
                 s.get("compacted_from", [s["id"]])):
-            lineage_table.append(
-                _lineage_from_snapshot(spark, output_table, s["id"])
-            )
+            _append_lineage(spark, output_table, lineage_table, s["id"])
 
 
 def run_extraction(
@@ -224,9 +242,7 @@ def _commit(
     points share. Returns the committed snapshot id."""
     snap_id = output_table.append(extracted, meta=meta)
     if lineage_table is not None:
-        lineage_table.append(
-            _lineage_from_snapshot(spark, output_table, snap_id)
-        )
+        _append_lineage(spark, output_table, lineage_table, snap_id)
     return snap_id
 
 

@@ -9,17 +9,18 @@ mirrors the MinHash incremental plan (``incremental_dedup``):
 - the index table holds every committed vector's (id, centroid_id,
   embedding) — clustered storage, so candidate fetch for a delta is
   an equi-join on ``centroid_id``, never a corpus scan;
-- per increment: assign the delta with the shared zero-shuffle
-  centroid projection, pair delta×delta and delta×history WITHIN
-  clusters, score exact cosine, commit the delta's rows;
+- per increment: assign the delta with the batch's one-projection
+  step (``assign_clusters``), pair it against itself and the history
+  of the clusters it touches with the batch's per-cluster GEMM kernel
+  (``cluster_pairs``, delta rows new, history rows old), commit the
+  delta's rows;
 - ``commit_meta`` stamps the append; a replay reads history via
   ``read_excluding_meta`` (the replay-poisoning rule: a rerun must
   classify against history as it stood before its own partial
   attempt) and skips the duplicate append — per-table idempotency.
 
-``max_cluster_size`` bounds degenerate clusters on EITHER side, same
-observable-drop contract as the LSH hot-bucket caps: a cluster whose
-delta+history membership exceeds the cap generates no pairs this
+``max_cluster_size`` is the batch's cap, counted over a cluster's
+delta + history membership: a cluster over it generates no pairs this
 increment, but its rows still commit, so the index stays complete.
 
 Centroids come from ``plans/ivf_index.ensure_centroids`` (committed,
@@ -34,8 +35,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..materialize import reuse
-from ..operators.similarity import assign_nearest_centroid, cosine
+from ..operators.similarity import assign_clusters, cluster_pairs
 from ..sources.tables import SnapshotTable
+
 
 def index_schema(delta: DataFrame, id_col: str) -> T.StructType:
     """Index schema with the id typed AS THE CALLER'S ids are typed —
@@ -65,63 +67,19 @@ def run_semdedup_incremental(
     delta×history members sharing a cluster; commits the delta's
     (id, centroid_id, embedding) rows for the next increment."""
     schema = index_schema(delta, id_col)
-    # reused: pairs + sizes + append
-    assigned = reuse(
-        assign_nearest_centroid(delta, centroids, vec_col=vec_col,
-                                id_col=id_col)
-        .select(F.col(id_col).alias("vec_id"), "centroid_id")
-        .join(delta.select(F.col(id_col).alias("vec_id"),
-                           F.col(vec_col).cast("array<double>")
-                           .alias("embedding")),
-              on="vec_id")
-    )
+    # reused: pairs + append
+    assigned = reuse(assign_clusters(
+        delta.select(F.col(id_col).alias("vec_id"),
+                     F.col(vec_col).alias("embedding")),
+        centroids))
 
     if index_table.snapshots():
         hist = (index_table.read_excluding_meta(
                     spark, commit_meta, schema=schema)
                 if commit_meta else index_table.read(spark))
     else:
-        hist = spark.createDataFrame([], schema)
-
-    d, h = assigned, hist
-    if max_cluster_size is not None:
-        ok = reuse(
-            d.groupBy("centroid_id").agg(F.count("*").alias("_n"))
-            .unionByName(
-                h.groupBy("centroid_id").agg(F.count("*").alias("_n")))
-            .groupBy("centroid_id").agg(F.sum("_n").alias("_n"))
-            .where(F.col("_n") <= max_cluster_size)
-            .select("centroid_id")
-            # bounded by n_members / 1 rows, tiny in practice
-        )
-        d = d.join(F.broadcast(ok), on="centroid_id")
-        h = h.join(F.broadcast(ok), on="centroid_id")
-
-    a = d.select("centroid_id", F.col("vec_id").alias("id_a"),
-                 F.col("embedding").alias("_va"))
-    b_delta = d.select("centroid_id", F.col("vec_id").alias("id_b"),
-                       F.col("embedding").alias("_vb"))
-    b_hist = h.select("centroid_id", F.col("vec_id").alias("id_b"),
-                      F.col("embedding").alias("_vb"))
-    cos = cosine(F.col("_va"), F.col("_vb"))
-    intra = (
-        a.join(b_delta, on="centroid_id")
-        .where(F.col("id_a") < F.col("id_b"))
-    )
-    # delta x history: ids are disjoint from the delta's (replay reads
-    # exclude this increment's own stamp), so normalize the pair order
-    cross = a.join(b_hist, on="centroid_id").where(
-        F.col("id_a") != F.col("id_b"))
-    pairs = (
-        intra.unionByName(cross)
-        .where(cos >= threshold)
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            F.round(cos, 6).alias("cos"),
-        )
-        .distinct()
-    )
+        hist = None
+    pairs = cluster_pairs(assigned, hist, threshold, max_cluster_size)
 
     already = bool(commit_meta) and index_table.has_meta(commit_meta)
     if not already:

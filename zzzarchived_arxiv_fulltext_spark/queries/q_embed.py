@@ -1056,8 +1056,8 @@ def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the within-cluster cosine pass must find exactly those pairs
     (the corpus's natural max within-cluster cosine is ~0.49, far
     under the 0.9 gate). Exercises the real assignment projection +
-    cluster-partitioned self-join against the oracle's explicit
-    argmin + cross-join."""
+    per-cluster GEMM kernel against the oracle's explicit argmin +
+    cross-join."""
     from ..operators.similarity import semantic_near_duplicates
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1070,8 +1070,7 @@ def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id").collect()
     ]
     return sorted_output(
-        semantic_near_duplicates(allv, cents, threshold=0.9,
-                                 pair_engine="blas")
+        semantic_near_duplicates(allv, cents, threshold=0.9)
         .select(F.col("id_a").cast("long").alias("id_a"),
                 F.col("id_b").cast("long").alias("id_b"), "cos"),
         "id_a", "id_b",
