@@ -1,5 +1,6 @@
 """Incremental dedup == batch dedup, without recomputing history."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from zzzarchived_arxiv_fulltext_spark.operators.dedup import (
@@ -181,8 +182,9 @@ def test_incremental_string_ids_with_commit_meta(spark, tmp_path):
 
 
 def test_cross_join_hot_bucket_cap(spark, tmp_path):
-    """The delta x committed-index join must honor max_bucket_size:
-    a (band, bucket) hot on the HISTORY side is excluded from
+    """The candidate join against the committed index must honor
+    max_bucket_size, counted over a bucket's delta + history members:
+    a (band, bucket) made hot by its HISTORY rows is excluded from
     candidate generation (the sf1 soak disk-fill), while normal
     buckets keep matching; cap=None restores the exhaustive join."""
     boiler = "common boilerplate words repeated across the whole fleet"
@@ -197,8 +199,8 @@ def test_cross_join_hot_bucket_cap(spark, tmp_path):
         [(200, boiler), (201, _text(1))], "doc_id long, text string"))
     delta = corpus.where("doc_id >= 200")
 
-    # capped: the boilerplate bucket (6 history docs > cap 2) is
-    # dropped, so 200 pairs with nothing; 201 still matches 100.
+    # capped: the boilerplate bucket (1 delta + 6 history docs > cap
+    # 2) is dropped, so 200 pairs with nothing; 201 still matches 100.
     capped = _pairs(run_dedup_incremental(
         spark, delta, corpus=corpus, bucket_table=buckets,
         max_bucket_size=2, commit_meta={"w": "capped"}))
@@ -210,3 +212,40 @@ def test_cross_join_hot_bucket_cap(spark, tmp_path):
         max_bucket_size=None, commit_meta={"w": "full"}))
     assert {(i, 200, 1.0) for i in range(6)} <= full
     assert (100, 201, 1.0) in full
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_incremental_equals_batch_at_cap_boundary(spark, tmp_path, id_type):
+    """Each wave's pairs are the batch pairs over every wave so far
+    that touch the wave: the cap counts a bucket's new + old members.
+    Planted at cap 2, identical texts sharing every band bucket:
+    group x holds 2 old + 1 new docs and group y 3 old + 2 new, so
+    both are hot after wave 2 (a per-side count would pair the new x
+    doc with both old ones, and the two new y docs with each other);
+    group z (1 old + 1 new) still pairs."""
+    def text(group):
+        return " ".join(f"{group}{k}" for k in range(16))
+
+    groups = {"x": ([1, 2], [3]), "y": ([11, 12, 13], [14, 15]),
+              "z": ([21], [22])}
+    key = (lambda i: i) if id_type == "long" else (lambda i: f"d{i:03d}")
+    waves = [spark.createDataFrame(
+        [(key(i), text(g)) for g, ids in groups.items() for i in ids[w]],
+        f"doc_id {id_type}, text string") for w in (0, 1)]
+
+    buckets = SnapshotTable(str(tmp_path / "buckets"))
+    seen, wants = None, []
+    for k, wave in enumerate(waves):
+        seen = wave if seen is None else seen.unionByName(wave)
+        new_ids = {r["doc_id"] for r in wave.collect()}
+        want = {p for p in _pairs(near_duplicates_minhash(
+                    seen, threshold=0.5, max_bucket_size=2))
+                if new_ids & {p[0], p[1]}}
+        got = _pairs(run_dedup_incremental(
+            spark, wave, corpus=seen, bucket_table=buckets,
+            threshold=0.5, max_bucket_size=2, commit_meta={"wave": k}))
+        assert got == want
+        wants.append(want)
+    # wave 1 pairs x (2 members); wave 2 pairs only z
+    assert wants == [{(key(1), key(2), 1.0)}, {(key(21), key(22), 1.0)}]
+    assert buckets.read(spark).count() == 10 * 4  # index stays complete

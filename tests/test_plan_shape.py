@@ -304,3 +304,47 @@ def test_dsir_broadcasts_models_not_corpus(spark):
     # the log-ratio model table (<= buckets rows) must broadcast into
     # the scoring join
     assert "BroadcastHashJoin" in plan, plan
+
+
+def _nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def test_incremental_minhash_is_one_candidate_join(spark):
+    """New docs against committed buckets: ONE candidate equi-join on
+    (band, bucket), and no Union of two pair sets (the delta is joined
+    against new + old members, not self-joined and then unioned with
+    a delta x history join)."""
+    import re
+
+    from zzzarchived_arxiv_fulltext_spark.operators.dedup import (
+        band_buckets,
+        lsh_candidate_pairs,
+        minhash_signatures,
+        word_shingles,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i % 3} a b c d e") for i in range(8)],
+        "doc_id long, text string")
+
+    def sigs(where):
+        return minhash_signatures(word_shingles(docs.where(where)))
+
+    pairs = lsh_candidate_pairs(
+        sigs("doc_id >= 4"), old=band_buckets(sigs("doc_id < 4"), 4))
+    nodes = list(_nodes(pairs._jdf.queryExecution().sparkPlan()))
+    inner = [n for n in nodes if n.nodeName() == "CartesianProduct"
+             or ("Join" in n.nodeName()
+                 and n.joinType().toString() == "Inner")]
+    assert len(inner) == 1
+    for side in (inner[0].leftKeys(), inner[0].rightKeys()):
+        assert re.findall(r"(\w+)#", side.toString()) == ["band", "bucket"]
+    unions = [n.output().toString() for n in nodes
+              if n.nodeName() == "Union"]
+    assert unions and not any("id_a" in u for u in unions), unions
+    # every pair has a new side; old x old never pairs
+    assert not [r for r in pairs.collect() if r["id_b"] < 4]

@@ -85,17 +85,21 @@ def test_lineage_metrics_cover_all_docs(spark, tmp_tables):
 
 
 
+def _lineage_docs(spark, lineage) -> int:
+    from zzzarchived_arxiv_fulltext_spark.schema import LINEAGE_SCHEMA
+
+    return sum(r["n_docs"] for r in lineage.read(spark, LINEAGE_SCHEMA)
+               .select("n_docs").collect())
+
+
 def test_lineage_is_not_backfilled_for_compacted_snapshots(spark, tmp_tables):
     """Compaction renumbers committed rows into a new snapshot id; the
     lineage rows already written under the old ids still count them, so
     the next run must not backfill the compacted snapshot again."""
-    from zzzarchived_arxiv_fulltext_spark.schema import LINEAGE_SCHEMA
-
     out, lineage = tmp_tables
 
     def lineage_docs():
-        return sum(r["n_docs"] for r in lineage.read(spark, LINEAGE_SCHEMA)
-                   .select("n_docs").collect())
+        return _lineage_docs(spark, lineage)
 
     full = spans_table(spark, 40, seed=9)
     run_extraction(spark, full.where("pmod(xxhash64(doc_id), 2) = 0"),
@@ -139,6 +143,50 @@ def test_empty_output_snapshot_is_not_rebackfilled(spark, tmp_path,
         assert run_extraction(spark, empty, out, lineage,
                               parallelism=2) is None
     assert len(lineage.snapshots()) == 1
+
+
+def test_crashed_lineage_commit_is_backfilled(spark, tmp_tables):
+    """An output snapshot committed without its lineage (a crash
+    between the two commits) is backfilled by the next run, once."""
+    out, lineage = tmp_tables
+    full = spans_table(spark, 30, seed=13)
+    run_extraction(spark, full.where("pmod(xxhash64(doc_id), 2) = 0"),
+                   out, lineage, parallelism=2)
+    # the output commit lands, the lineage commit does not
+    run_extraction(spark, full, out, parallelism=2)
+    assert [s["lineage_of"] for s in lineage.snapshots()] == [1]
+
+    for _ in range(2):
+        assert run_extraction(spark, full, out, lineage,
+                              parallelism=2) is None
+        assert [s["lineage_of"] for s in lineage.snapshots()] == [1, 2]
+    assert _lineage_docs(spark, lineage) == 30
+
+
+def test_compacted_lineage_is_not_backfilled(spark, tmp_path, tmp_tables):
+    """Compacting the lineage table keeps each append's ``lineage_of``
+    stamp, so no output snapshot is backfilled again: an empty wave, a
+    10-doc run, ``lineage.compact()``, then two empty runs."""
+    from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
+        run_extraction_incremental,
+    )
+    from zzzarchived_arxiv_fulltext_spark.schema import INPUT_SCHEMA
+
+    out, lineage = tmp_tables
+    empty = spark.createDataFrame([], INPUT_SCHEMA)
+    inp = SnapshotTable(str(tmp_path / "in"))
+    inp.append(empty)
+    assert run_extraction_incremental(spark, inp, out, lineage,
+                                      parallelism=2) == 1
+    run_extraction(spark, spans_table(spark, 10, seed=4), out, lineage,
+                   parallelism=2)
+    lineage.compact(spark)
+    for _ in range(2):
+        assert run_extraction(spark, empty, out, lineage,
+                              parallelism=2) is None
+    assert len(lineage.snapshots()) == 1
+    assert _lineage_docs(spark, lineage) == 10
+
 
 def test_force_reextraction_and_latest_version_view(spark, tmp_tables):
     out, _ = tmp_tables

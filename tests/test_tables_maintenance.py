@@ -63,3 +63,22 @@ def test_maintain_compacts_past_budget(spark, tmp_path):
     assert snap is not None and len(t.snapshots()) == 1
     assert t.read(spark).count() == 12
     assert {r["id"] for r in t.read(spark).collect()} == set(range(12))
+
+
+def test_compaction_keeps_each_appends_meta(spark, tmp_path):
+    """``compacted_from`` keeps every folded append's id and meta,
+    through a second compaction too; a manifest compacted before the
+    meta was kept still yields its ids."""
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import leaves
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(spark.range(2), meta={"wave": 0})
+    t.append(spark.range(2))
+    t.compact(spark)
+    t.append(spark.range(2), meta={"wave": 2})
+    t.compact(spark)
+    (entry,) = t.snapshots()
+    assert leaves(entry) == [{"id": 1, "wave": 0}, {"id": 2},
+                             {"id": 4, "wave": 2}]
+    assert leaves({"id": 3, "compacted_from": [1, 2]}) == [
+        {"id": 1}, {"id": 2}]

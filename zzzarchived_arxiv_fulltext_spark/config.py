@@ -22,6 +22,7 @@ from pyspark.sql import SparkSession
 # wants; a deployment that needs another passes ``--conf`` to
 # spark-submit or calls ``spark.conf.set`` on the built session.
 ARROW_BATCH = 256
+DRIVER_MEMORY = "8g"
 SHUFFLE_PARTITIONS = 32
 # Split sizing: extraction is CPU-bound (~2 MB/s/core through the
 # regex pipeline), so the right input split is ~100x smaller than the
@@ -105,7 +106,7 @@ def build_spark(
         # reliable checkpoints (materialize.reuse under a cluster
         # master) are deleted once their frame is garbage-collected
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", DRIVER_MEMORY)
         # bucketed saveAsTable targets (plans/bucketed_tables) must
         # never land in the caller's cwd, and the default is PER-USER:
         # a world-shared /tmp dir would let one session's overwrite

@@ -20,6 +20,8 @@ any engine (the DuckDB oracle runs the identical formula), unlike
 engine-specific integer hashes.
 """
 
+from typing import List, Optional
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -105,74 +107,112 @@ def minhash_signatures(shingled: DataFrame, num_hashes: int = 16) -> DataFrame:
 DEFAULT_MAX_BUCKET_SIZE = 10_000
 
 
-def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4,
-                        rows_per_band: int = 4,
-                        max_bucket_size: int = DEFAULT_MAX_BUCKET_SIZE,
-                        with_drop_stats: bool = False):
-    """Banded LSH: docs sharing any band bucket become candidates.
+def drop_hot_keys(members: DataFrame, keys: List[str],
+                  max_size: Optional[int]):
+    """The skew cap of every pair join here: ``(kept, dropped)``.
 
-    Bucket join (equi-join on band hash) — never a cross join.
+    A join key held by m members makes its self-join emit m² rows;
+    every key with more than ``max_size`` members is dropped before
+    the join (boilerplate shingles, degenerate signatures, a cluster
+    that swallows the corpus: such keys carry no discriminating
+    signal). ``kept`` is ``members`` minus those keys' rows, removed
+    through a broadcast anti-join; ``dropped`` is the
+    (keys…, n_docs) table of every dropped key.
 
-    Hot-bucket cap: a degenerate bucket (boilerplate shingles,
-    empty-ish docs sharing a signature) of size m produces m² pairs;
-    buckets with more than ``max_bucket_size`` docs are dropped
-    entirely before the self-join (the standard mitigation — such
-    buckets carry no discriminating signal anyway). Bounds the
-    worst-case candidate count at max_bucket_size² per bucket.
-    ``max_bucket_size=None`` disables the cap.
+    The cap is NOT silent: ``dropped`` holds at most
+    |members| / max_size rows, so materializing it is always cheap
+    next to the join. (An ``Observation`` would avoid the extra job,
+    but AQE's empty-relation pruning can eliminate CollectMetrics
+    nodes from anti-join subtrees, silently corrupting the read — a
+    side-output frame is deterministic.)
 
-    The cap is NOT silent: ``with_drop_stats=True`` returns
-    ``(pairs, dropped)`` where ``dropped`` is the
-    (band, bucket, n_docs) table of every dropped hot bucket — bounded
-    by corpus_size / max_bucket_size rows, so materializing it is
-    always cheap relative to the dedup itself. (An ``Observation``
-    would avoid the extra job, but AQE's empty-relation pruning can
-    eliminate CollectMetrics nodes from anti-join subtrees, silently
-    corrupting the read — a side-output frame is deterministic.)
+    ``max_size=None`` disables the cap: ``kept`` is ``members`` and
+    ``dropped`` an empty frame of the same type.
     """
-    band_entries = F.array(*[
+    counts = members.groupBy(*keys).agg(F.count("*").alias("n_docs"))
+    if max_size is None:
+        return members, counts.limit(0)
+    dropped = counts.where(F.col("n_docs") > max_size)
+    kept = members.join(F.broadcast(dropped.select(*keys)), on=keys,
+                        how="left_anti")
+    return kept, dropped
+
+
+def band_buckets(signatures: DataFrame, bands: int) -> DataFrame:
+    """(id, band, bucket): the signature's ``h*`` columns cut into
+    ``bands`` bands of equal rows (a remainder is unused); a band's
+    bucket is the md5 of its hashes joined by ``|``."""
+    n_hashes = sum(1 for c in signatures.columns
+                   if c[:1] == "h" and c[1:].isdigit())
+    rows = n_hashes // bands
+    entries = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
             F.md5(F.concat_ws("|", *[
-                F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)
+                F.col(f"h{b * rows + r}") for r in range(rows)
             ])).alias("bucket"),
         )
         for b in range(bands)
     ])
-    buckets = signatures.select(
-        "id", F.explode(band_entries).alias("e")
+    return signatures.select(
+        "id", F.explode(entries).alias("e")
     ).select("id", "e.band", "e.bucket")
 
-    dropped = None
-    if max_bucket_size is not None:
-        hot = (
-            buckets.groupBy("band", "bucket")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") > max_bucket_size)
-        )
-        dropped = hot.select("band", "bucket",
-                             F.col("_n").alias("n_docs"))
-        buckets = buckets.join(F.broadcast(hot.select("band", "bucket")),
-                               on=["band", "bucket"], how="left_anti")
 
-    left = buckets.alias("a")
-    right = buckets.alias("b")
+def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4,
+                        max_bucket_size: int = DEFAULT_MAX_BUCKET_SIZE,
+                        with_drop_stats: bool = False,
+                        old: Optional[DataFrame] = None):
+    """Banded LSH: docs sharing any band bucket become candidates,
+    each unordered pair once as (id_a, id_b) with id_a < id_b.
+
+    Bucket join (equi-join on (band, bucket)) — never a cross join.
+
+    ``old`` (committed (id, band, bucket) rows, or None) contributes
+    pair partners only: the members are the signed docs' buckets plus
+    the ``old`` rows in the (band, bucket) keys they touch, the signed
+    docs are joined against all members, and every pair has at least
+    one signed side. This is the incremental job's delta against its
+    committed index (``plans.incremental_dedup``), so dedup over waves
+    equals batch dedup over their union.
+
+    Hot-bucket cap (:func:`drop_hot_keys`, counted over all members):
+    a degenerate bucket of size m produces m² pairs, so buckets with
+    more than ``max_bucket_size`` members are dropped before the join.
+    ``with_drop_stats=True`` returns ``(pairs, dropped)`` with the
+    (band, bucket, n_docs) table of every dropped bucket.
+    ``max_bucket_size=None`` disables the cap.
+    """
+    buckets = band_buckets(signatures, bands)
+    a, b = F.col("a.id"), F.col("b.id")
+    if old is None:
+        members = buckets
+    else:
+        touched = buckets.select("band", "bucket").distinct()
+        members = buckets.withColumn("_new", F.lit(True)).unionByName(
+            old.join(touched, on=["band", "bucket"], how="left_semi")
+            .select("id", "band", "bucket", F.lit(False).alias("_new")))
+    kept, dropped = drop_hot_keys(members, ["band", "bucket"],
+                                  max_bucket_size)
+    if old is None:
+        left, pair, id_a, id_b = kept, a < b, a, b
+    else:
+        # a new-new pair meets from both ends: keep one; a new-old
+        # pair meets once
+        left = kept.where("_new")
+        pair = F.when(F.col("b._new"), a < b).otherwise(a != b)
+        id_a, id_b = F.least(a, b), F.greatest(a, b)
     pairs = (
-        left.join(
-            right,
+        left.alias("a").join(
+            kept.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
+            & pair,
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .select(id_a.alias("id_a"), id_b.alias("id_b"))
         .distinct()
     )
-    if with_drop_stats:
-        if dropped is None:  # cap disabled → empty, type-correct frame
-            dropped = buckets.groupBy("band", "bucket").agg(
-                F.count("*").alias("n_docs")).limit(0)
-        return pairs, dropped
-    return pairs
+    return (pairs, dropped) if with_drop_stats else pairs
 
 
 def exact_jaccard(shingled: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -240,7 +280,6 @@ def near_duplicates_minhash(
     shingled = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
     sigs = minhash_signatures(shingled, num_hashes=num_hashes)
     res = lsh_candidate_pairs(sigs, bands=bands,
-                              rows_per_band=num_hashes // bands,
                               max_bucket_size=max_bucket_size,
                               with_drop_stats=with_drop_stats)
     pairs, dropped = res if with_drop_stats else (res, None)
@@ -302,29 +341,20 @@ def simhash_near_duplicates(df: DataFrame, max_hamming: int = 2,
     Hot-bucket cap: with only ``2^prefix_bits`` buckets corpus-wide, a
     degenerate prefix (boilerplate-dominated corpora) makes the
     within-bucket self-join quadratic — the same failure mode the
-    MinHash path guards against. Buckets holding more than
-    ``max_bucket_size`` docs are dropped from pair generation before
-    the join (they carry no discriminating signal); pass
-    ``with_drop_stats=True`` to also get the (bucket, n_docs) table of
-    dropped buckets — the cap is observable, never silent.
-    ``max_bucket_size=None`` disables it. (For recall at
-    ``max_hamming`` flips inside the prefix, run additional tables
-    with rotated prefixes and union the pairs.)
+    MinHash path guards against, with the same
+    :func:`drop_hot_keys`: buckets holding more than
+    ``max_bucket_size`` docs are dropped before the join, and
+    ``with_drop_stats=True`` also returns the (bucket, n_docs) table
+    of dropped buckets. ``max_bucket_size=None`` disables it. (For
+    recall at ``max_hamming`` flips inside the prefix, run additional
+    tables with rotated prefixes and union the pairs.)
     """
     sh = simhash(df, bits=bits, text_col=text_col, id_col=id_col)
     bucketed = sh.withColumn(
         "bucket", F.shiftright(F.col("simhash"), bits - prefix_bits)
     )
-    dropped = None
-    if max_bucket_size is not None:
-        hot = (
-            bucketed.groupBy("bucket")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") > max_bucket_size)
-        )
-        dropped = hot.select("bucket", F.col("_n").alias("n_docs"))
-        bucketed = bucketed.join(F.broadcast(hot.select("bucket")),
-                                 on="bucket", how="left_anti")
+    bucketed, dropped = drop_hot_keys(bucketed, ["bucket"],
+                                      max_bucket_size)
     a, b = bucketed.alias("a"), bucketed.alias("b")
     pairs = (
         a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
@@ -338,12 +368,7 @@ def simhash_near_duplicates(df: DataFrame, max_hamming: int = 2,
         )
         .where(F.col("hamming") <= max_hamming)
     )
-    if with_drop_stats:
-        if dropped is None:  # cap disabled → empty, type-correct frame
-            dropped = bucketed.groupBy("bucket").agg(
-                F.count("*").alias("n_docs")).limit(0)
-        return pairs, dropped
-    return pairs
+    return (pairs, dropped) if with_drop_stats else pairs
 
 
 def normalization_key(text_col) -> Column:
@@ -704,9 +729,7 @@ def dedup_candidate_eval(
         .select("id_a", "id_b")
     )
     cand = lsh_candidate_pairs(
-        minhash_signatures(shingled, num_hashes=num_hashes),
-        bands=bands, rows_per_band=num_hashes // bands,
-    )
+        minhash_signatures(shingled, num_hashes=num_hashes), bands=bands)
     # ONE action: a full-outer join of truth and candidates marks each
     # pair's membership, and a single aggregation derives all three
     # counts — the previous shape materialized truth and cand in their

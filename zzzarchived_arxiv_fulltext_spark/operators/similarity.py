@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from .dedup import drop_hot_keys
+
 
 def dot(a: Column, b: Column) -> Column:
     """JVM-side dot product of two array<float|double> columns."""
@@ -512,8 +514,8 @@ def cluster_pairs(
     clusters ``new`` touches are read into the kernel.
 
     A cluster whose membership (new + old) exceeds ``max_cluster_size``
-    yields no pairs — the observable-drop contract of the LSH
-    hot-bucket cap in ``dedup.lsh_candidate_pairs``; None disables it.
+    yields no pairs (``dedup.drop_hot_keys``, the cap of every pair
+    join); None disables it.
 
     The pair kernel is one ``applyInPandas`` per cluster: its members
     cross the Arrow boundary once, and a numpy GEMM of the new rows
@@ -533,14 +535,7 @@ def cluster_pairs(
     # one explicit exchange on the cluster key, shared by the cap's
     # count and the kernel's grouping
     members = members.repartition("centroid_id")
-    if max_cluster_size is not None:
-        ok = (
-            members.groupBy("centroid_id")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") <= max_cluster_size)
-            .select("centroid_id")
-        )
-        members = members.join(F.broadcast(ok), on="centroid_id")
+    members, _ = drop_hot_keys(members, ["centroid_id"], max_cluster_size)
     id_type = new.schema[id_col].dataType.simpleString()
     thr = float(threshold)
 

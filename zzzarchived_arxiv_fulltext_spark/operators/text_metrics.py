@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .dedup import drop_hot_keys
+
 # --------------------------------------------------------------------------
 # token counting
 # --------------------------------------------------------------------------
@@ -296,26 +298,17 @@ def fingerprint_overlap_pairs(df: DataFrame, min_shared: int = 3,
                               with_drop_stats: bool = False):
     """Plagiarism-style candidate pairs: docs sharing >= N fingerprints.
 
-    Hot-fingerprint cap: a fingerprint shared by m documents (ubiquitous
-    boilerplate) produces m² join rows; fingerprints held by more than
-    ``max_fp_docs`` documents are dropped before the self-join — they
-    carry no discriminating signal. ``max_fp_docs=None`` disables it.
-
-    The cap is NOT silent: ``with_drop_stats=True`` returns
-    ``(pairs, dropped)`` where ``dropped`` is the (fp, n_docs) table
-    of every dropped hot fingerprint — at most
-    total_fingerprints / max_fp_docs rows, cheap to materialize.
+    Hot-fingerprint cap (``dedup.drop_hot_keys``): a fingerprint
+    shared by m documents (ubiquitous boilerplate) produces m² join
+    rows; fingerprints held by more than ``max_fp_docs`` documents are
+    dropped before the self-join. ``max_fp_docs=None`` disables it.
+    ``with_drop_stats=True`` returns ``(pairs, dropped)`` with the
+    (fp, n_docs) table of every dropped fingerprint.
     """
     fps = document_fingerprints(df, text_col, id_col, family).select(
         F.col(id_col).alias("id"), F.explode("fingerprints").alias("fp")
     ).distinct()
-    dropped = None
-    if max_fp_docs is not None:
-        hot = (fps.groupBy("fp").agg(F.count("*").alias("_n"))
-               .where(F.col("_n") > max_fp_docs))
-        dropped = hot.select("fp", F.col("_n").alias("n_docs"))
-        fps = fps.join(F.broadcast(hot.select("fp")),
-                       on="fp", how="left_anti")
+    fps, dropped = drop_hot_keys(fps, ["fp"], max_fp_docs)
     a, b = fps.alias("a"), fps.alias("b")
     pairs = (
         a.join(b, (F.col("a.fp") == F.col("b.fp"))
@@ -324,12 +317,7 @@ def fingerprint_overlap_pairs(df: DataFrame, min_shared: int = 3,
         .agg(F.count("*").alias("shared_fingerprints"))
         .where(F.col("shared_fingerprints") >= min_shared)
     )
-    if with_drop_stats:
-        if dropped is None:  # cap disabled → empty, type-correct frame
-            dropped = fps.groupBy("fp").agg(
-                F.count("*").alias("n_docs")).limit(0)
-        return pairs, dropped
-    return pairs
+    return (pairs, dropped) if with_drop_stats else pairs
 
 
 # UTF-8-as-Latin-1 double-decode artifacts: 'Ã©'-style lead bytes,

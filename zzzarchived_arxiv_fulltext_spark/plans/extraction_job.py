@@ -33,10 +33,9 @@ from ..operators.span_extract import extract_documents, pack_documents
 from ..schema import (
     DEFAULT_BUCKET,
     INPUT_SCHEMA,
-    LINEAGE_SCHEMA,
     OUTPUT_SCHEMA,
 )
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, leaves
 
 
 def _with_bucket(df: DataFrame) -> DataFrame:
@@ -142,23 +141,18 @@ def _heal_lineage(
     The output commit and the lineage commit are separate atomic steps;
     a crash between them leaves a committed snapshot with no metrics
     row. Lineage is derived data, so the fix is idempotent backfill at
-    the start of every run. A compacted snapshot holds rows whose
-    lineage was written under the ids it was compacted from, so it is
-    covered once all of those have lineage.
+    the start of every run. Coverage is read from the lineage
+    manifest alone (no Spark job): every lineage append stamps
+    ``lineage_of``, and a compacted lineage entry keeps its appends'
+    stamps in ``compacted_from``. A compacted output snapshot holds
+    rows whose lineage was written under the ids it was compacted
+    from, so it is covered once all of those have lineage.
     """
-    lineage_snaps = lineage_table.snapshots()
-    # a zero-row output snapshot has no lineage rows; its lineage
-    # append's manifest entry is what records it as covered
-    have = {s["lineage_of"] for s in lineage_snaps if "lineage_of" in s}
-    if lineage_snaps:
-        have |= {
-            r["snapshot_id"]
-            for r in lineage_table.read(spark, LINEAGE_SCHEMA)
-            .select("snapshot_id").distinct().collect()
-        }
+    have = {leaf["lineage_of"] for s in lineage_table.snapshots()
+            for leaf in leaves(s) if "lineage_of" in leaf}
     for s in output_table.snapshots():
         if s["id"] not in have and not have.issuperset(
-                s.get("compacted_from", [s["id"]])):
+                leaf["id"] for leaf in leaves(s)):
             _append_lineage(spark, output_table, lineage_table, s["id"])
 
 

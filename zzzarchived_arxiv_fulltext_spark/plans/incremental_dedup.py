@@ -6,8 +6,10 @@ daily delta is 10^-3 of history. This job keeps the banded LSH
 BUCKET TABLE as a committed snapshot table and, per increment:
 
 1. shingles + signs ONLY the delta documents;
-2. finds candidates as (delta x delta) ∪ (delta x committed buckets)
-   — equi-joins on (band, bucket), never a scan of historical text;
+2. finds candidates with the batch LSH join over the delta's buckets
+   plus the committed bucket rows they touch — one equi-join on
+   (band, bucket), never a scan of historical text, so dedup over
+   waves equals batch dedup over their union;
 3. re-reads the TEXT of just the matched historical candidates (a
    semi-join against the corpus by id — bounded by candidate count,
    not history size) for the exact-Jaccard verify;
@@ -33,6 +35,7 @@ from pyspark.sql import functions as F
 from ..materialize import reuse
 from ..operators.dedup import (
     DEFAULT_MAX_BUCKET_SIZE,
+    band_buckets,
     exact_jaccard,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -48,23 +51,6 @@ def bucket_schema(delta: DataFrame, id_col: str) -> str:
     bigint)). The index must inherit the corpus id type."""
     id_type = delta.schema[id_col].dataType.simpleString()
     return f"id {id_type}, band int, bucket string"
-
-
-def _band_buckets(signatures: DataFrame, bands: int,
-                  rows_per_band: int) -> DataFrame:
-    entries = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws("|", *[
-                F.col(f"h{b * rows_per_band + r}")
-                for r in range(rows_per_band)
-            ])).alias("bucket"),
-        )
-        for b in range(bands)
-    ])
-    return signatures.select(
-        "id", F.explode(entries).alias("e")
-    ).select("id", "e.band", "e.bucket")
 
 
 def run_dedup_incremental(
@@ -95,12 +81,11 @@ def run_dedup_incremental(
     REPLAY of the same increment skips any append whose stamp is
     already committed — per-table idempotency under crash/retry.
 
-    ``max_bucket_size`` caps BOTH candidate joins: the intra-delta
-    self-join (as in ``lsh_candidate_pairs``) and the delta×history
-    cross join — on the cross side a (band, bucket) hot on EITHER
-    side is excluded before the join. Without the cross-side cap a
-    degenerate bucket holding d delta and h history docs shuffles d×h
-    candidate rows; the sf1 soak hit exactly this (a boilerplate-heavy
+    ``max_bucket_size`` is the batch cap, counted over a bucket's
+    members new + old: a (band, bucket) whose delta and committed rows
+    together exceed it yields no candidates. Without it a degenerate
+    bucket holding d delta and h history docs shuffles d×h candidate
+    rows; the sf1 soak hit exactly this (a boilerplate-heavy
     synthetic corpus drove d, h into the 10^5 range → a ~10^10-row
     shuffle that filled the disk before any cap saw it). The committed
     INDEX stays complete — capping filters candidate generation only,
@@ -112,67 +97,30 @@ def run_dedup_incremental(
         return bool(commit_meta) and table.has_meta(commit_meta)
 
     # ONE shingle+sign pass over the delta text, materialized: sigs is
-    # tiny (num_hashes cols per doc) but multiple consumers hang off
-    # it (bucket rows, the intra self-join) — without the checkpoint
-    # each consumer re-shingles and re-signs the whole delta.
+    # tiny (num_hashes cols per doc) but two consumers hang off it
+    # (the candidate join and the bucket rows appended to the index)
+    # — without the checkpoint each re-shingles and re-signs the delta.
     shingled_delta = word_shingles(delta, n=n, text_col=text_col,
                                    id_col=id_col)
     sigs = reuse(minhash_signatures(
         shingled_delta, num_hashes=num_hashes))
-    rows_per_band = num_hashes // bands
-    delta_buckets = _band_buckets(sigs, bands, rows_per_band)
 
-    # delta x delta candidates (the standard capped self-join)
-    intra = lsh_candidate_pairs(sigs, bands=bands,
-                                rows_per_band=rows_per_band,
-                                max_bucket_size=max_bucket_size)
-
-    # delta x history candidates: equi-join against the committed
-    # bucket index — no historical text or signatures recomputed.
-    # Under replay (commit_meta already stamped by a partial earlier
-    # attempt) the index must be read AS OF before this increment's
-    # own append, or the delta matches its own prior bucket rows.
+    # the committed bucket index, as the batch join's old members: no
+    # historical text or signatures recomputed. Under replay
+    # (commit_meta already stamped by a partial earlier attempt) the
+    # index is read AS OF before this increment's own append, or the
+    # delta matches its own prior bucket rows.
+    hist = None
     if bucket_table.snapshots():
-        hist = (bucket_table.read_excluding_meta(
-                    spark, commit_meta,
-                    schema=bucket_schema(delta, id_col))
-                if commit_meta else bucket_table.read(spark))
-        cross_delta, cross_hist = delta_buckets, hist
-        if max_bucket_size is not None:
-            hot = reuse(
-                cross_delta.groupBy("band", "bucket")
-                .agg(F.count("*").alias("_n"))
-                .unionByName(cross_hist.groupBy("band", "bucket")
-                             .agg(F.count("*").alias("_n")))
-                .groupBy("band", "bucket")
-                .agg(F.max("_n").alias("_n"))
-                .where(F.col("_n") > max_bucket_size)
-                .select("band", "bucket")
-                # bounded by (delta+history) / max_bucket_size rows
-            )
-            cross_delta = cross_delta.join(
-                F.broadcast(hot), on=["band", "bucket"], how="left_anti")
-            cross_hist = cross_hist.join(
-                F.broadcast(hot), on=["band", "bucket"], how="left_anti")
-        cross = (
-            cross_delta.alias("d")
-            .join(cross_hist.alias("h"),
-                  (F.col("d.band") == F.col("h.band"))
-                  & (F.col("d.bucket") == F.col("h.bucket")))
-            .select(
-                F.least(F.col("d.id"), F.col("h.id")).alias("id_a"),
-                F.greatest(F.col("d.id"), F.col("h.id")).alias("id_b"),
-            )
-            .where(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
-        candidates = intra.unionByName(cross).distinct()
-    else:
-        candidates = intra
+        schema = bucket_schema(delta, id_col)
+        hist = (bucket_table.read_excluding_meta(spark, commit_meta,
+                                                 schema=schema)
+                if commit_meta else bucket_table.read(spark, schema))
     # candidates feed BOTH the id-set for bounded re-shingling and the
     # final exact-Jaccard join; materialize once (bounded by candidate
-    # count) instead of re-running the LSH joins per consumer.
-    candidates = reuse(candidates)
+    # count) instead of re-running the LSH join per consumer.
+    candidates = reuse(lsh_candidate_pairs(
+        sigs, bands=bands, max_bucket_size=max_bucket_size, old=hist))
 
     # exact verify: shingle ONLY candidate docs — the delta side is
     # semi-joined down to candidate ids BEFORE word_shingles (a join
@@ -205,7 +153,7 @@ def run_dedup_incremental(
     verified = reuse(verified)
 
     if not _already_committed(bucket_table):
-        bucket_table.append(delta_buckets, meta=commit_meta)
+        bucket_table.append(band_buckets(sigs, bands), meta=commit_meta)
     if pairs_table is not None and not _already_committed(pairs_table):
         pairs_table.append(verified, meta=commit_meta)
     return verified

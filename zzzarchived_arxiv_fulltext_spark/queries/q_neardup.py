@@ -23,21 +23,24 @@ _MH_HASHES = 8
 _MH_BANDS = 4
 
 
-def _minhash_sql() -> str:
+def _buckets_sql() -> str:
+    """The ``sig`` and ``buckets`` CTEs: min-hashes per doc, then one
+    (id, band, bucket) row per band, as ``dedup.band_buckets``."""
     mins = ", ".join(
         f"min(md5('{s}|' || shingle)) AS h{s}" for s in range(_MH_HASHES)
     )
-    rows_per_band = _MH_HASHES // _MH_BANDS
-    band_rows = []
-    for b in range(_MH_BANDS):
-        cols = " || '|' || ".join(
-            f"h{b * rows_per_band + r}" for r in range(rows_per_band)
-        )
-        band_rows.append(f"SELECT id, {b} AS band, md5({cols}) AS bucket FROM sig")
-    buckets = " UNION ALL ".join(band_rows)
+    rows = _MH_HASHES // _MH_BANDS
+    buckets = " UNION ALL ".join(
+        "SELECT id, {} AS band, md5({}) AS bucket FROM sig".format(
+            b, " || '|' || ".join(f"h{b * rows + r}" for r in range(rows)))
+        for b in range(_MH_BANDS))
+    return f"""sig AS (SELECT doc_id AS id, {mins} FROM sh GROUP BY doc_id),
+    buckets AS ({buckets})"""
+
+
+def _minhash_sql() -> str:
     return _SHINGLE_SQL + f""",
-    sig AS (SELECT doc_id AS id, {mins} FROM sh GROUP BY doc_id),
-    buckets AS ({buckets})
+    {_buckets_sql()}
     SELECT DISTINCT a.id AS id_a, b.id AS id_b
     FROM buckets a JOIN buckets b
       ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
@@ -51,9 +54,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _pair_corpus(spark, sf_dir)
     sigs = minhash_signatures(word_shingles(docs, n=3), num_hashes=_MH_HASHES)
-    return lsh_candidate_pairs(
-        sigs, bands=_MH_BANDS, rows_per_band=_MH_HASHES // _MH_BANDS
-    )
+    return lsh_candidate_pairs(sigs, bands=_MH_BANDS)
 
 
 # --------------------------------------------------------------------------
@@ -559,21 +560,8 @@ def q_exact_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_eval_sql() -> str:
-    mins = ", ".join(
-        f"min(md5('{s}|' || shingle)) AS h{s}" for s in range(_MH_HASHES)
-    )
-    rows_per_band = _MH_HASHES // _MH_BANDS
-    band_rows = []
-    for b in range(_MH_BANDS):
-        cols = " || '|' || ".join(
-            f"h{b * rows_per_band + r}" for r in range(rows_per_band)
-        )
-        band_rows.append(
-            f"SELECT id, {b} AS band, md5({cols}) AS bucket FROM sig")
-    buckets = " UNION ALL ".join(band_rows)
     return _SHINGLE_SQL + f""",
-    sig AS (SELECT doc_id AS id, {mins} FROM sh GROUP BY doc_id),
-    buckets AS ({buckets}),
+    {_buckets_sql()},
     cand AS (
       SELECT DISTINCT a.id AS id_a, b.id AS id_b
       FROM buckets a JOIN buckets b

@@ -27,6 +27,15 @@ from pyspark.sql import types as T
 _MANIFEST = "_snapshots.json"
 
 
+def leaves(entry: dict) -> List[dict]:
+    """The manifest entries of the appends whose rows snapshot
+    ``entry`` holds: ``entry`` itself, or for a compacted snapshot the
+    entries it was compacted from (their ids alone where the
+    compaction predates keeping their meta)."""
+    return [leaf if isinstance(leaf, dict) else {"id": leaf}
+            for leaf in entry.get("compacted_from", [entry])]
+
+
 class SnapshotTable:
     """A parquet table whose visibility unit is a committed snapshot."""
 
@@ -210,8 +219,10 @@ class SnapshotTable:
         Readers are never broken: data is staged first, the manifest
         replace is atomic, and old snapshot dirs are removed only
         after the new manifest is durable. The new entry's
-        ``compacted_from`` lists the appended snapshots whose rows it
-        holds, through earlier compactions too.
+        ``compacted_from`` lists the manifest entries (without
+        ``dir`` and ``ts``) of the appended snapshots whose rows it
+        holds, through earlier compactions too, so each one's id and
+        meta outlive the compaction.
         """
         snaps = self.snapshots()
         if len(snaps) <= 1:
@@ -224,8 +235,9 @@ class SnapshotTable:
         self._commit([{"id": snap_id, "dir": self._stage(df, snap_id),
                        "ts": time.time(),
                        "compacted_from": [
-                           i for s in snaps
-                           for i in s.get("compacted_from", [s["id"]])]}])
+                           {k: v for k, v in leaf.items()
+                            if k not in ("dir", "ts")}
+                           for s in snaps for leaf in leaves(s)]}])
 
         for s in snaps:
             shutil.rmtree(os.path.join(self.path, s["dir"]),
