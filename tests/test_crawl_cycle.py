@@ -4,7 +4,7 @@ multi-format routing, idempotent commits."""
 from zzzarchived_arxiv_fulltext_spark.plans.crawl_cycle import (
     run_crawl_cycle,
 )
-from zzzarchived_arxiv_fulltext_spark.sources.tables import SnapshotTable
+from zzzarchived_arxiv_fulltext_spark.sources.tables import SnapshotTable, Wave
 
 def _make_fetcher():
     # a CLOSURE with literal captures: executors cannot import this
@@ -39,8 +39,7 @@ def test_cycle_routes_formats_and_logs_failures(spark, tmp_path):
         ("https://bad.example/down", 1.0),
     ])
     counts = run_crawl_cycle(
-        spark, frontier, log, spans, fetcher=_make_fetcher(),
-        commit_meta={"cycle": 0})
+        spark, frontier, log, spans, fetcher=_make_fetcher())
     assert counts["frontier"] == counts["new"] == 3
     assert counts["fetch_ok"] == 2 and counts["fetch_failed"] == 1
     assert counts["routed_docs"] == 2
@@ -58,15 +57,13 @@ def test_second_cycle_skips_fetched_urls(spark, tmp_path):
     log = SnapshotTable(str(tmp_path / "log2"))
     spans = SnapshotTable(str(tmp_path / "spans2"))
     f0 = _frontier(spark, [("https://a.example/p1", 1.0)])
-    run_crawl_cycle(spark, f0, log, spans, fetcher=_make_fetcher(),
-                    commit_meta={"cycle": 0})
+    run_crawl_cycle(spark, f0, log, spans, fetcher=_make_fetcher())
     f1 = _frontier(spark, [
         ("https://a.example/p1", 9.0),   # refetch candidate: skipped
         ("https://a.example/p2", 1.0),
     ])
     counts = run_crawl_cycle(spark, f1, log, spans,
-                             fetcher=_make_fetcher(),
-                             commit_meta={"cycle": 1})
+                             fetcher=_make_fetcher())
     assert counts["frontier"] == 2 and counts["new"] == 1
     assert counts["fetch_ok"] == 1
     assert log.read(spark).count() == 2  # p1 logged once, ever
@@ -86,8 +83,7 @@ def test_blocklist_and_batch_cap(spark, tmp_path):
         [("spam.bad",)], "blocked_domain string")
     counts = run_crawl_cycle(
         spark, frontier, log, spans, blocklist=blocklist,
-        per_host_per_batch=1, max_batches=2, fetcher=_make_fetcher(),
-        commit_meta={"cycle": 0})
+        per_host_per_batch=1, max_batches=2, fetcher=_make_fetcher())
     assert counts["after_blocklist"] == 3
     # per_host=1 and 2 batches: only ok.example's 2 best-scored fetch
     assert counts["scheduled"] == 2
@@ -99,17 +95,23 @@ def test_replayed_cycle_commits_nothing_new(spark, tmp_path):
     log = SnapshotTable(str(tmp_path / "log4"))
     spans = SnapshotTable(str(tmp_path / "spans4"))
     f = _frontier(spark, [("https://a.example/p1", 1.0)])
+    # a crashed attempt: its wave never commits, so neither table
+    # shows its rows
     run_crawl_cycle(spark, f, log, spans, fetcher=_make_fetcher(),
-                    commit_meta={"cycle": 0})
-    # crash-retry of the same cycle: same stamp, same frontier
+                    wave=Wave({"cycle": 0}))
+    assert log.snapshots() == [] and spans.snapshots() == []
+    # the retry classifies against history without the crashed
+    # attempt, so the URL is "new" again, and commits each table once
+    wave = Wave({"cycle": 0})
     counts = run_crawl_cycle(spark, f, log, spans,
-                             fetcher=_make_fetcher(),
-                             commit_meta={"cycle": 0})
-    # replay classifies against history EXCLUDING its own stamp, so
-    # the URL is "new" again — but both appends are skipped
+                             fetcher=_make_fetcher(), wave=wave)
+    wave.commit()
     assert counts["new"] == 1
     assert log.read(spark).count() == 1
     assert spans.read(spark).count() == 1
+    # a replay of the committed cycle is caught by the wave check
+    assert Wave({"cycle": 0}).committed(log)
+    assert Wave({"cycle": 0}).committed(spans)
 
 
 def test_streaming_crawl_service(spark, tmp_path):
@@ -153,7 +155,7 @@ def test_cycle_honors_robots(spark, tmp_path):
         "host string, robots_txt string")
     counts = run_crawl_cycle(
         spark, frontier, log, spans, robots=robots,
-        fetcher=_make_fetcher(), commit_meta={"cycle": 0})
+        fetcher=_make_fetcher())
     assert counts["after_robots"] == 2
     urls = {r["url"] for r in log.read(spark).collect()}
     assert urls == {"https://a.example/public/y",
@@ -169,7 +171,7 @@ def test_duplicate_frontier_urls_fetched_once_with_history(spark,
     spans = SnapshotTable(str(tmp_path / "spans_dup"))
     run_crawl_cycle(
         spark, _frontier(spark, [("https://a.example/seed", 1.0)]),
-        log, spans, fetcher=_make_fetcher(), commit_meta={"cycle": 0})
+        log, spans, fetcher=_make_fetcher())
     f1 = _frontier(spark, [
         ("https://a.example/p1", 3.0),   # re-discovered three times
         ("https://a.example/p1", 2.0),
@@ -177,8 +179,7 @@ def test_duplicate_frontier_urls_fetched_once_with_history(spark,
         ("https://a.example/seed", 9.0),  # already fetched: skipped
     ])
     counts = run_crawl_cycle(spark, f1, log, spans,
-                             fetcher=_make_fetcher(),
-                             commit_meta={"cycle": 1})
+                             fetcher=_make_fetcher())
     assert counts["unique"] == 2 and counts["new"] == 1
     assert counts["fetch_ok"] == 1
     # p1 logged exactly once; one row per distinct doc in spans

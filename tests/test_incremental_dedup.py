@@ -114,31 +114,37 @@ def test_streaming_near_dedup_service(spark, tmp_path):
 
 
 def test_incremental_dedup_commit_meta_is_idempotent(spark, tmp_path):
-    """A replayed increment with the same commit_meta must not append
-    bucket or pair rows twice (crash-between-commits recovery)."""
+    """An increment's bucket and pair rows commit as one wave: a
+    crashed attempt leaves neither, its retry finds the same pairs,
+    and a replay of the committed increment is caught by the wave
+    check."""
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import Wave
+
     w1, w2 = _frames(spark)
     buckets = SnapshotTable(str(tmp_path / "buckets"))
     pairs = SnapshotTable(str(tmp_path / "pairs"))
     meta = {"stream_batch_id": 0}
 
-    run_dedup_incremental(spark, w1, corpus=w1, bucket_table=buckets,
-                          pairs_table=pairs, threshold=0.5,
-                          commit_meta=meta)
-    n_buckets = buckets.read(spark).count()
-    n_pairs = pairs.read(spark).count()
+    crashed = _pairs(run_dedup_incremental(
+        spark, w1, corpus=w1, bucket_table=buckets, pairs_table=pairs,
+        threshold=0.5, wave=Wave(meta)))
+    assert buckets.snapshots() == [] and pairs.snapshots() == []
 
-    # replay of the SAME increment: recomputes, appends nothing
-    run_dedup_incremental(spark, w1, corpus=w1, bucket_table=buckets,
-                          pairs_table=pairs, threshold=0.5,
-                          commit_meta=meta)
-    assert buckets.read(spark).count() == n_buckets
-    assert pairs.read(spark).count() == n_pairs
+    wave = Wave(meta)
+    retried = _pairs(run_dedup_incremental(
+        spark, w1, corpus=w1, bucket_table=buckets, pairs_table=pairs,
+        threshold=0.5, wave=wave))
+    wave.commit()
+    assert retried == crashed
+    assert _pairs(pairs.read(spark)) == retried
+    n_buckets = buckets.read(spark).count()
+    assert Wave(meta).committed(buckets) and Wave(meta).committed(pairs)
 
     # a NEW increment still appends
+    assert not Wave({"stream_batch_id": 1}).committed(buckets)
     run_dedup_incremental(spark, w2, corpus=w1.unionByName(w2),
                           bucket_table=buckets, pairs_table=pairs,
-                          threshold=0.5,
-                          commit_meta={"stream_batch_id": 1})
+                          threshold=0.5)
     assert buckets.read(spark).count() > n_buckets
 
 
@@ -174,10 +180,10 @@ def test_incremental_string_ids_with_commit_meta(spark, tmp_path):
 
     buckets = SnapshotTable(str(tmp_path / "buckets"))
     run_dedup_incremental(spark, w1s, corpus=w1s, bucket_table=buckets,
-                          threshold=0.5, commit_meta={"wave": 0})
+                          threshold=0.5)
     inc2 = _pairs(run_dedup_incremental(
         spark, w2s, corpus=full, bucket_table=buckets,
-        threshold=0.5, commit_meta={"wave": 1}))
+        threshold=0.5))
     assert ("doc-0002", "doc-0010", 1.0) in inc2
 
 
@@ -203,13 +209,13 @@ def test_cross_join_hot_bucket_cap(spark, tmp_path):
     # 2) is dropped, so 200 pairs with nothing; 201 still matches 100.
     capped = _pairs(run_dedup_incremental(
         spark, delta, corpus=corpus, bucket_table=buckets,
-        max_bucket_size=2, commit_meta={"w": "capped"}))
+        max_bucket_size=2))
     assert capped == {(100, 201, 1.0)}
 
     # uncapped: 200 matches all six boilerplate docs.
     full = _pairs(run_dedup_incremental(
         spark, delta, corpus=corpus, bucket_table=buckets,
-        max_bucket_size=None, commit_meta={"w": "full"}))
+        max_bucket_size=None))
     assert {(i, 200, 1.0) for i in range(6)} <= full
     assert (100, 201, 1.0) in full
 
@@ -243,7 +249,7 @@ def test_incremental_equals_batch_at_cap_boundary(spark, tmp_path, id_type):
                 if new_ids & {p[0], p[1]}}
         got = _pairs(run_dedup_incremental(
             spark, wave, corpus=seen, bucket_table=buckets,
-            threshold=0.5, max_bucket_size=2, commit_meta={"wave": k}))
+            threshold=0.5, max_bucket_size=2))
         assert got == want
         wants.append(want)
     # wave 1 pairs x (2 members); wave 2 pairs only z

@@ -42,19 +42,25 @@ def test_waves_equal_batch(spark, tmp_path):
 
 
 def test_replay_with_commit_meta_is_exactly_once(spark, tmp_path):
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import Wave
+
     table = SnapshotTable(str(tmp_path / "lines"))
     meta = {"batch_id": 7}
+    # a crashed attempt: its keepers stay invisible
     a = _collect(run_line_dedup_increment(
-        spark, _df(spark, WAVE1), table, commit_meta=meta))
-    n_snaps = len(table.snapshots())
-    # replay of the same wave: same output, no duplicate index append
+        spark, _df(spark, WAVE1), table, wave=Wave(meta)))
+    assert table.snapshots() == []
+    # the retry sees the same history: same output, one index append
+    wave = Wave(meta)
     b = _collect(run_line_dedup_increment(
-        spark, _df(spark, WAVE1), table, commit_meta=meta))
-    assert len(table.snapshots()) == n_snaps
+        spark, _df(spark, WAVE1), table, wave=wave))
+    wave.commit()
+    assert len(table.snapshots()) == 1
     assert a == b
+    assert Wave(meta).committed(table)
     # and the NEXT wave still dedups against wave 1's lines
     c = _collect(run_line_dedup_increment(
-        spark, _df(spark, WAVE2), table, commit_meta={"batch_id": 8}))
+        spark, _df(spark, WAVE2), table))
     assert c[3] == ("delta\nnew line", 1)
 
 

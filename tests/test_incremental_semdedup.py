@@ -39,26 +39,31 @@ def test_waves_equal_one_shot(spark, tmp_path):
     w0 = vecs.where("vec_id <= 3")
     w1 = vecs.where("vec_id > 3")
     got = _pairs(run_semdedup_incremental(
-        spark, w0, table, CENTS, threshold=0.99,
-        commit_meta={"wave": 0}))
+        spark, w0, table, CENTS, threshold=0.99))
     got += _pairs(run_semdedup_incremental(
-        spark, w1, table, CENTS, threshold=0.99,
-        commit_meta={"wave": 1}))
+        spark, w1, table, CENTS, threshold=0.99))
     assert sorted(got) == batch
     assert batch  # non-vacuous: the fixture has real pairs
 
 
 def test_replay_is_idempotent(spark, tmp_path):
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import Wave
+
     vecs = _vectors(spark)
     table = SnapshotTable(str(tmp_path / "semdedup_replay"))
+    # a crashed attempt: its index rows never commit
     first = _pairs(run_semdedup_incremental(
         spark, vecs.where("vec_id <= 3"), table, CENTS,
-        threshold=0.99, commit_meta={"wave": 0}))
-    # crash-retry: same increment again with the same stamp
+        threshold=0.99, wave=Wave({"wave": 0})))
+    assert table.snapshots() == []
+    # the retry with the same stamp sees the same history
+    wave = Wave({"wave": 0})
     again = _pairs(run_semdedup_incremental(
         spark, vecs.where("vec_id <= 3"), table, CENTS,
-        threshold=0.99, commit_meta={"wave": 0}))
+        threshold=0.99, wave=wave))
+    wave.commit()
     assert again == first
+    assert Wave({"wave": 0}).committed(table)
     # the index holds each vector exactly once
     idx = table.read(spark)
     assert idx.count() == idx.select("vec_id").distinct().count() == 3
@@ -68,8 +73,7 @@ def test_hot_cluster_cap_skips_pairs_but_commits_rows(spark, tmp_path):
     vecs = _vectors(spark)  # cluster 0 has 4 members, cluster 1 has 2
     table = SnapshotTable(str(tmp_path / "semdedup_cap"))
     got = _pairs(run_semdedup_incremental(
-        spark, vecs, table, CENTS, threshold=0.99,
-        commit_meta={"wave": 0}, max_cluster_size=2))
+        spark, vecs, table, CENTS, threshold=0.99, max_cluster_size=2))
     assert got == [(3, 5)]  # only the small cluster pairs
     assert table.read(spark).count() == 6  # index stays complete
 
@@ -82,10 +86,10 @@ def test_cross_wave_pair_found_only_via_index(spark, tmp_path):
     b = spark.createDataFrame(
         [(20, [2.0, 0.0])], "vec_id int, embedding array<double>")
     assert _pairs(run_semdedup_incremental(
-        spark, a, table, CENTS, commit_meta={"w": 0})) == []
+        spark, a, table, CENTS)) == []
     # wave 2's only match is a wave-1 vector: must come from the index
     assert _pairs(run_semdedup_incremental(
-        spark, b, table, CENTS, commit_meta={"w": 1})) == [(10, 20)]
+        spark, b, table, CENTS)) == [(10, 20)]
 
 
 def test_streaming_semdedup_matches_batch(spark, tmp_path):
@@ -133,8 +137,8 @@ def test_string_ids_survive_waves(spark, tmp_path):
     table = SnapshotTable(str(tmp_path / "semdedup_sid"))
     got = _pairs(run_semdedup_incremental(
         spark, vecs.where("vec_id != 'arXiv:2301.00002'"), table,
-        CENTS, threshold=0.99, commit_meta={"wave": 0}))
+        CENTS, threshold=0.99))
     got += _pairs(run_semdedup_incremental(
         spark, vecs.where("vec_id = 'arXiv:2301.00002'"), table,
-        CENTS, threshold=0.99, commit_meta={"wave": 1}))
+        CENTS, threshold=0.99))
     assert got == [("arXiv:2301.00001", "arXiv:2301.00002")]

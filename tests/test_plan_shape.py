@@ -58,14 +58,39 @@ def test_packed_run_extraction_runs_five_jobs(spark, tmp_path):
     df = spark.read.parquet(path)
     out = SnapshotTable(str(tmp_path / "out"))
     lineage = SnapshotTable(str(tmp_path / "lineage"))
+    assert _jobs(spark, f"five-jobs-{tmp_path.name}",
+                 lambda: run_extraction(spark, df, out, lineage,
+                                        parallelism=4)) == 5
+
+
+def _jobs(spark, group, action) -> int:
+    """Spark jobs ``action()`` runs, counted by job group."""
     sc = spark.sparkContext
-    group = f"five-jobs-{tmp_path.name}"
     sc.setJobGroup(group, group)
     try:
-        run_extraction(spark, df, out, lineage, parallelism=4)
+        action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_incremental_wave_runs_three_jobs(spark, tmp_path):
+    """One map-only ``run_extraction_incremental`` wave with lineage:
+    the output write, then the lineage write (shuffle map + write).
+    The wave commit itself is manifest files only."""
+    from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
+        run_extraction_incremental,
+    )
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import SnapshotTable
+
+    inp = SnapshotTable(str(tmp_path / "in"))
+    inp.append(spans_table(spark, 50, seed=1))
+    out = SnapshotTable(str(tmp_path / "out"))
+    lineage = SnapshotTable(str(tmp_path / "lineage"))
+    assert _jobs(spark, f"three-jobs-{tmp_path.name}",
+                 lambda: run_extraction_incremental(
+                     spark, inp, out, lineage)) == 3
+    assert len(out.snapshots()) == len(lineage.snapshots()) == 1
 
 
 def test_revenue_join_broadcasts_and_pushes_filters(spark):

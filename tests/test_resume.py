@@ -93,9 +93,10 @@ def _lineage_docs(spark, lineage) -> int:
 
 
 def test_lineage_is_not_backfilled_for_compacted_snapshots(spark, tmp_tables):
-    """Compaction renumbers committed rows into a new snapshot id; the
-    lineage rows already written under the old ids still count them, so
-    the next run must not backfill the compacted snapshot again."""
+    """Compaction renumbers committed rows into a new snapshot id;
+    lineage is written once, in each run's wave, so later runs add no
+    lineage rows for the compacted snapshot (regression guard from the
+    backfill era)."""
     out, lineage = tmp_tables
 
     def lineage_docs():
@@ -123,9 +124,9 @@ def test_lineage_is_not_backfilled_for_compacted_snapshots(spark, tmp_tables):
 
 def test_empty_output_snapshot_is_not_rebackfilled(spark, tmp_path,
                                                    tmp_tables):
-    """A zero-row output snapshot has no lineage rows; its lineage
-    append still records it as covered, so later runs append no
-    further lineage snapshot for it."""
+    """A zero-row output snapshot commits with an empty lineage
+    snapshot in its wave, and later runs append no further lineage
+    snapshot for it (regression guard from the backfill era)."""
     from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
         run_extraction_incremental,
     )
@@ -145,28 +146,70 @@ def test_empty_output_snapshot_is_not_rebackfilled(spark, tmp_path,
     assert len(lineage.snapshots()) == 1
 
 
-def test_crashed_lineage_commit_is_backfilled(spark, tmp_tables):
-    """An output snapshot committed without its lineage (a crash
-    between the two commits) is backfilled by the next run, once."""
+def test_crash_mid_wave_commits_neither_table(spark, tmp_tables,
+                                             monkeypatch):
+    """Output and lineage commit as one wave: a run that dies while
+    building its lineage leaves neither table holding the wave, and
+    the rerun commits both once, with every output doc in lineage."""
+    from zzzarchived_arxiv_fulltext_spark.plans import extraction_job
+
     out, lineage = tmp_tables
     full = spans_table(spark, 30, seed=13)
-    run_extraction(spark, full.where("pmod(xxhash64(doc_id), 2) = 0"),
-                   out, lineage, parallelism=2)
-    # the output commit lands, the lineage commit does not
-    run_extraction(spark, full, out, parallelism=2)
-    assert [s["lineage_of"] for s in lineage.snapshots()] == [1]
 
-    for _ in range(2):
-        assert run_extraction(spark, full, out, lineage,
-                              parallelism=2) is None
-        assert [s["lineage_of"] for s in lineage.snapshots()] == [1, 2]
+    def crash(*a, **k):
+        raise RuntimeError("simulated crash in the lineage stage")
+
+    with monkeypatch.context() as m:
+        m.setattr(extraction_job, "_lineage_from_snapshot", crash)
+        with pytest.raises(RuntimeError):
+            run_extraction(spark, full, out, lineage, parallelism=2)
+    assert out.snapshots() == [] and lineage.snapshots() == []
+    assert out.read(spark, OUTPUT_SCHEMA).count() == 0
+
+    assert run_extraction(spark, full, out, lineage, parallelism=2) == 2
+    assert len(out.snapshots()) == len(lineage.snapshots()) == 1
+    assert out.read(spark, OUTPUT_SCHEMA).count() == 30
     assert _lineage_docs(spark, lineage) == 30
+    assert run_extraction(spark, full, out, lineage, parallelism=2) is None
+
+
+def test_replay_after_compact_appends_nothing(spark, tmp_path):
+    """The committed-wave check reads through ``compacted_from``: a
+    replay of incremental-dedup wave 1 after ``compact`` finds it
+    committed, and the bucket index does not grow."""
+    from zzzarchived_arxiv_fulltext_spark.plans.incremental_dedup import (
+        run_dedup_incremental,
+    )
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import Wave
+
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [(i, f"{text} {i % 3}") for i in range(8)],
+        "doc_id long, text string")
+    buckets = SnapshotTable(str(tmp_path / "buckets"))
+
+    def run_wave(k):
+        wave = Wave({"wave": k})
+        if wave.committed(buckets):
+            return
+        run_dedup_incremental(
+            spark, docs.where(f"doc_id % 2 = {k}"), corpus=docs,
+            bucket_table=buckets, threshold=0.5, wave=wave)
+        wave.commit()
+
+    run_wave(0)
+    run_wave(1)
+    n = buckets.read(spark).count()
+    assert n == 8 * 4
+    buckets.compact(spark)
+    run_wave(1)
+    assert buckets.read(spark).count() == n
 
 
 def test_compacted_lineage_is_not_backfilled(spark, tmp_path, tmp_tables):
-    """Compacting the lineage table keeps each append's ``lineage_of``
-    stamp, so no output snapshot is backfilled again: an empty wave, a
-    10-doc run, ``lineage.compact()``, then two empty runs."""
+    """Compacting the lineage table adds no lineage rows on later runs:
+    an empty wave, a 10-doc run, ``lineage.compact()``, then two empty
+    runs (regression guard from the backfill era)."""
     from zzzarchived_arxiv_fulltext_spark.plans.extraction_job import (
         run_extraction_incremental,
     )

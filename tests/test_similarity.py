@@ -318,7 +318,7 @@ def test_semdedup_matches_python_reference(spark, tmp_path, id_type,
     for k, wave in enumerate(waves):
         check(run_semdedup_incremental(
             spark, spark.createDataFrame(wave, schema), table, cents,
-            threshold=0.95, commit_meta={"wave": k},
+            threshold=0.95,
             max_cluster_size=cap),
             _semdedup_reference(wave, old, cents, 0.95, cap))
         old += wave

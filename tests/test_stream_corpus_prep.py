@@ -2,6 +2,8 @@
 
 import shutil
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from zzzarchived_arxiv_fulltext_spark.plans.corpus_prep import (
@@ -109,13 +111,11 @@ def test_stream_replay_is_exactly_once(spark, tmp_path):
         .where(F.col("count") > 1).count() == 0
 
 
-def test_partial_replay_recovers_kept_docs(spark, tmp_path):
-    """Crash AFTER the funnel/hash/seen appends but BEFORE the corpus
-    append: the replay must still commit the kept documents (the
-    replayed run reads history EXCLUDING its own batch stamp — a
-    poisoned hash index would classify every doc as an exact dup and
-    commit an empty corpus snapshot)."""
-    from pyspark.sql import functions as F  # noqa: F811
+def test_partial_replay_recovers_kept_docs(spark, tmp_path, monkeypatch):
+    """A crash at any of the batch's six appends, or just before its
+    commit, leaves no table holding the batch; the replay then
+    classifies against the same history and commits doc 1 once."""
+    from zzzarchived_arxiv_fulltext_spark.sources.tables import Wave
 
     landing = str(tmp_path / "landing")
     t = _tables(tmp_path)
@@ -123,42 +123,42 @@ def test_partial_replay_recovers_kept_docs(spark, tmp_path):
         WAVE1, "doc_id long, text string, lang string"
     ).coalesce(1).write.mode("append").parquet(landing)
 
-    # simulate the partial first attempt: run with a corpus table that
-    # fails on append, leaving funnel/hash/seen/bucket committed
-    class FailingCorpus:
-        def __init__(self, inner):
-            self._inner = inner
-
-        def has_meta(self, *a, **k):
-            return self._inner.has_meta(*a, **k)
-
-        def append(self, *a, **k):
-            raise RuntimeError("simulated crash before corpus commit")
-
-    try:
+    def run(ckpt):
         run_streaming_corpus_prep(
-            spark, landing, str(tmp_path / "ck-a"),
-            corpus_table=FailingCorpus(t["corpus"]),
-            funnel_table=t["funnel"],
+            spark, landing, str(tmp_path / ckpt),
+            corpus_table=t["corpus"], funnel_table=t["funnel"],
             hash_table=t["hash"], seen_table=t["seen"],
             bucket_table=t["bucket"], pairs_table=t["pairs"],
             min_tokens=10, max_avg_token_len=8.0, near_threshold=0.5,
         )
-    except Exception:
-        pass  # the stream surfaces the simulated crash
-    assert t["hash"].snapshots()          # partial state committed
-    assert not t["corpus"].snapshots()
+
+    append, commit = Wave.append, Wave.commit
+    for crash_at in range(7):  # appends 0-5, then the commit
+        calls = []
+
+        def failing_append(self, table, df, crash_at=crash_at):
+            calls.append(table)
+            if len(calls) > crash_at:
+                raise RuntimeError("simulated crash")
+            return append(self, table, df)
+
+        def failing_commit(self):
+            raise RuntimeError("simulated crash before commit")
+
+        with monkeypatch.context() as m:
+            m.setattr(Wave, "append", failing_append)
+            m.setattr(Wave, "commit",
+                      failing_commit if crash_at == 6 else commit)
+            with pytest.raises(Exception):
+                run(f"ck-crash-{crash_at}")
+        assert len(calls) == min(crash_at + 1, 6)
+        assert not any(table.snapshots() for table in t.values())
 
     # replay with a fresh checkpoint: batch 0 reruns fully
-    run_streaming_corpus_prep(
-        spark, landing, str(tmp_path / "ck-b"),
-        corpus_table=t["corpus"], funnel_table=t["funnel"],
-        hash_table=t["hash"], seen_table=t["seen"],
-        bucket_table=t["bucket"], pairs_table=t["pairs"],
-        min_tokens=10, max_avg_token_len=8.0, near_threshold=0.5,
-    )
+    run("ck-replay")
     kept = t["corpus"].read(spark).collect()
     assert {r["doc_id"] for r in kept} == {1}      # doc 1 recovered
+    assert t["funnel"].read(spark).count() == len(WAVE1)
     # and no table holds duplicate rows for the batch
     assert t["seen"].read(spark).groupBy("doc_id").count() \
         .where(F.col("count") > 1).count() == 0

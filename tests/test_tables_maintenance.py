@@ -82,3 +82,45 @@ def test_compaction_keeps_each_appends_meta(spark, tmp_path):
                              {"id": 4, "wave": 2}]
     assert leaves({"id": 3, "compacted_from": [1, 2]}) == [
         {"id": 1}, {"id": 2}]
+
+
+def _race(table, other_path, rows):
+    """Make ``table``'s next stage, before it returns, append ``rows``
+    through a second handle on ``other_path``: the interleaving of two
+    processes writing one table."""
+    stage = table._stage
+
+    def staged_then_raced(*args):
+        name = stage(*args)
+        SnapshotTable(other_path).append(rows)
+        return name
+
+    table._stage = staged_then_raced
+
+
+def test_compaction_keeps_an_append_that_races_it(spark, tmp_path):
+    """An append that commits while ``compact`` stages stays in the
+    manifest: compaction rebases instead of replacing the list it
+    read."""
+    path = str(tmp_path / "t")
+    t = SnapshotTable(path)
+    t.append(spark.range(0, 2))
+    t.append(spark.range(2, 4))
+    _race(t, path, spark.range(10, 13))
+    new_id = t.compact(spark)
+    assert new_id == 4
+    assert sorted(SnapshotTable(path).snapshot_ids()) == [3, 4]
+    assert sorted(r["id"] for r in t.read(spark).collect()) == [
+        0, 1, 2, 3, 10, 11, 12]
+    assert SnapshotTable(path).read_snapshot(spark, 3).count() == 3
+
+
+def test_two_appenders_both_commit(spark, tmp_path):
+    """Two appends interleaved on one table both commit, with distinct
+    ids assigned when each commits."""
+    path = str(tmp_path / "t")
+    t = SnapshotTable(path)
+    _race(t, path, spark.range(10, 13))
+    assert t.append(spark.range(0, 2)) == 2
+    assert SnapshotTable(path).snapshot_ids() == [1, 2]
+    assert t.read(spark).count() == 5

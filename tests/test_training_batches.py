@@ -4,7 +4,7 @@ replay-safe commits."""
 from zzzarchived_arxiv_fulltext_spark.plans.training_batches import (
     run_training_batch_prep,
 )
-from zzzarchived_arxiv_fulltext_spark.sources.tables import SnapshotTable
+from zzzarchived_arxiv_fulltext_spark.sources.tables import SnapshotTable, Wave
 
 MERGES = [("a", "b"), ("ab", "c")]
 
@@ -21,8 +21,7 @@ def _docs(spark):
 def test_funnel_counts_and_conservation(spark, tmp_path):
     table = SnapshotTable(str(tmp_path / "seqs"))
     counts = run_training_batch_prep(
-        spark, _docs(spark), MERGES, table, seq_len=4,
-        commit_meta={"run": 0})
+        spark, _docs(spark), MERGES, table, seq_len=4)
     assert counts["docs"] == 3
     assert counts["bpe_tokens"] == 10  # 3 + 4 + 3
     assert counts["packed_tokens"] == 10
@@ -42,11 +41,15 @@ def test_funnel_counts_and_conservation(spark, tmp_path):
 
 def test_replay_commits_nothing_new(spark, tmp_path):
     table = SnapshotTable(str(tmp_path / "seqs2"))
+    # a crashed attempt stages its sequences but never commits them
     first = run_training_batch_prep(
         spark, _docs(spark), MERGES, table, seq_len=4,
-        commit_meta={"run": 0})
+        wave=Wave({"run": 0}))
+    assert table.snapshots() == []
+    wave = Wave({"run": 0})
     again = run_training_batch_prep(
-        spark, _docs(spark), MERGES, table, seq_len=4,
-        commit_meta={"run": 0})
+        spark, _docs(spark), MERGES, table, seq_len=4, wave=wave)
+    wave.commit()
     assert again == first
     assert table.read(spark).count() == first["sequences"]
+    assert Wave({"run": 0}).committed(table)

@@ -32,7 +32,11 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--lineage")
+    ap.add_argument(
+        "--lineage",
+        help="lineage table committed with each run's output snapshot; "
+             "output committed by a run without it never gets lineage "
+             "later")
     ap.add_argument("--parallelism", type=int, default=None,
                     help="upper bound on extraction tasks: pack docs by "
                          "chars into one task per core, at most this many; "

@@ -50,9 +50,7 @@ def main():
 
     def wave1():
         delta = docs.where(half == 1)
-        pairs = run_dedup_incremental(
-            spark, delta, docs, bucket_table,
-            commit_meta={"soak_wave": 1})
+        pairs = run_dedup_incremental(spark, delta, docs, bucket_table)
         return {"pairs": pairs.count()}
 
     sec = stage("dedup_wave1", wave1)

@@ -167,9 +167,7 @@ def main():
 
     def wave(i):
         delta = docs.where(half == i)
-        pairs = run_dedup_incremental(
-            spark, delta, docs, bucket_table,
-            commit_meta={"soak_wave": i})
+        pairs = run_dedup_incremental(spark, delta, docs, bucket_table)
         return {"pairs": pairs.count()}
 
     timings["dedup_wave0"] = stage("dedup_wave0", lambda: wave(0))

@@ -30,7 +30,7 @@ def audit(path: str) -> dict:
     listed = {s["dir"] for s in snaps}
     on_disk = {
         d for d in os.listdir(path)
-        if os.path.isdir(os.path.join(path, d))
+        if os.path.isdir(os.path.join(path, d)) and d != "_waves"
     }
     missing, rows = [], {}
     for s in snaps:

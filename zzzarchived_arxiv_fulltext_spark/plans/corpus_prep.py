@@ -36,6 +36,7 @@ from ..materialize import reuse
 from ..operators.dedup import near_duplicates_minhash
 from ..operators.redact import redact_text
 from ..operators.sampling import hash_split
+from ..sources.tables import Wave
 
 DEFAULT_SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
 
@@ -147,7 +148,8 @@ def run_corpus_prep(
 
     Writes the kept documents (PII-redacted, with their split label)
     as one snapshot and, optionally, the full per-document funnel as
-    another. Returns the funnel counts {stage: n_docs}.
+    another, committed together as one ``Wave``. Returns the funnel
+    counts {stage: n_docs}.
 
     The funnel DAG (including the whole MinHash/LSH pipeline) is
     MATERIALIZED EXACTLY ONCE: committed to ``funnel_table`` first and
@@ -156,9 +158,10 @@ def run_corpus_prep(
     no funnel table is given. Without this, each downstream action
     would re-run shingling + signatures + the bucket join.
     """
+    wave = Wave()
     funnel = corpus_prep_funnel(docs, **funnel_kwargs)
     if funnel_table is not None:
-        funnel_snap = funnel_table.append(funnel)
+        funnel_snap = wave.append(funnel_table, funnel)
         funnel = funnel_table.read_snapshot(spark, funnel_snap)
     else:
         funnel = reuse(funnel)
@@ -172,7 +175,8 @@ def run_corpus_prep(
             F.expr("substring(stage, 6)").alias("split"),
         )
     )
-    corpus_table.append(kept)
+    wave.append(corpus_table, kept)
+    wave.commit()
     return {
         r["stage"]: r["n"]
         for r in funnel.groupBy("stage").agg(F.count("*").alias("n"))

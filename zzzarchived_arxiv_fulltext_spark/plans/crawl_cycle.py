@@ -18,8 +18,8 @@ runs, with the same committed-table discipline as the extraction job:
    (PDF/PS/TeX/HTML/text) into the interleaved span shape the
    extraction pipeline consumes.
 
-Everything appends idempotently: ``commit_meta`` stamps both tables,
-and a replayed cycle skips appends whose stamp is already committed.
+The fetch log and the span table commit as one wave, so a crashed
+cycle leaves neither and its replay fetches the same URLs again.
 The returned funnel counts make every drop observable (no silent
 caps — the judge-facing rule the corpus-prep funnel follows).
 
@@ -40,7 +40,7 @@ from ..materialize import reuse
 from ..operators.weblinks import crawl_frontier_batches, filter_blocked_domains
 from ..sources.http_fetch import FETCH_SCHEMA, fetch_documents
 from ..sources.ingest_router import raw_to_spans
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, Wave, joined
 
 # the committed fetch log: FETCH_SCHEMA minus the payload bytes
 LOG_SCHEMA = T.StructType(
@@ -62,9 +62,11 @@ def run_crawl_cycle(
     host_delay: float = 0.0,
     fetch_partitions: Optional[int] = None,
     max_bytes: Optional[int] = None,
-    commit_meta: Optional[dict] = None,
+    wave: Optional[Wave] = None,
 ) -> Dict[str, int]:
-    """Run one cycle; returns the funnel counts."""
+    """Run one cycle; returns the funnel counts. Both tables append to
+    ``wave``, which its caller commits, or to a wave of the cycle's
+    own."""
     counts: Dict[str, int] = {"frontier": frontier.count()}
 
     # collapse duplicate frontier URLs first (re-discovered links are
@@ -74,9 +76,7 @@ def run_crawl_cycle(
         F.max(score_col).alias(score_col))
     counts["unique"] = fresh.count()
     if fetch_log.snapshots():
-        seen = (fetch_log.read_excluding_meta(spark, commit_meta,
-                                              schema=LOG_SCHEMA)
-                if commit_meta else fetch_log.read(spark))
+        seen = fetch_log.read(spark, LOG_SCHEMA)
         # anti-join FROM the deduped frame (not the raw frontier):
         # building it from `frontier` silently discarded the groupBy
         # dedup whenever history existed, so duplicate frontier URLs
@@ -108,7 +108,6 @@ def run_crawl_cycle(
     ).select(F.col(url_col).alias("doc_id"), F.col(url_col).alias("url"))
     counts["scheduled"] = scheduled.count()
 
-    already = bool(commit_meta) and fetch_log.has_meta(commit_meta)
     fetched = reuse(fetch_documents(
         scheduled, fetcher=fetcher, host_delay=host_delay,
         fetch_partitions=fetch_partitions, max_bytes=max_bytes,
@@ -117,14 +116,13 @@ def run_crawl_cycle(
         F.col("failure_class").isNull()).count()
     counts["fetch_failed"] = fetched.where(
         F.col("failure_class").isNotNull()).count()
-    if not already:
-        fetch_log.append(fetched.drop("payload"), meta=commit_meta)
 
     routed = raw_to_spans(
         fetched.where(F.col("failure_class").isNull())
         .select("doc_id", "payload"))
     routed = routed.where(F.size("spans") > 0)
     counts["routed_docs"] = routed.count()
-    if not (bool(commit_meta) and spans_table.has_meta(commit_meta)):
-        spans_table.append(routed, meta=commit_meta)
+    with joined(wave) as w:
+        w.append(fetch_log, fetched.drop("payload"))
+        w.append(spans_table, routed)
     return counts

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..materialize import reuse
 from ..operators.dedup import exact_duplicate_groups, near_duplicates_minhash
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, Wave
 
 
 def duplicate_pairs(
@@ -116,13 +116,17 @@ def run_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> int:
-    pairs = duplicate_pairs(corpus, threshold, id_col, text_col)
-    snap = pairs_table.append(pairs)
+    """Commit the verified pairs and, optionally, the keep list built
+    from the staged pairs, as one ``Wave``; returns the pairs'
+    snapshot id."""
+    wave = Wave()
+    snap = wave.append(pairs_table, duplicate_pairs(
+        corpus, threshold, id_col, text_col))
     if keep_table is not None:
-        committed = pairs_table.read_snapshot(spark, snap)
-        keep_table.append(
-            connected_keep_list(committed, corpus, id_col=id_col)
-        )
+        staged = pairs_table.read_snapshot(spark, snap)
+        wave.append(keep_table,
+                    connected_keep_list(staged, corpus, id_col=id_col))
+    wave.commit()
     return snap
 
 

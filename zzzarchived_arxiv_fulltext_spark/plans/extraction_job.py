@@ -16,9 +16,10 @@ Scale notes:
 - The anti-join build side (committed doc_ids) is column-pruned to one
   string column at scan time; AQE turns the join into a broadcast when
   the done-set is small and splits skewed partitions when it is not.
-- Lineage metrics are aggregated by RE-READING the just-committed
+- Lineage metrics are aggregated by RE-READING the just-staged
   snapshot's metric columns (columnar scan, text columns pruned) —
-  the extraction UDF never runs twice.
+  the extraction UDF never runs twice. Output and lineage commit as
+  one ``Wave``: a crash leaves neither visible.
 """
 
 from typing import Optional
@@ -35,7 +36,7 @@ from ..schema import (
     INPUT_SCHEMA,
     OUTPUT_SCHEMA,
 )
-from ..sources.tables import SnapshotTable, leaves
+from ..sources.tables import SnapshotTable, Wave, leaves
 
 
 def _with_bucket(df: DataFrame) -> DataFrame:
@@ -116,46 +117,6 @@ def _lineage_from_snapshot(
     )
 
 
-def _append_lineage(
-    spark: SparkSession,
-    output_table: SnapshotTable,
-    lineage_table: SnapshotTable,
-    snap_id: int,
-) -> None:
-    """Append output snapshot ``snap_id``'s lineage rows, stamping
-    ``lineage_of`` in the manifest entry so the snapshot counts as
-    covered even when it has no rows."""
-    lineage_table.append(
-        _lineage_from_snapshot(spark, output_table, snap_id),
-        meta={"lineage_of": snap_id},
-    )
-
-
-def _heal_lineage(
-    spark: SparkSession,
-    output_table: SnapshotTable,
-    lineage_table: SnapshotTable,
-) -> None:
-    """Backfill lineage rows for committed output snapshots missing them.
-
-    The output commit and the lineage commit are separate atomic steps;
-    a crash between them leaves a committed snapshot with no metrics
-    row. Lineage is derived data, so the fix is idempotent backfill at
-    the start of every run. Coverage is read from the lineage
-    manifest alone (no Spark job): every lineage append stamps
-    ``lineage_of``, and a compacted lineage entry keeps its appends'
-    stamps in ``compacted_from``. A compacted output snapshot holds
-    rows whose lineage was written under the ids it was compacted
-    from, so it is covered once all of those have lineage.
-    """
-    have = {leaf["lineage_of"] for s in lineage_table.snapshots()
-            for leaf in leaves(s) if "lineage_of" in leaf}
-    for s in output_table.snapshots():
-        if s["id"] not in have and not have.issuperset(
-                leaf["id"] for leaf in leaves(s)):
-            _append_lineage(spark, output_table, lineage_table, s["id"])
-
-
 def run_extraction(
     spark: SparkSession,
     input_df: DataFrame,
@@ -183,9 +144,11 @@ def run_extraction(
     with ``failure_class='invalid_spans'``, so the P2
     failure-isolation accounting covers them and a later re-ingest +
     ``force`` run can repair them.
+
+    With ``lineage_table``, the output snapshot and its lineage rows
+    commit together. An output snapshot committed by a run given no
+    lineage table gets none later: no run backfills lineage.
     """
-    if lineage_table is not None:
-        _heal_lineage(spark, output_table, lineage_table)
     todo = pending_documents(input_df, output_table, spark, force=force)
     if parallelism is None:
         pending = not todo.isEmpty()
@@ -231,12 +194,15 @@ def _commit(
     lineage_table: Optional[SnapshotTable],
     meta: Optional[dict] = None,
 ) -> int:
-    """Commit ``extracted`` as one output snapshot carrying ``meta``,
-    then append that snapshot's lineage rows; the tail both entry
-    points share. Returns the committed snapshot id."""
-    snap_id = output_table.append(extracted, meta=meta)
+    """Commit ``extracted`` as one output snapshot and its lineage rows
+    as one wave carrying ``meta``; the tail both entry points share.
+    Returns the committed snapshot id."""
+    wave = Wave(meta)
+    snap_id = wave.append(output_table, extracted)
     if lineage_table is not None:
-        _append_lineage(spark, output_table, lineage_table, snap_id)
+        wave.append(lineage_table,
+                    _lineage_from_snapshot(spark, output_table, snap_id))
+    wave.commit()
     return snap_id
 
 
@@ -307,9 +273,9 @@ def read_extracted(spark: SparkSession, output_table: SnapshotTable) -> DataFram
 def consumed_input_snapshot(output_table: SnapshotTable) -> int:
     """Highest input-snapshot id already folded into committed output."""
     ids = [
-        s["consumed_input_snapshot"]
-        for s in output_table.snapshots()
-        if s.get("consumed_input_snapshot") is not None
+        leaf["consumed_input_snapshot"]
+        for s in output_table.snapshots() for leaf in leaves(s)
+        if leaf.get("consumed_input_snapshot") is not None
     ]
     return max(ids) if ids else 0
 
@@ -327,8 +293,6 @@ def run_extraction_incremental(
     has no new snapshots. No join anywhere: the plan is scan(delta) →
     extract → write, regardless of how large the committed history is.
     """
-    if lineage_table is not None:
-        _heal_lineage(spark, output_table, lineage_table)
     last = consumed_input_snapshot(output_table)
     head = input_table.latest_snapshot_id() or 0
     if head <= last:

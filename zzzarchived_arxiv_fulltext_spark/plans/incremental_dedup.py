@@ -13,18 +13,16 @@ BUCKET TABLE as a committed snapshot table and, per increment:
 3. re-reads the TEXT of just the matched historical candidates (a
    semi-join against the corpus by id — bounded by candidate count,
    not history size) for the exact-Jaccard verify;
-4. appends the delta's bucket rows and the verified pairs, atomically.
+4. appends the delta's bucket rows and the verified pairs as one wave.
 
 Cost per increment ≈ O(|delta| + |candidates|); history is touched
 only through its bucket index and the candidate row lookups.
 
-Delivery contract: at-least-once per delta by default — re-running
-the same delta re-appends its bucket rows (candidates are
-deduplicated, so pairs stay correct, but the index gains duplicate
-rows). Pass ``commit_meta`` (e.g. a stream batch_id) to upgrade to
-exactly-once: each table append is stamped with the meta and a replay
-that finds the stamp already committed skips that append — the
-standard idempotent-foreachBatch pattern.
+Delivery contract: the increment's tables commit together, so a
+crashed attempt leaves nothing a replay would read. Re-running an
+already-committed delta re-appends its bucket rows; a caller that
+replays passes a ``Wave`` with the increment's identity and checks
+``Wave.committed`` first (the idempotent-foreachBatch pattern).
 """
 
 from typing import Optional
@@ -41,7 +39,8 @@ from ..operators.dedup import (
     minhash_signatures,
     word_shingles,
 )
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, Wave, joined
+
 
 def bucket_schema(delta: DataFrame, id_col: str) -> str:
     """Bucket-index schema with the id typed AS THE CALLER'S ids are
@@ -65,7 +64,7 @@ def run_dedup_incremental(
     bands: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    commit_meta: Optional[dict] = None,
+    wave: Optional[Wave] = None,
     max_bucket_size: Optional[int] = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Dedup ``delta`` against itself and all previously-indexed docs.
@@ -76,10 +75,8 @@ def run_dedup_incremental(
     threshold) and commits the delta's bucket rows (plus, optionally,
     the pairs) so the next increment sees them.
 
-    ``commit_meta``: identity of this increment (e.g.
-    ``{"stream_batch_id": 7}``). Appends are stamped with it and a
-    REPLAY of the same increment skips any append whose stamp is
-    already committed — per-table idempotency under crash/retry.
+    ``wave``: the caller's wave, which it commits; without one the
+    increment commits its own.
 
     ``max_bucket_size`` is the batch cap, counted over a bucket's
     members new + old: a (band, bucket) whose delta and committed rows
@@ -92,10 +89,6 @@ def run_dedup_incremental(
     so a later increment with a saner delta still sees every bucket
     row.
     """
-
-    def _already_committed(table: SnapshotTable) -> bool:
-        return bool(commit_meta) and table.has_meta(commit_meta)
-
     # ONE shingle+sign pass over the delta text, materialized: sigs is
     # tiny (num_hashes cols per doc) but two consumers hang off it
     # (the candidate join and the bucket rows appended to the index)
@@ -106,16 +99,9 @@ def run_dedup_incremental(
         shingled_delta, num_hashes=num_hashes))
 
     # the committed bucket index, as the batch join's old members: no
-    # historical text or signatures recomputed. Under replay
-    # (commit_meta already stamped by a partial earlier attempt) the
-    # index is read AS OF before this increment's own append, or the
-    # delta matches its own prior bucket rows.
-    hist = None
-    if bucket_table.snapshots():
-        schema = bucket_schema(delta, id_col)
-        hist = (bucket_table.read_excluding_meta(spark, commit_meta,
-                                                 schema=schema)
-                if commit_meta else bucket_table.read(spark, schema))
+    # historical text or signatures recomputed
+    hist = (bucket_table.read(spark, bucket_schema(delta, id_col))
+            if bucket_table.snapshots() else None)
     # candidates feed BOTH the id-set for bounded re-shingling and the
     # final exact-Jaccard join; materialize once (bounded by candidate
     # count) instead of re-running the LSH join per consumer.
@@ -152,8 +138,8 @@ def run_dedup_incremental(
         F.col("jaccard") >= threshold)
     verified = reuse(verified)
 
-    if not _already_committed(bucket_table):
-        bucket_table.append(band_buckets(sigs, bands), meta=commit_meta)
-    if pairs_table is not None and not _already_committed(pairs_table):
-        pairs_table.append(verified, meta=commit_meta)
+    with joined(wave) as w:
+        w.append(bucket_table, band_buckets(sigs, bands))
+        if pairs_table is not None:
+            w.append(pairs_table, verified)
     return verified

@@ -10,8 +10,8 @@ already-kept line hashes as a committed snapshot table; per wave:
    outright (their keeper lives in an earlier wave);
 2. the remaining eligible lines elect keepers WITHIN the delta
    (min (doc_id, idx), exactly the batch rule);
-3. the new keepers' hashes append to the index, atomically with the
-   wave (pass ``commit_meta`` for exactly-once under replays).
+3. the new keepers' hashes append to the index, in the caller's
+   ``Wave`` when given one.
 
 Concatenating the per-wave outputs equals one batch
 ``dedup_lines_global`` over the concatenated corpus whenever waves
@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import dedup_lines_global
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, Wave, joined
 
 INDEX_SCHEMA = T.StructType([
     T.StructField("line_hash", T.StringType(), False),
@@ -42,39 +42,27 @@ def run_line_dedup_increment(
     id_col: str = "doc_id",
     sep: str = "\n",
     min_chars: int = 1,
-    commit_meta: Optional[dict] = None,
+    wave: Optional[Wave] = None,
 ) -> DataFrame:
     """Dedup one wave against history; returns the deduped delta
-    (id, text, n_lines_dropped) AFTER committing the wave's new
-    keeper hashes.
-
-    With ``commit_meta`` (e.g. a stream batch id), a replayed wave
-    finds its stamp already committed and skips the append — the
-    idempotent-foreachBatch pattern shared with
-    ``plans/incremental_dedup``. The history read EXCLUDES the wave's
-    own stamp (``read_excluding_meta``): a replay that classified
-    against its own earlier partial append would see every line as a
-    duplicate of itself and emit empty documents (the round-4
-    partial-replay lesson).
+    (id, text, n_lines_dropped) and appends the wave's new keeper
+    hashes to ``wave`` (which its caller commits), or commits them
+    itself when given none. History is the committed index only, so a
+    replay of a crashed attempt never sees its own keepers.
     """
-    if commit_meta is not None:
-        committed = index_table.read_excluding_meta(
-            spark, commit_meta, INDEX_SCHEMA)
-    else:
-        committed = index_table.read(spark, INDEX_SCHEMA)
+    committed = index_table.read(spark, INDEX_SCHEMA)
     out = dedup_lines_global(
         delta, text_col=text_col, id_col=id_col, sep=sep,
         min_chars=min_chars, exclude_keys=committed)
 
-    already = commit_meta is not None and index_table.has_meta(commit_meta)
-    if not already:
-        lines = delta.select(
-            F.explode(F.split(F.col(text_col), sep)).alias("line"))
-        new_keys = (
-            lines.where(F.length("line") >= min_chars)
-            .select(F.md5("line").alias("line_hash"))
-            .distinct()
-            .join(committed, on="line_hash", how="left_anti")
-        )
-        index_table.append(new_keys, meta=commit_meta)
+    lines = delta.select(
+        F.explode(F.split(F.col(text_col), sep)).alias("line"))
+    new_keys = (
+        lines.where(F.length("line") >= min_chars)
+        .select(F.md5("line").alias("line_hash"))
+        .distinct()
+        .join(committed, on="line_hash", how="left_anti")
+    )
+    with joined(wave) as w:
+        w.append(index_table, new_keys)
     return out

@@ -14,10 +14,8 @@ mirrors the MinHash incremental plan (``incremental_dedup``):
   of the clusters it touches with the batch's per-cluster GEMM kernel
   (``cluster_pairs``, delta rows new, history rows old), commit the
   delta's rows;
-- ``commit_meta`` stamps the append; a replay reads history via
-  ``read_excluding_meta`` (the replay-poisoning rule: a rerun must
-  classify against history as it stood before its own partial
-  attempt) and skips the duplicate append — per-table idempotency.
+- the delta's rows append to the caller's ``Wave`` (or one of its
+  own), so a crashed attempt's rows never reach a replay's history.
 
 ``max_cluster_size`` is the batch's cap, counted over a cluster's
 delta + history membership: a cluster over it generates no pairs this
@@ -36,7 +34,7 @@ from pyspark.sql import types as T
 
 from ..materialize import reuse
 from ..operators.similarity import assign_clusters, cluster_pairs
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, Wave, joined
 
 
 def index_schema(delta: DataFrame, id_col: str) -> T.StructType:
@@ -60,7 +58,7 @@ def run_semdedup_incremental(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    commit_meta: Optional[dict] = None,
+    wave: Optional[Wave] = None,
     max_cluster_size: Optional[int] = 10_000,
 ) -> DataFrame:
     """Pairs (id_a, id_b, cos >= threshold) of delta×delta and
@@ -73,16 +71,10 @@ def run_semdedup_incremental(
                      F.col(vec_col).alias("embedding")),
         centroids))
 
-    if index_table.snapshots():
-        hist = (index_table.read_excluding_meta(
-                    spark, commit_meta, schema=schema)
-                if commit_meta else index_table.read(spark))
-    else:
-        hist = None
-    pairs = cluster_pairs(assigned, hist, threshold, max_cluster_size)
-
-    already = bool(commit_meta) and index_table.has_meta(commit_meta)
-    if not already:
-        pairs = reuse(pairs)  # before the append
-        index_table.append(assigned, meta=commit_meta)
+    hist = (index_table.read(spark, schema)
+            if index_table.snapshots() else None)
+    pairs = reuse(cluster_pairs(assigned, hist, threshold,
+                                max_cluster_size))  # before the append
+    with joined(wave) as w:
+        w.append(index_table, assigned)
     return pairs

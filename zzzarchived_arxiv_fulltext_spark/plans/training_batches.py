@@ -7,7 +7,8 @@ concat-and-chunk them into fixed-length training sequences
 (``sampling.pack_sequences``, two-pass partitioned prefix sum — never
 a global sort), and commit the sequence table with an auditable
 funnel. Composes the two oracled operators; this plan adds the
-commit/replay discipline and the conservation accounting.
+commit (into the caller's ``Wave`` when given one) and the
+conservation accounting.
 
 Token conservation is the invariant worth asserting in CI: every
 encoded token lands in exactly one sequence window, so
@@ -29,7 +30,7 @@ from pyspark.sql import functions as F
 from ..materialize import reuse
 from ..operators.corpus_stats import bpe_encode
 from ..operators.sampling import pack_sequences
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, Wave, joined
 
 
 def run_training_batch_prep(
@@ -41,7 +42,7 @@ def run_training_batch_prep(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: str = "pack",
-    commit_meta: Optional[dict] = None,
+    wave: Optional[Wave] = None,
 ) -> Dict[str, int]:
     """Encode + pack ``docs``; commit sequences; return the funnel."""
     encoded = reuse(
@@ -75,6 +76,6 @@ def run_training_batch_prep(
             f"{counts['packed_tokens']} != encoded {counts['bpe_tokens']}"
         )
 
-    if not (bool(commit_meta) and sequences_table.has_meta(commit_meta)):
-        sequences_table.append(seqs, meta=commit_meta)
+    with joined(wave) as w:
+        w.append(sequences_table, seqs)
     return counts

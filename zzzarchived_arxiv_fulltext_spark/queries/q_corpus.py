@@ -481,9 +481,10 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, queries = _planted_ann_inputs(spark, sf_dir)
     # Cache key = content fingerprint of the embeddings parquet dir
     # (names+sizes+mtimes — regenerated testdata at the same path gets
-    # a FRESH key, never stale centroids) + pid (no cross-process
-    # manifest races on SnapshotTable's unlocked read-modify-write),
-    # under the per-user warehouse dir (not world-shared /tmp). Within
+    # a FRESH key, never stale centroids) + pid (manifest updates are
+    # locked, but two processes finding no centroids would each train
+    # and commit a set), under the per-user warehouse dir (not
+    # world-shared /tmp). Within
     # one process the train-once/serve-many reuse still holds.
     emb_dir = os.path.join(sf_dir, "embeddings.parquet")
     try:

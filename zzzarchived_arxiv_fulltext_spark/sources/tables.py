@@ -14,12 +14,14 @@ consistent" placeholder write (``fulltext/extract.py:89-101``) — both
 replaced by snapshot isolation.
 """
 
+import fcntl
 import json
 import os
 import shutil
 import time
 import uuid
-from typing import List, Optional
+from contextlib import contextmanager
+from typing import Iterator, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -37,7 +39,14 @@ def leaves(entry: dict) -> List[dict]:
 
 
 class SnapshotTable:
-    """A parquet table whose visibility unit is a committed snapshot."""
+    """A parquet table whose visibility unit is a committed snapshot.
+
+    Every manifest change is a read → change → ``os.replace`` under an
+    exclusive ``flock`` on ``_snapshots.lock``, held for that step
+    only (never while Spark writes), so two writers on one table never
+    lose each other's entries. Readers take no lock: ``os.replace``
+    swaps the whole manifest atomically.
+    """
 
     def __init__(self, path: str):
         self.path = path
@@ -48,12 +57,19 @@ class SnapshotTable:
     def _manifest_path(self) -> str:
         return os.path.join(self.path, _MANIFEST)
 
-    def snapshots(self) -> List[dict]:
+    def _entries(self) -> List[dict]:
+        """Every manifest entry, pending ones included."""
         try:
             with open(self._manifest_path()) as f:
                 return json.load(f)
         except FileNotFoundError:
             return []
+
+    def snapshots(self) -> List[dict]:
+        """The committed entries: a pending entry (see ``Wave``) counts
+        once the commit record it names exists."""
+        return [s for s in self._entries() if "pending" not in s
+                or os.path.exists(os.path.join(self.path, s["pending"]))]
 
     def snapshot_ids(self) -> List[int]:
         return [s["id"] for s in self.snapshots()]
@@ -62,44 +78,33 @@ class SnapshotTable:
         ids = self.snapshot_ids()
         return max(ids) if ids else None
 
-    def _commit(self, snaps: List[dict]) -> None:
-        """Atomic manifest replace: write-temp + rename."""
-        tmp = self._manifest_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(snaps, f, indent=1)
-        os.replace(tmp, self._manifest_path())
-
-    def has_meta(self, key, value=None) -> bool:
-        """True when any committed snapshot carries the given meta —
-        the exactly-once guard for replayed writers (a foreachBatch
-        retry checks its batch_id here and skips the append instead
-        of duplicating rows). Accepts either ``(key, value)`` or a
-        whole meta dict (all entries must match one snapshot)."""
-        items = key.items() if isinstance(key, dict) else [(key, value)]
-        return any(
-            all(s.get(k) == v for k, v in items)
-            for s in self.snapshots()
-        )
+    def _update(self, change) -> int:
+        """Replace the manifest with ``change(entries, next_id)`` under
+        the table's lock and return ``next_id``, the id after every
+        entry's. Both are read inside the lock, so the change rebases
+        onto every commit that landed before it."""
+        with open(os.path.join(self.path, "_snapshots.lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)  # released on close
+            entries = self._entries()
+            next_id = max([s["id"] for s in entries], default=0) + 1
+            tmp = self._manifest_path() + f".tmp-{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                json.dump(change(entries, next_id), f, indent=1)
+            os.replace(tmp, self._manifest_path())
+        return next_id
 
     # -- write --------------------------------------------------------------
 
-    def _stage(self, df: DataFrame, snap_id: int) -> str:
-        """Write ``df`` to an uncommitted staging dir, then rename it to
-        the snapshot's dir; returns that dir's name."""
-        staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        final = f"snap-{snap_id:05d}"
-        os.replace(staging, os.path.join(self.path, final))
-        return final
+    def _stage(self, df: DataFrame) -> str:
+        """Write ``df`` to a new uniquely named dir that no manifest
+        entry lists yet; returns the dir's name."""
+        name = f"snap-{uuid.uuid4().hex}"
+        df.write.mode("overwrite").parquet(os.path.join(self.path, name))
+        return name
 
     def append(self, df: DataFrame, meta: Optional[dict] = None) -> int:
-        """Write ``df`` as a new snapshot; visible only after commit.
-
-        Data lands in an uncommitted staging directory first; the
-        snapshot becomes real only via the atomic manifest replace. A
-        crash at any earlier point leaves an orphan dir that readers
-        never see (crash-safety parity with at-least-once redo,
-        ``fulltext/config.py:326-342``).
+        """Write ``df`` as a new snapshot carrying ``meta``: a one-table
+        ``Wave``. Returns the snapshot id.
 
         ``meta`` keys are stored in the manifest entry — committed
         atomically WITH the data. Incremental consumers record their
@@ -107,16 +112,15 @@ class SnapshotTable:
         crash can never separate "data committed" from "position
         advanced".
         """
-        snap_id = (self.latest_snapshot_id() or 0) + 1
-        entry = {"id": snap_id, "dir": self._stage(df, snap_id),
-                 "ts": time.time(), **(meta or {})}
-        self._commit(self.snapshots() + [entry])
+        wave = Wave(meta)
+        snap_id = wave.append(self, df)
+        wave.commit()
         return snap_id
 
     # -- read ---------------------------------------------------------------
 
     def _entry(self, snap_id: int) -> dict:
-        for s in self.snapshots():
+        for s in self._entries():
             if s["id"] == snap_id:
                 return s
         raise KeyError(f"no snapshot {snap_id} in {self.path}")
@@ -151,29 +155,12 @@ class SnapshotTable:
         return self._scan(spark, self.snapshots(), schema,
                           f"empty table {self.path} needs an explicit schema")
 
-    def read_excluding_meta(self, spark: SparkSession, meta: dict,
-                            schema: Optional[T.StructType] = None
-                            ) -> DataFrame:
-        """All committed rows EXCEPT snapshots whose manifest entry
-        matches every key of ``meta``.
-
-        The replay-safe read for idempotent micro-batch writers: a
-        replayed batch must classify against history as it stood
-        BEFORE its own (possibly partial) earlier attempt, so it
-        excludes its own batch stamp — otherwise its prior hash/index
-        appends poison the rerun (every doc looks like a duplicate of
-        itself) and the replay commits empty output.
-        """
-        snaps = [s for s in self.snapshots()
-                 if not all(s.get(k) == v for k, v in meta.items())]
-        return self._scan(spark, snaps, schema,
-                          f"empty table {self.path} needs an explicit schema")
-
     def read_snapshot(self, spark: SparkSession, snap_id: int,
                       schema: Optional[T.StructType] = None) -> DataFrame:
-        """The rows of snapshot ``snap_id`` alone; ``schema``, when
-        given, is imposed as in ``read`` and spares the footer-reading
-        job that infers it."""
+        """The rows of snapshot ``snap_id`` alone, pending or committed
+        (a wave reads back what it staged); ``schema``, when given, is
+        imposed as in ``read`` and spares the footer-reading job that
+        infers it."""
         return self._scan(spark, [self._entry(snap_id)], schema,
                           f"no snapshot {snap_id} in {self.path}")
 
@@ -218,31 +205,31 @@ class SnapshotTable:
         listing, split packing); compaction is the standard remedy.
         Readers are never broken: data is staged first, the manifest
         replace is atomic, and old snapshot dirs are removed only
-        after the new manifest is durable. The new entry's
-        ``compacted_from`` lists the manifest entries (without
-        ``dir`` and ``ts``) of the appended snapshots whose rows it
-        holds, through earlier compactions too, so each one's id and
-        meta outlive the compaction.
+        after the new manifest is durable. The replace rebases: every
+        entry added after the read (an append, a pending wave) stays.
+        The new entry's ``compacted_from`` lists the manifest entries
+        (without ``dir``, ``ts`` and ``pending``) of the appended
+        snapshots whose rows it holds, through earlier compactions
+        too, so each one's id and meta outlive the compaction.
         """
         snaps = self.snapshots()
         if len(snaps) <= 1:
             return self.latest_snapshot_id() or 0
-        df = self.read(spark)
+        df = self._scan(spark, snaps, None, "")
         if target_partitions:
             df = df.coalesce(target_partitions)
-
-        snap_id = self.latest_snapshot_id() + 1
-        self._commit([{"id": snap_id, "dir": self._stage(df, snap_id),
-                       "ts": time.time(),
-                       "compacted_from": [
-                           {k: v for k, v in leaf.items()
-                            if k not in ("dir", "ts")}
-                           for s in snaps for leaf in leaves(s)]}])
-
+        folded = {s["id"] for s in snaps}
+        entry = {"dir": self._stage(df), "ts": time.time(),
+                 "compacted_from": [
+                     {k: v for k, v in leaf.items()
+                      if k not in ("dir", "ts", "pending")}
+                     for s in snaps for leaf in leaves(s)]}
+        new_id = self._update(lambda entries, sid: [{"id": sid, **entry}] + [
+            s for s in entries if s["id"] not in folded])
         for s in snaps:
             shutil.rmtree(os.path.join(self.path, s["dir"]),
                           ignore_errors=True)
-        return snap_id
+        return new_id
 
     def maintain(self, spark: SparkSession, max_snapshots: int = 64,
                  target_partitions: Optional[int] = None) -> Optional[int]:
@@ -259,3 +246,73 @@ class SnapshotTable:
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)
+
+
+class Wave:
+    """One atomic commit across tables (Iceberg's metadata-pointer swap,
+    stretched over several manifests).
+
+    ``append`` stages a frame and adds a *pending* manifest entry that
+    names this wave's commit record, ``_waves/<uuid>`` under the first
+    table's dir; readers skip it while the record is absent.
+    ``commit`` creates the record (``O_CREAT|O_EXCL``), which makes
+    every entry of the wave visible at once, then folds the pending
+    mark into each entry and removes the record. A crashed attempt
+    never creates its record, so its entries stay invisible like its
+    staged dirs, even after a replay with the same ``meta`` commits.
+
+    ``meta`` is stamped on every entry; ``committed`` is the replay
+    check a writer runs once per batch before building it.
+    """
+
+    def __init__(self, meta: Optional[dict] = None):
+        self.meta = meta or {}
+        self._record: Optional[str] = None
+        self._tables: List[SnapshotTable] = []
+
+    def committed(self, table: SnapshotTable) -> bool:
+        """True when ``table`` holds a committed append carrying this
+        wave's ``meta``, also one folded into a compacted snapshot."""
+        return bool(self.meta) and any(
+            all(leaf.get(k) == v for k, v in self.meta.items())
+            for s in table.snapshots() for leaf in leaves(s))
+
+    def append(self, table: SnapshotTable, df: DataFrame) -> int:
+        """Stage ``df`` as a pending snapshot of ``table``; returns its
+        id, which ``read_snapshot`` serves before the commit."""
+        if self._record is None:
+            self._record = os.path.join(
+                table.path, "_waves", uuid.uuid4().hex)
+        if table not in self._tables:
+            self._tables.append(table)
+        entry = {"dir": table._stage(df), "ts": time.time(),
+                 "pending": os.path.relpath(self._record, table.path),
+                 **self.meta}
+        return table._update(
+            lambda entries, sid: entries + [{"id": sid, **entry}])
+
+    def commit(self) -> None:
+        """Make every entry of the wave visible in one step."""
+        if self._record is None:
+            return
+        os.makedirs(os.path.dirname(self._record), exist_ok=True)
+        os.close(os.open(self._record,
+                         os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+        for table in self._tables:
+            mark = os.path.relpath(self._record, table.path)
+            table._update(lambda entries, _, mark=mark: [
+                {k: v for k, v in s.items() if k != "pending"}
+                if s.get("pending") == mark else s for s in entries])
+        os.remove(self._record)
+
+
+@contextmanager
+def joined(wave: Optional[Wave]) -> Iterator[Wave]:
+    """``wave``, which its owner commits; or, when None, a new wave
+    that commits when the block exits without an error."""
+    if wave is not None:
+        yield wave
+        return
+    own = Wave()
+    yield own
+    own.commit()

@@ -19,9 +19,10 @@ Per micro-batch:
 4. survivors are PII-redacted, hash-split, and appended to the corpus
    snapshot table; the per-document funnel rows append alongside.
 
-Exactly-once under replay: every append carries the micro-batch id in
-its snapshot metadata and a replayed batch skips appends whose stamp
-is already committed (the idempotent-foreachBatch pattern shared with
+Exactly-once under replay: a micro-batch's six appends are one wave
+stamped with its batch id. A replayed batch whose wave committed is
+skipped; a crashed one left nothing visible, so its replay reads the
+same history (the idempotent-foreachBatch pattern shared with
 ``run_streaming_near_dedup``).
 
 Steady-state cost per batch: O(|batch| + candidates) — history is
@@ -49,7 +50,8 @@ from ..plans.corpus_prep import (
     with_quality_stats,
 )
 from ..plans.incremental_dedup import run_dedup_incremental
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, Wave
+from . import drain
 
 HASH_SCHEMA = "h string"
 
@@ -91,11 +93,9 @@ def run_streaming_corpus_prep(
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if corpus_table.has_meta("stream_batch_id", batch_id):
-            return  # full replay of an already-committed batch
-        if batch_df.isEmpty():
+        wave = Wave({"stream_batch_id": batch_id})
+        if wave.committed(corpus_table) or batch_df.isEmpty():
             return
-        meta = {"stream_batch_id": batch_id}
         batch_df = reuse(batch_df)
 
         base = with_quality_stats(batch_df)
@@ -109,21 +109,11 @@ def run_streaming_corpus_prep(
             "doc_id", F.lit(STAGE_LANG).alias("stage"))
         s2 = s1.where(~bad_lang)
 
-        # exact dedup: first-seen WITHIN the batch, then vs history.
-        # History is read EXCLUDING this batch's own stamp: a replay
-        # of a partially-committed batch (crash after the hash append,
-        # before the corpus append) must classify against history as
-        # it stood BEFORE the failed attempt — otherwise its own prior
-        # append makes every doc an "exact dup" and the replay commits
-        # an empty corpus snapshot (silent data loss).
+        # exact dedup: first-seen WITHIN the batch, then vs history
         s2r = s2.withColumn("_rn", first_seen_rank()) \
             .withColumn("_h", F.md5("text"))
-        hist_hashes = (
-            hash_table.read_excluding_meta(spark, meta,
-                                           schema=HASH_SCHEMA)
-            if hash_table.snapshots()
-            else spark.createDataFrame([], HASH_SCHEMA)
-        ).withColumnRenamed("h", "_h")
+        hist_hashes = hash_table.read(spark, HASH_SCHEMA) \
+            .withColumnRenamed("h", "_h")
         dup_in_hist = s2r.join(hist_hashes, on="_h", how="left_semi")
         d_exact = s2r.where(F.col("_rn") > 1).unionByName(
             s2r.where(F.col("_rn") == 1).join(
@@ -138,14 +128,8 @@ def run_streaming_corpus_prep(
 
         # near dedup vs self + the committed bucket index; candidate
         # text lookups come from the SEEN table (exact survivors of
-        # all prior batches, including near-dropped ones), read
-        # excluding this batch's own stamp for the same replay reason
-        history_text = (
-            seen_table.read_excluding_meta(spark, meta,
-                                           schema=_seen_schema(batch_df))
-            if seen_table.snapshots()
-            else s3.select("doc_id", "text").limit(0)
-        )
+        # all prior batches, including near-dropped ones)
+        history_text = seen_table.read(spark, _seen_schema(batch_df))
         pairs = run_dedup_incremental(
             spark, s3.select("doc_id", "text"),
             corpus=history_text.unionByName(s3.select("doc_id", "text")),
@@ -154,7 +138,7 @@ def run_streaming_corpus_prep(
             threshold=near_threshold,
             num_hashes=num_hashes,
             bands=bands,
-            commit_meta=meta,
+            wave=wave,
         )
         # first-seen-wins orientation: a batch doc matching HISTORY is
         # dropped regardless of id order (pairs are (min,max) by id,
@@ -194,26 +178,15 @@ def run_streaming_corpus_prep(
         out = kept.select(
             "doc_id", redact_text(F.col("text")).alias("text"),
             "lang", "split")
-        if not funnel_table.has_meta("stream_batch_id", batch_id):
-            funnel_table.append(funnel, meta=meta)
-        if not hash_table.has_meta("stream_batch_id", batch_id):
-            hash_table.append(s3.select(F.col("_h").alias("h")),
-                              meta=meta)
-        if not seen_table.has_meta("stream_batch_id", batch_id):
-            seen_table.append(s3.select("doc_id", "text"), meta=meta)
-        corpus_table.append(out, meta=meta)
+        wave.append(funnel_table, funnel)
+        wave.append(hash_table, s3.select(F.col("_h").alias("h")))
+        wave.append(seen_table, s3.select("doc_id", "text"))
+        wave.append(corpus_table, out)
+        wave.commit()
 
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 64)
         .parquet(landing_dir)
     )
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return drain(stream, process_batch, checkpoint_dir, available_now)

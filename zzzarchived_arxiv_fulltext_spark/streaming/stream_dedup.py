@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from ..materialize import reuse
 from ..schema import INPUT_SCHEMA
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, Wave
+from . import drain
 
 
 def dedup_stream(stream_df: DataFrame, text_col: str = "text",
@@ -83,12 +84,11 @@ def run_streaming_near_dedup(
     never O(history). Restarts resume from the stream checkpoint and
     the committed tables together.
 
-    Exactly-once under replay: every table append is stamped with the
-    micro-batch id (``stream_batch_id`` in the snapshot manifest), and
-    a replayed batch skips appends whose stamp is already committed —
-    so a crash between the checkpoint commit and the table commits
-    can duplicate NOTHING (the standard idempotent-foreachBatch
-    pattern; ADVICE r3).
+    Exactly-once under replay: each micro-batch's bucket, pair and
+    corpus appends are one wave stamped with the batch id
+    (``stream_batch_id``). A replayed batch whose wave committed is
+    skipped; a crashed one left nothing visible, so it reruns against
+    the same history.
     """
     from ..plans.incremental_dedup import run_dedup_incremental
 
@@ -99,35 +99,23 @@ def run_streaming_near_dedup(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if corpus_table.has_meta("stream_batch_id", batch_id):
-            return  # full replay of an already-committed batch
-        if batch_df.isEmpty():
+        wave = Wave({"stream_batch_id": batch_id})
+        if wave.committed(corpus_table) or batch_df.isEmpty():
             return
-        meta = {"stream_batch_id": batch_id}
         batch_df = reuse(batch_df)
-        history = (
-            corpus_table.read(spark)
-            if corpus_table.snapshots() else batch_df.limit(0)
-        )
+        history = corpus_table.read(spark, batch_df.schema)
         run_dedup_incremental(
             spark, batch_df,
             corpus=history.unionByName(batch_df),
             bucket_table=bucket_table,
             pairs_table=pairs_table,
             threshold=threshold,
-            commit_meta=meta,
+            wave=wave,
         )
-        corpus_table.append(batch_df, meta=meta)
+        wave.append(corpus_table, batch_df)
+        wave.commit()
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return drain(stream, process_batch, checkpoint_dir, available_now)
 
 
 def run_streaming_line_dedup(
@@ -146,11 +134,10 @@ def run_streaming_line_dedup(
     append to ``output_table`` — C4-style boilerplate-line removal as
     a stream, O(batch + index-join) per trigger, never O(history).
 
-    Exactly-once under replay: the keeper-index append and the output
-    append are both stamped with the micro-batch id; a replayed batch
-    reads history EXCLUDING its own stamp (so its earlier partial
-    index append cannot classify its lines as duplicates of
-    themselves) and skips any append already committed.
+    Exactly-once under replay: the keeper-index and output appends
+    are one wave stamped with the micro-batch id; a committed batch
+    is skipped on replay, and a crashed one left no keepers that
+    could classify its own lines as duplicates.
     """
     from ..plans.incremental_line_dedup import run_line_dedup_increment
 
@@ -161,26 +148,16 @@ def run_streaming_line_dedup(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if output_table.has_meta("stream_batch_id", batch_id):
-            return  # full replay of an already-committed batch
-        if batch_df.isEmpty():
+        wave = Wave({"stream_batch_id": batch_id})
+        if wave.committed(output_table) or batch_df.isEmpty():
             return
-        meta = {"stream_batch_id": batch_id}
-        batch_df = reuse(batch_df)
         out = run_line_dedup_increment(
-            spark, batch_df, index_table,
-            min_chars=min_chars, commit_meta=meta)
-        output_table.append(out, meta=meta)
+            spark, reuse(batch_df), index_table,
+            min_chars=min_chars, wave=wave)
+        wave.append(output_table, out)
+        wave.commit()
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return drain(stream, process_batch, checkpoint_dir, available_now)
 
 
 def run_streaming_semdedup(
@@ -200,9 +177,8 @@ def run_streaming_semdedup(
     index (``plans/incremental_semdedup``) — per-batch cost is
     O(batch + same-cluster candidates), never O(history).
 
-    Same exactly-once contract as the other dedup services: every
-    append is stamped with the micro-batch id, replays read history
-    excluding their own stamp and skip duplicate appends. Centroids
+    Same exactly-once contract as the other dedup services: the index
+    and pair appends are one wave per micro-batch. Centroids
     are FIXED for the stream's lifetime (train via
     ``plans/ivf_index.ensure_centroids`` and restart the stream to
     rotate them — mixing centroid generations would silently split
@@ -217,29 +193,12 @@ def run_streaming_semdedup(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        meta = {"stream_batch_id": batch_id}
-        if index_table.has_meta(meta) and pairs_table.has_meta(meta):
-            return  # full replay of a fully-committed batch
-        if batch_df.isEmpty():
+        wave = Wave({"stream_batch_id": batch_id})
+        if wave.committed(index_table) or batch_df.isEmpty():
             return
-        # a crash BETWEEN the two appends must not lose the pairs:
-        # the plan is internally idempotent (reads history excluding
-        # its own stamp, skips its duplicate index append), so a
-        # partial replay recomputes the same pairs and commits only
-        # what is missing
-        pairs = run_semdedup_incremental(
+        wave.append(pairs_table, run_semdedup_incremental(
             spark, batch_df, index_table, centroids,
-            threshold=threshold, commit_meta=meta,
-        )
-        if not pairs_table.has_meta(meta):
-            pairs_table.append(pairs, meta=meta)
+            threshold=threshold, wave=wave))
+        wave.commit()
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return drain(stream, process_batch, checkpoint_dir, available_now)

@@ -21,7 +21,8 @@ from pyspark.sql import SparkSession
 from ..materialize import reuse
 from ..plans.extraction_job import run_extraction
 from ..schema import INPUT_SCHEMA
-from ..sources.tables import SnapshotTable
+from ..sources.tables import SnapshotTable, Wave
+from . import drain
 
 
 def run_streaming_extraction(
@@ -55,15 +56,7 @@ def run_streaming_extraction(
             parallelism=parallelism,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return drain(stream, process_batch, checkpoint_dir, available_now)
 
 
 def run_streaming_crawl(
@@ -89,9 +82,9 @@ def run_streaming_crawl(
     The committed fetch log is what makes the stream correct across
     restarts: a URL fetched in any earlier batch (or earlier stream
     incarnation) anti-joins away, so re-delivered frontier files cost
-    one scan, not one refetch. Exactly-once table state follows from
-    the cycle's dual-table stamping, same as every other service in
-    this package.
+    one scan, not one refetch. Each batch is one wave stamped with its
+    batch id: a replayed batch that committed is skipped whole, and a
+    crashed one left nothing visible.
     """
     from ..plans.crawl_cycle import run_crawl_cycle
 
@@ -102,7 +95,8 @@ def run_streaming_crawl(
     )
 
     def process_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        wave = Wave({"stream_batch_id": batch_id})
+        if wave.committed(fetch_log) or batch_df.isEmpty():
             return
         run_crawl_cycle(
             spark, reuse(batch_df),
@@ -111,15 +105,8 @@ def run_streaming_crawl(
             per_host_per_batch=per_host_per_batch,
             max_batches=max_batches,
             fetcher=fetcher, host_delay=host_delay,
-            commit_meta={"stream_batch_id": batch_id},
+            wave=wave,
         )
+        wave.commit()
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return drain(stream, process_batch, checkpoint_dir, available_now)
